@@ -328,7 +328,11 @@ object Dedup {
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       // hashed shingles: the n-gram string is never built and the broadcast
       // membership probe carries longs — overlap counts are identical to
-      // the string form (see shingleHashesFromTokens)
+      // the string form (see shingleHashesFromTokens) up to xxhash64
+      // collisions: parity with the string-based DuckDB oracle holds only
+      // up to a 2^-64 per-pair collision chance, so a future hash_match
+      // failure of dedup_contamination should be checked against a
+      // colliding shingle pair first
       .select(col("doc_id"), shingleHashesFromTokens(col("toks"), n).as("sh"))
       // size must be computed BELOW the explode: an expression alongside a
       // generator lands in a Project ABOVE the Generate (ExtractGenerator),

@@ -155,6 +155,9 @@ object ConnectedComponents {
       sig = nextSig
       iteration += 1
     }
+    // a labelling that has not reached its fixpoint is not the components —
+    // fail loudly rather than return it (O(log n) rounds suffice in practice)
+    require(converged, s"connected components did not converge within $maxIterations rounds; raise maxIterations")
 
     val memberLabels = e.select(col("b").as("node"), col("a").as("component"))
     val rootLabels = e.select(col("a").as("node"), col("a").as("component"))
@@ -268,6 +271,11 @@ object ConnectedComponents {
       converged = changed == 0
       iteration += 1
     }
+    // propagation needs diameter + 1 rounds; a capped run leaves labels that
+    // are not component minima — fail loudly rather than return them
+    require(
+      converged,
+      s"label propagation did not converge within $maxIterations rounds (graph diameter too large); raise maxIterations")
     labels
   }
 }

@@ -373,6 +373,24 @@ object KgPipeline {
     docNodes.union(passageNodes).union(conceptNodes)
   }
 
+  /** Trend relation (concept_id, day_num, n_mentions) over the mention
+    * layer `m`, shared by kg_trends and kg_bursts. The one fact⋈fact join
+    * in the family; both sides hash-partition on conv_id. At 100 TB the
+    * cheaper shape is carrying ts through extraction so the day lands in
+    * the mention row itself — kept as a join so the materialized mention
+    * layer stays ts-agnostic for every other consumer. */
+  def trends(spark: SparkSession, sfDir: String, m: DataFrame): DataFrame = {
+    val turnsTs = eligibleTurns(Transcripts.read(spark, sfDir))
+      .select(
+        col("conv_id"),
+        col("turn_idx").cast("int").as("turn_idx"),
+        expr("unix_timestamp(ts) div 86400").as("day_num"))
+    m.select("conv_id", "turn_idx", "concept_id")
+      .join(turnsTs, Seq("conv_id", "turn_idx"))
+      .groupBy("concept_id", "day_num")
+      .agg(count(lit(1)).as("n_mentions"))
+  }
+
   /** Burst detection over the trend relation (concept_id, day_num,
     * n_mentions) — the "is this concept suddenly hot" temporal analytic: a
     * day bursts when its mention count exceeds `factor`× the trailing

@@ -124,4 +124,17 @@ class CcSpec extends AnyFunSuite {
       assert(got == want, s"seed $seed: incremental != full union-find")
     }
   }
+
+  test("a graph wider than the round cap fails loudly instead of returning unconverged labels") {
+    // 40-node path: propagation needs 40 rounds, star contraction more than 1
+    val path = (0 until 39).map(i => (f"p$i%02d", f"p${i + 1}%02d")).toDF("src", "dst")
+    val prop = intercept[IllegalArgumentException] {
+      ConnectedComponents.runPropagation(spark, path, maxIterations = 25).collect()
+    }
+    assert(prop.getMessage.contains("did not converge within 25 rounds"))
+    val star = intercept[IllegalArgumentException] {
+      ConnectedComponents.run(spark, path, maxIterations = 1).collect()
+    }
+    assert(star.getMessage.contains("did not converge within 1 rounds"))
+  }
 }

@@ -87,4 +87,75 @@ class SourcesSpec extends AnyFunSuite {
       rm(dir)
     }
   }
+
+  test("session-artifact registry: cached lookups run no job, rewrites supersede, compaction caches one copy") {
+    val dir = Files.createTempDirectory("registry").toFile
+    val path = dir.getPath
+    val src = new java.io.File(TestSpark.sf0001, "documents.parquet").toPath
+    val docsFile = new java.io.File(dir, "documents.parquet")
+    Files.copy(src, docsFile.toPath)
+    val sc = spark.sparkContext
+    def lookup(query: String) = SparkEntry.queries(query)(spark, path)
+    def held = SparkEntry.Artifact.entries.toSeq
+      .collect { case ((name, _, d), e) if d == path => name -> e.fingerprint }
+      .sorted
+    def newlyCached[T](build: => T): (T, Int) = {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val out = build
+      (out, (sc.getPersistentRDDs.keySet.toSet -- before).size)
+    }
+    // AQE would coalesce the co-occurrence aggregation into 1 partition at
+    // this size; without it the edges land on 4 partitions, at least twice
+    // partsFor's 1, so the coEdges build compacts
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try {
+      val m1 = lookup("kg_mentions")
+      assert(KgPipeline.cooccurrence(m1).rdd.getNumPartitions == 4)
+      val (c1, cached1) = newlyCached(lookup("kg_cooccurrence"))
+      assert(c1.rdd.getNumPartitions == 1, "the edge layer was compacted")
+      assert(cached1 == 1, "a compacted artifact holds one cached copy, not the intermediate as well")
+
+      // a second lookup is served from the registry: same value, no job.
+      // The listener bus is FIFO, so once the marker job's start arrives
+      // any job the lookups submitted has been seen.
+      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup("registry-lookup", "second lookup")
+        assert(lookup("kg_mentions") eq m1)
+        assert(lookup("kg_cooccurrence") eq c1)
+        sc.setJobGroup("registry-marker", "marker")
+        sc.parallelize(Seq(1), 1).count()
+        sc.clearJobGroup()
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (!groups.contains("registry-marker") && System.nanoTime() < deadline) Thread.sleep(10)
+        assert(groups.contains("registry-marker"))
+        assert(!groups.contains("registry-lookup"), "a cached lookup submitted a Spark job")
+      } finally sc.removeSparkListener(listener)
+      val fp1 = SparkEntry.fingerprint(path, "documents")
+      assert(held == Seq("coEdges" -> fp1, "mentions" -> fp1))
+
+      // rewriting the backing parquet rebuilds and replaces the old entries
+      Files.copy(src, docsFile.toPath, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      assert(docsFile.setLastModified(docsFile.lastModified() + 60000L))
+      val fp2 = SparkEntry.fingerprint(path, "documents")
+      assert(fp2 != fp1)
+      val m2 = lookup("kg_mentions")
+      val (c2, cached2) = newlyCached(lookup("kg_cooccurrence"))
+      assert((m2 ne m1) && (c2 ne c1), "a rewritten dataset must rebuild its artifacts")
+      assert(cached2 == 1)
+      assert(held == Seq("coEdges" -> fp2, "mentions" -> fp2))
+      assert(c2.collect().toSet == c1.collect().toSet)
+    } finally {
+      sc.clearJobGroup()
+      spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+      SparkEntry.Artifact.entries.keys.filter(_._3 == path).foreach(SparkEntry.Artifact.entries.remove)
+      docsFile.delete()
+      dir.delete()
+    }
+  }
 }

@@ -448,8 +448,11 @@ object Dedup {
     // definite-new and candidate branches both referenced `might`, so the
     // bitset literal (m/64 longs) rode the plan twice and every row paid
     // the k hash probes twice — ~0.8 s of driver planning gaps at sf0.1
-    // came from optimizing the duplicated literal subtrees alone
-    val flagged = batch.withColumn("__might", might).localCheckpoint(false)
+    // came from optimizing the duplicated literal subtrees alone. The batch
+    // is first projected to the two columns the result reads, so the flag
+    // cannot collide with a caller column and the checkpoint stores no
+    // column the result never reads.
+    val flagged = batch.select(col("doc_id"), col("text")).withColumn("__might", might).localCheckpoint(false)
     val definiteNew = flagged.where(!col("__might")).drop("__might")
     val candidates = flagged.where(col("__might")).drop("__might")
     // verify: candidates ANTI JOIN corpus on text. Joined naively this

@@ -1,7 +1,7 @@
 package graft.extract
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.catalyst.InternalRow
@@ -95,6 +95,52 @@ case class ExtractConceptsPresent(child: Expression, gazetteer: Gazetteer)
   override def prettyName: String = "extract_concepts_present"
 }
 
+/** The conversation-derived triples of one turn, emitted in the one pass
+  * that reads it: `(conv_id, HAS_PASSAGE, passage_id)`, then one
+  * `(passage_id, MENTIONS_CONCEPT, concept_id)` per concept with >= 1
+  * surviving mention (the same per-turn dedup as ExtractConceptsPresent).
+  * A null text emits only the HAS_PASSAGE row; null ids pass through as
+  * nulls. */
+case class PassageTriples(convId: Expression, passageId: Expression, text: Expression, gazetteer: Gazetteer)
+    extends Generator
+    with CodegenFallback {
+
+  override def children: Seq[Expression] = Seq(convId, passageId, text)
+
+  override def elementSchema: StructType = StructType(
+    Seq("subj", "pred", "obj").map(StructField(_, StringType, nullable = true))
+  )
+
+  @transient private lazy val idsUtf8: Array[UTF8String] =
+    gazetteer.concepts.map(c => UTF8String.fromString(c.wikibaseId)).toArray
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    import PassageTriples.{HasPassage, MentionsConcept}
+    val pid = passageId.eval(input)
+    val out = scala.collection.mutable.ArrayBuffer[InternalRow](InternalRow(convId.eval(input), HasPassage, pid))
+    val v = text.eval(input)
+    if (v != null) {
+      val present = gazetteer.findPresent(v.asInstanceOf[UTF8String].toString)
+      var i = 0
+      while (i < present.length) {
+        if (present(i)) out += InternalRow(pid, MentionsConcept, idsUtf8(i))
+        i += 1
+      }
+    }
+    out
+  }
+
+  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
+    copy(convId = newChildren(0), passageId = newChildren(1), text = newChildren(2))
+
+  override def prettyName: String = "passage_triples"
+}
+
+object PassageTriples {
+  private val HasPassage = UTF8String.fromString("HAS_PASSAGE")
+  private val MentionsConcept = UTF8String.fromString("MENTIONS_CONCEPT")
+}
+
 /** array<struct<concept_id, start, end, surface, span_id>> — full
   * span-grain mention extraction (C1 semantics for every concept at once). */
 case class ExtractMentions(child: Expression, gazetteer: Gazetteer, withSpanIds: Boolean = true)
@@ -167,6 +213,14 @@ object expressions {
 
   def extractOrdinalsPresent(text: Column, gazetteer: Gazetteer): Column =
     GraftColumnBridge.column(ExtractOrdinalsPresent(GraftColumnBridge.expression(text), gazetteer))
+
+  def passageTriples(convId: Column, passageId: Column, text: Column, gazetteer: Gazetteer): Column =
+    GraftColumnBridge.column(
+      PassageTriples(
+        GraftColumnBridge.expression(convId),
+        GraftColumnBridge.expression(passageId),
+        GraftColumnBridge.expression(text),
+        gazetteer))
 
   def extractMentions(text: Column, gazetteer: Gazetteer, withSpanIds: Boolean = true): Column =
     GraftColumnBridge.column(ExtractMentions(GraftColumnBridge.expression(text), gazetteer, withSpanIds))

@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -40,7 +40,8 @@ final case class Mention(
   *   transcripts --(window: stable turn order)--> turns
   *     --(broadcast gazetteer flatMap)--> mentions
   *     --(hash aggs)--> per-turn concept arrays / per-conv concept counts
-  *     --(unions + distinct)--> (subj, pred, obj) triples
+  *   turns --(one generator pass per turn: HAS_PASSAGE + MENTIONS_CONCEPT,
+  *            union concept-store edges)--> (subj, pred, obj) triples
   *     --(iterative joins)--> canonical entity components
   *
   * Where the reference fans out (classifier × 200-doc batch) into containers
@@ -64,12 +65,16 @@ object KgPipeline {
     transcripts.withColumn("turn_seq", (row_number().over(w) - 1).cast("int"))
   }
 
-  /** Extraction-eligible turns: drop role='tool' (blocked block types,
+  /** Turn eligibility: drop role='tool' (blocked block types,
     * inference.py:80-84) and blank text (no-op documents,
-    * inference.py:714-735). */
+    * inference.py:714-735). The one definition the batch and streaming
+    * paths share (streams cannot take the ordering window, so they apply it
+    * with a bare `where`). */
+  val eligible: Column = col("role") =!= "tool" && length(trim(col("text"))) > 0
+
+  /** Extraction-eligible turns in stable order. */
   def eligibleTurns(transcripts: DataFrame): DataFrame =
-    orderedTurns(transcripts)
-      .where(col("role") =!= "tool" && length(trim(col("text"))) > 0)
+    orderedTurns(transcripts).where(eligible)
 
   /** Gazetteer mention extraction: one broadcast trie pass per turn over all
     * concepts (C1 semantics for every concept at once). Typed flatMap — the
@@ -101,9 +106,10 @@ object KgPipeline {
 
   /** Edge-grain extraction: one row per (turn, concept) with at least one
     * mention. The dedup that MENTIONS_CONCEPT needs happens INSIDE the
-    * extraction pass (a turn's matches are all local to one flatMap call),
-    * so the triples path needs no global distinct shuffle at all — the
-    * 100 TB-critical difference vs deduping 10^10 mention rows post hoc. */
+    * extraction pass (a turn's matches are all local to one call) — the
+    * 100 TB-critical difference vs deduping 10^10 mention rows post hoc.
+    * The triple layer applies the same per-turn dedup inside its own
+    * generator (PassageTriples) rather than calling this. */
   def extractMentionEdges(
       spark: SparkSession,
       turns: DataFrame,
@@ -244,11 +250,14 @@ object KgPipeline {
     triplesFromTurns(spark, eligibleTurns(Transcripts.read(spark, sfDir)), concepts)
 
   /** The three edge families of the triple layer, optionally carrying extra
-    * sink columns: conversation-derived branches evaluate `convCols` against
-    * their source rows (which expose conv_id), the concept-store branch
-    * carries `dimCols`. The SINGLE source of truth for both the query path
-    * (triplesFromTurns) and the MERGE sink (writeTriplesMerge) — a new edge
-    * family added here reaches both. */
+    * sink columns. Both conversation-derived families come from ONE
+    * generator pass per turn (PassageTriples: HAS_PASSAGE plus that turn's
+    * MENTIONS_CONCEPT edges), so the transcripts are scanned, filtered and
+    * given their passage id once; `convCols` are evaluated against the turn
+    * rows (which expose conv_id) and ride through the Generate. The
+    * concept-store branch carries `dimCols`. The SINGLE source of truth for
+    * both the query path (triplesFromTurns) and the MERGE sink
+    * (writeTriplesMerge) — a new edge family added here reaches both. */
   private def tripleUnion(
       spark: SparkSession,
       turns: DataFrame,
@@ -258,26 +267,24 @@ object KgPipeline {
   ): DataFrame = {
     import spark.implicits._
     val passageId = concat(col("conv_id"), lit("_"), col("turn_idx").cast("string"))
-    val hasPassage = turns.select(
-      Seq(col("conv_id").as("subj"), lit("HAS_PASSAGE").as("pred"), passageId.as("obj")) ++ convCols: _*
+    val gaz = new Gazetteer(concepts)
+    val turnEdges = turns.select(
+      convCols :+ graft.extract.expressions.passageTriples(col("conv_id"), passageId, col("text"), gaz): _*
     )
-    val mentionEdges = extractMentionEdges(spark, turns, concepts)
-      .select(
-        Seq(passageId.as("subj"), lit("MENTIONS_CONCEPT").as("pred"), col("concept_id").as("obj")) ++ convCols: _*
-      )
     val ids = concepts.map(_.wikibaseId).toSet
     val conceptEdges = DemoConceptStore
       .conceptEdgesOf(concepts)
       .filter { case (s, _, o) => ids(s) && ids(o) }
       .toDF("subj", "pred", "obj")
       .select(Seq(col("subj"), col("pred"), col("obj")) ++ dimCols: _*)
-    hasPassage.unionByName(mentionEdges).unionByName(conceptEdges)
+    turnEdges.unionByName(conceptEdges)
   }
 
-  /** Shuffle-free triple materialization: every branch is distinct by
-    * construction (see extractMentionEdges), so the only wide operation left
-    * in the whole path is the ordering window — and Catalyst prunes even
-    * that here because turn_seq is not referenced. */
+  /** Shuffle-free triple materialization: every family is distinct by
+    * construction (a turn's concepts are deduped inside its generator
+    * call), so the only wide operation left in the whole path is the
+    * ordering window — and Catalyst prunes even that here because turn_seq
+    * is not referenced. Each turn is read once. */
   def triplesFromTurns(spark: SparkSession, turns: DataFrame, concepts: Vector[Concept]): DataFrame =
     tripleUnion(spark, turns, concepts, Nil, Nil)
 

@@ -17,6 +17,7 @@ import org.apache.spark.sql.streaming.{
 
 import graft.core.Concept
 import graft.extract.Gazetteer
+import graft.kg.KgPipeline
 
 /** One extracted TURN event flowing through the stateful stream: concepts
   * travel as an array of ORDINALS (indices into the gazetteer's concept
@@ -57,7 +58,7 @@ object StreamingIngest {
   ): DataFrame = {
     val gaz = new Gazetteer(concepts)
     transcripts
-      .where(col("role") =!= "tool" && length(trim(col("text"))) > 0)
+      .where(KgPipeline.eligible)
       .withWatermark("ts", watermarkDelay)
       .select(
         col("ts"),
@@ -184,7 +185,7 @@ object StreamingIngest {
     val nC = concepts.length
     val conceptIds = concepts.map(_.wikibaseId).toArray
     val events = transcripts
-      .where(col("role") =!= "tool" && length(trim(col("text"))) > 0)
+      .where(KgPipeline.eligible)
       .withWatermark("ts", watermarkDelay)
       .select(
         col("conv_id"),
@@ -323,7 +324,7 @@ object StreamingIngest {
     val gaz = new Gazetteer(concepts)
     val conceptIds = concepts.map(_.wikibaseId).toArray
     val events = transcripts
-      .where(col("role") =!= "tool" && length(trim(col("text"))) > 0)
+      .where(KgPipeline.eligible)
       .withWatermark("ts", watermarkDelay)
       .select(
         col("conv_id"),
@@ -375,7 +376,7 @@ object StreamingIngest {
   def mentionEdgesStream(spark: SparkSession, transcripts: DataFrame, concepts: Vector[Concept]): DataFrame = {
     val gaz = new Gazetteer(concepts)
     transcripts
-      .where(col("role") =!= "tool" && length(trim(col("text"))) > 0)
+      .where(KgPipeline.eligible)
       .select(
         concat(col("conv_id"), lit("_"), col("turn_idx").cast("string")).as("subj"),
         lit("MENTIONS_CONCEPT").as("pred"),

@@ -663,16 +663,20 @@ class DataOpsSpec extends AnyFunSuite {
     comp.groupBy(_._2).foreach { case (c, members) => assert(c == members.keys.min) }
   }
 
-  test("bloom exclusion == plain anti-join, and the bloom actually prunes") {
-    val corpus = docs.select($"doc_id", $"text")
-    // batch: half re-posts (must be excluded), half new (must survive)
-    val batch = corpus
+  /** Half re-posts of corpus docs (must be excluded), half new texts (must
+    * survive), under fresh doc ids. */
+  private def bloomBatch(corpus: org.apache.spark.sql.DataFrame) =
+    corpus
       .where($"doc_id" % 2 === 0)
       .select(($"doc_id" + 900000L).as("doc_id"), $"text")
       .unionByName(
         corpus
           .where($"doc_id" % 2 === 1)
           .select(($"doc_id" + 910000L).as("doc_id"), concat($"text", lit(" new")).as("text")))
+
+  test("bloom exclusion == plain anti-join, and the bloom actually prunes") {
+    val corpus = docs.select($"doc_id", $"text")
+    val batch = bloomBatch(corpus)
     val got = Dedup
       .bloomExcludeIncremental(batch, corpus)
       .select("doc_id")
@@ -695,6 +699,24 @@ class DataOpsSpec extends AnyFunSuite {
       .where(Dedup.bloomMightContain($"text", bloom))
       .count()
     assert(falsePos < batch.count() / 10)
+  }
+
+  test("bloom exclusion ignores caller columns: a wide column and one named __might") {
+    val corpus = docs.select($"doc_id", $"text")
+    val batch = bloomBatch(corpus)
+      .withColumn("wide", repeat($"text", 20))
+      // the opposite of the flag the probe sets: a frame that kept this
+      // column would keep the re-posts and drop the new rows
+      .withColumn("__might", lit(false))
+    val got = Dedup.bloomExcludeIncremental(batch, corpus)
+    assert(got.columns.toSeq == Seq("doc_id", "text_md5"))
+    val want = batch
+      .join(corpus.select("text"), Seq("text"), "left_anti")
+      .select($"doc_id", md5($"text").as("text_md5"))
+    assert(want.count() > 0 && want.count() < batch.count())
+    assert(got.count() == want.count())
+    assert(got.exceptAll(want).count() == 0)
+    assert(want.exceptAll(got).count() == 0)
   }
 
   test("temperature mix: budget respected, small sources up-weighted vs proportional") {

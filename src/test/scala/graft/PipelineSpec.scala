@@ -220,6 +220,47 @@ class PipelineSpec extends AnyFunSuite {
     turns.unpersist()
   }
 
+  test("fast triple path equals the independent mentions-based path on edge-case turns") {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val ts = new java.sql.Timestamp(0L)
+    val corpus = Seq(
+      ("c.conv.1", 0, "tool", "table scan from a tool call", Some("grep"), ts),
+      ("c.conv.1", 1, "user", "   ", None, ts),
+      ("c.conv.1", 2, "user", "a sort table and a table scan", None, ts),
+      ("c.conv.1", 3, "assistant", "nothing to see here", None, ts),
+      ("c.conv.1", 4, "assistant", "\uD834\uDD1E clef, then a full table scan", None, ts),
+      ("c_conv_2", 0, "user", "sort the join", None, ts),
+      ("c_conv_2", 1, "user", null, None, ts)
+    ).toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    val concepts = KgPipeline.defaultConcepts
+    val want = StructType(Seq("subj", "pred", "obj").map(StructField(_, StringType, nullable = true)))
+    // both on the eligible turns and on the raw ones (null and blank text,
+    // tool role): the two paths must agree whatever the caller passes
+    for (turns <- Seq(KgPipeline.eligibleTurns(corpus), corpus)) {
+      val fast = KgPipeline.triplesFromTurns(spark, turns, concepts)
+      val slow = KgPipeline.triplesFrom(spark, turns, KgPipeline.extractMentions(spark, turns, concepts).toDF(), concepts)
+      assert(fast.schema == want)
+      assert(fast.count() == slow.count())
+      assert(fast.exceptAll(slow).count() == 0)
+      assert(slow.exceptAll(fast).count() == 0)
+    }
+    // the cases are live: Q13's negative label drops the "sort table" sort
+    // while a plain "sort" fires, the supplementary-plane turn still
+    // matches, and the underscored conversation is kept whole in subj
+    val edges = KgPipeline
+      .triplesFromTurns(spark, KgPipeline.eligibleTurns(corpus), concepts)
+      .collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      .toSet
+    assert(edges(("c.conv.1_2", "MENTIONS_CONCEPT", "Q10")))
+    assert(!edges(("c.conv.1_2", "MENTIONS_CONCEPT", "Q13")))
+    assert(edges(("c_conv_2_0", "MENTIONS_CONCEPT", "Q13")))
+    assert(edges(("c.conv.1_4", "MENTIONS_CONCEPT", "Q10")))
+    assert(edges(("c_conv_2", "HAS_PASSAGE", "c_conv_2_0")))
+    assert(!edges.exists(e => e._1 == "c.conv.1_3" && e._2 == "MENTIONS_CONCEPT"))
+    assert(!edges.exists(e => Set("c.conv.1_0", "c.conv.1_1", "c_conv_2_1")(e._3)))
+  }
+
   test("synthetic transcripts generator: deterministic, skewed, schema-complete") {
     val t1 = Transcripts.synthesize(spark, 10000, 1000).cache()
     val t2 = Transcripts.synthesize(spark, 10000, 1000)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.data.{Dedup, Multimodal, Similarity, TextAnalysis}
-import graft.kg.{DemoConceptStore, KgPipeline, OracleGen, Transcripts}
+import graft.kg.{DemoConceptStore, KgPipeline, OracleGen, Sources, Transcripts}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -29,30 +29,9 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     KgPipeline.triples(spark, "/root/testdata/sf0.001")
 
-  private def docs(s: SparkSession, dir: String) = s.read.parquet(s"$dir/documents.parquet")
-  private def emb(s: SparkSession, dir: String) = s.read.parquet(s"$dir/embeddings.parquet")
-  private def events(s: SparkSession, dir: String) = s.read.parquet(s"$dir/events.parquet")
-
-  /** Input fingerprint stored beside every session artifact: file names,
-    * lengths and mtimes of the parquet directory backing the artifact. A
-    * rewrite of the dataset under `dir` within one application changes the
-    * fingerprint and so invalidates the cached artifact naturally, instead
-    * of silently serving stale results (current drivers are
-    * one-dir-per-JVM, but the invariant shouldn't rest on that). */
-  private[graft] def fingerprint(dir: String, table: String): String = {
-    val d = new java.io.File(s"$dir/$table.parquet")
-    // The dataset may be a single parquet FILE (the testdata layout) or a
-    // directory of part files; listFiles() returns null for a plain file,
-    // which would collapse the fingerprint to a constant and disable
-    // supersession. Fingerprint the file itself in that case.
-    val files =
-      if (d.isFile) Array(d)
-      else Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
-    val h = files
-      .sortBy(_.getName)
-      .foldLeft(17L)((acc, f) => ((acc * 31 + f.getName.hashCode) * 31 + f.length()) * 31 + f.lastModified())
-    s"$table:$h"
-  }
+  private def docs(s: SparkSession, dir: String) = Sources.table(s, dir, "documents")
+  private def emb(s: SparkSession, dir: String) = Sources.table(s, dir, "embeddings")
+  private def events(s: SparkSession, dir: String) = Sources.table(s, dir, "events")
 
   /** A session artifact: a relation or model state derived from one backing
     * table (`documents` or `embeddings`), built once per (application,
@@ -62,7 +41,8 @@ object SparkEntry {
     * declaration.
     *
     * The registry keeps one entry per (artifact, application, dir) with the
-    * backing table's fingerprint beside the value; a rewrite of the table
+    * backing table's fingerprint (`Sources.fingerprint`, the definition the
+    * table registry uses too) beside the value; a rewrite of the table
     * changes the fingerprint and the rebuilt entry replaces the old one. The
     * superseded value is only dropped from the registry, never unpersisted —
     * a caller may still hold it — so Spark's ContextCleaner frees its blocks
@@ -76,7 +56,7 @@ object SparkEntry {
 
     private def entry(s: SparkSession, dir: String): Artifact.Entry = {
       val key = (name, s.sparkContext.applicationId, dir)
-      val fp = fingerprint(dir, table)
+      val fp = Sources.fingerprint(dir, table)
       Artifact.entries.get(key).filter(_.fingerprint == fp).getOrElse {
         val e = build(s, dir) match {
           case df: DataFrame @unchecked => val (c, n) = compact(df); Artifact.Entry(fp, c, n)
@@ -993,8 +973,8 @@ object SparkEntry {
     }),
     // ---- relational coverage -------------------------------------------------
     "q1_agg" -> ((s, dir) =>
-      s.read
-        .parquet(s"$dir/lineitem.parquet")
+      Sources
+        .table(s, dir, "lineitem")
         .where(col("l_shipdate") <= lit(java.sql.Timestamp.valueOf("1998-09-02 00:00:00")))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -1003,9 +983,9 @@ object SparkEntry {
           count(lit(1)).as("n_rows")
         )),
     "q3_topk" -> ((s, dir) => {
-      val cust = s.read.parquet(s"$dir/customer.parquet")
-      val ord = s.read.parquet(s"$dir/orders.parquet")
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val cust = Sources.table(s, dir, "customer")
+      val ord = Sources.table(s, dir, "orders")
+      val li = Sources.table(s, dir, "lineitem")
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
         .groupBy("o_orderkey", "o_orderdate")
@@ -1308,7 +1288,7 @@ object SparkEntry {
     val turns = KgPipeline
       .eligibleTurns(Transcripts.read(s, dir))
       .select(concat_ws("|", col("conv_id"), col("turn_idx")).as("passage_id"), col("text"), col("turn_idx"))
-    val fixture = s.read.parquet(OracleGen.refMentionsPath)
+    val fixture = Sources.table(s, OracleGen.refMentionsPath)
     // two passage-level perturbations keep BOTH grains non-degenerate on a
     // mention-dense corpus at EVERY scale factor (turn_idx spans only 0..5
     // at small sf): gold is excluded on 6-residues {1,2} and predictions

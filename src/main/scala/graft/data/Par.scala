@@ -1,6 +1,9 @@
 package graft.data
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.UnspecifiedDistribution
+import org.apache.spark.sql.execution.UnionExec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Parallelism repair for CPU-dense, byte-light stages (r6 guide §2).
   *
@@ -34,6 +37,26 @@ object Par {
     val target =
       if (bytes > BigInt(conf.toLong * 32768L)) conf
       else math.max(1, (bytes / 32768).toInt + 1)
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+    if (inputPartitions(df) < target) df.repartition(target) else df
+  }
+
+  /** The partition count `df` arrives with, read from the leaves of its
+    * planned (not prepared) physical plan: a file, RDD, in-memory or local
+    * scan creates its RDD without running a job, where `df.rdd` would
+    * compile and finalize the whole physical plan — code generation
+    * included — for this one number. That holds only where the leaves'
+    * partitioning is the output's, so `df` must be narrow: chains of
+    * operators with one child over one scan each, no exchange, no operator
+    * that would need one, joined at most by a union (which counts its
+    * legs' partitions, as its RDD does). */
+  private[graft] def inputPartitions(df: DataFrame): Int = {
+    val plan = df.queryExecution.sparkPlan
+    val wide = plan.find(p =>
+      (p.children.size > 1 && !p.isInstanceOf[UnionExec]) || p.isInstanceOf[Exchange] ||
+        p.requiredChildDistribution.exists(_ != UnspecifiedDistribution))
+    require(wide.isEmpty, s"fanOut needs a narrow plan over scans, got:\n${plan.treeString}")
+    plan.collectLeaves().map { leaf =>
+      (if (leaf.supportsColumnar) leaf.executeColumnar() else leaf.execute()).getNumPartitions
+    }.sum
   }
 }

@@ -4,13 +4,70 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Transcript source formats beyond parquet. The reference's inference
+/** Input tables. Two kinds of reader live here.
+  *
+  * The table registry (`table`) serves every backing-table read of the
+  * query surface (`documents`, `embeddings`, `events`, the TPC-H tables,
+  * the eval fixture, and `Transcripts.read` with every `sfDir` entry point
+  * built on it). Each parquet path is resolved — schema read, files
+  * listed — once per (application, path) and the resolved DataFrame is
+  * served to every later lookup, so a query pays neither a
+  * schema-inference job nor a file listing per read. Nothing is
+  * materialized: a handle is a plan leaf, scanned afresh by each query. A
+  * handle is re-resolved when the path's fingerprint (`fingerprint`: file
+  * names, lengths and mtimes, the same definition that keys the session
+  * artifacts) changes, so a rewrite of the table is read, never a stale
+  * file listing.
+  *
+  * Transcript source formats beyond parquet. The reference's inference
   * stage writes JSONL (one record per line, flows/inference.py:617-643) and
   * its fixtures use a legacy JSON-array encoding; production tables would be
-  * Iceberg. Every reader enforces the canonical transcripts schema with an
-  * EXPLICIT schema (never schema inference — at 100 TB an inference pass is
-  * a full extra scan) and returns columns in contract order. */
+  * Iceberg. Every transcript reader enforces the canonical transcripts
+  * schema with an EXPLICIT schema (never schema inference — at 100 TB an
+  * inference pass is a full extra scan) and returns columns in contract
+  * order. */
 object Sources {
+
+  /** Fingerprint of a parquet dataset: file names, lengths and mtimes. A
+    * rewrite of the dataset within one application changes it, and so
+    * invalidates every registry handle and session artifact derived from
+    * the dataset, instead of silently serving stale results. */
+  def fingerprint(dir: String, table: String): String =
+    s"$table:${filesHash(s"$dir/$table.parquet")}"
+
+  private def filesHash(path: String): Long = {
+    val d = new java.io.File(path)
+    // The dataset may be a single parquet FILE (the testdata layout) or a
+    // directory of part files; listFiles() returns null for a plain file,
+    // which would collapse the fingerprint to a constant and disable
+    // supersession. Fingerprint the file itself in that case.
+    val files =
+      if (d.isFile) Array(d)
+      else Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
+    files
+      .sortBy(_.getName)
+      .foldLeft(17L)((acc, f) => ((acc * 31 + f.getName.hashCode) * 31 + f.length()) * 31 + f.lastModified())
+  }
+
+  private val resolved = scala.collection.concurrent.TrieMap.empty[(String, String), (Long, DataFrame)]
+
+  /** The parquet table at `path`, resolved once per (application, path) and
+    * fingerprint. Two lookups of one table share attribute ids, as two uses
+    * of one DataFrame do: join them by column name (the analyzer
+    * re-instances the right side), never through `df("col")`. */
+  def table(spark: SparkSession, path: String): DataFrame = {
+    val key = (spark.sparkContext.applicationId, path)
+    val fp = filesHash(path)
+    resolved.get(key).collect { case (`fp`, df) => df }.getOrElse {
+      val df = spark.read.parquet(path)
+      resolved.put(key, (fp, df))
+      df
+    }
+  }
+
+  /** `<dir>/<name>.parquet` through the registry. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    table(spark, s"$dir/$name.parquet")
 
   val transcriptsSchema: StructType = StructType(
     Seq(

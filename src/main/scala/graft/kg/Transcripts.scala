@@ -39,7 +39,7 @@ object Transcripts {
   }
 
   def read(spark: SparkSession, sfDir: String): DataFrame =
-    fromDocuments(spark.read.parquet(s"$sfDir/documents.parquet"))
+    fromDocuments(Sources.table(spark, sfDir, "documents"))
 
   /** Large-scale synthetic transcripts for scaling benchmarks: `spark.range`
     * driven, seed-free (all columns are pure functions of the row id via a

@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -27,11 +27,18 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale posture: the static edge list is cached columnar and
   * hash-partitioned on src; each step is one join exchanging only the
-  * frontier (one row per active walk) + a min(struct) partial-aggregate —
-  * a hub's candidate fan-out collapses map-side, never a window sort. The
-  * emitted corpus is (nodes * nWalks * (len+1)) rows — linear in the walk
-  * budget, never quadratic in the graph. Walks leaving a sink (no
-  * out-neighbour) simply end: their later steps carry no row.
+  * frontier (one row per active walk) + a min(struct) aggregate keyed by
+  * (src, walk_id) — a walk sits at one node, so that is the walk's group,
+  * and the key rides the join's hash partitioning: one exchange per step,
+  * and a hub's candidate fan-out collapses map-side, never a window sort.
+  * Each step's frontier is a local checkpoint, so step t plans one join
+  * over step t-1's rows whatever t is (a lazily chained loop re-plans all
+  * t steps at step t, and its corpus union carries len² joins); the
+  * corpus is the union of the checkpoints, and the edge cache is freed
+  * before it is returned. The emitted corpus is (nodes * nWalks * (len+1))
+  * rows — linear in the walk budget, never quadratic in the graph. Walks
+  * leaving a sink (no out-neighbour) simply end: their later steps carry
+  * no row.
   */
 object Walks {
 
@@ -56,32 +63,17 @@ object Walks {
       .persist(StorageLevel.MEMORY_AND_DISK)
     sym.count()
 
-    val starts = sym
-      .select(col("src").as("node"))
-      .distinct()
-      .crossJoin(spark_range0(edges, nWalks))
-      .select(concat(col("node"), lit("#"), col("j").cast("string")).as("walk_id"), col("node"))
-
-    var frontier = starts
-    var corpus = starts.select(col("walk_id"), lit(0).as("step"), col("node"))
-    for (t <- 1 to len) {
-      frontier = sym
-        .join(frontier.hint("SHUFFLE_HASH"), sym("src") === frontier("node"))
-        .select(
-          col("walk_id"),
-          col("dst"),
-          // the portable hash coin: md5 over "walk|step|candidate"
-          conv(substring(md5(concat_ws("|", col("walk_id"), lit(t.toString), col("dst"))), 1, 15), 16, 10)
-            .cast("long")
-            .as("h"))
-        .groupBy("walk_id")
+    val frontiers = (1 to len).scanLeft(starts(sym, nWalks)) { (frontier, t) =>
+      sym
+        .join(onEdges(frontier, nP).hint("SHUFFLE_HASH"), col("src") === col("node"))
+        .select(col("src"), col("walk_id"), col("dst"), coin(col("walk_id"), lit(t.toString), col("dst")).as("h"))
+        .groupBy("src", "walk_id")
         .agg(min(struct(col("h"), col("dst"))).as("m"))
         .select(col("walk_id"), col("m.dst").as("node"))
-      corpus = corpus.union(frontier.select(col("walk_id"), lit(t).as("step"), col("node")))
+        .localCheckpoint()
     }
-    val out = corpus.localCheckpoint()
     sym.unpersist(false)
-    out
+    corpus(frontiers)
   }
 
   /** node2vec-style SECOND-ORDER biased walks (Grover & Leskovec 2016) —
@@ -112,8 +104,11 @@ object Walks {
     * sampling (the paper's alias tables pay the same per-visit O(deg)
     * preprocessing), paid only by walks currently AT a hub, never
     * materializing a hub's full neighbourhood against every walk. Frontier
-    * state is 3 columns per live walk; the corpus stays linear in the walk
-    * budget. First step is uniform (no prev yet) — the paper's convention. */
+    * state is 3 columns per live walk, checkpointed locally at every step
+    * as in [[deepWalks]]: each step's plan has constant size, the corpus is
+    * the union of the checkpoints and stays linear in the walk budget, and
+    * both edge caches are freed before it is returned. First step is
+    * uniform (no prev yet) — the paper's convention. */
   def node2vecWalks(
       edges: DataFrame,
       nWalks: Int = 2,
@@ -143,29 +138,17 @@ object Walks {
       .persist(StorageLevel.MEMORY_AND_DISK)
     sym.count()
 
-    val starts = sym
-      .select(col("src").as("node"))
-      .distinct()
-      .crossJoin(spark_range0(edges, nWalks))
-      .select(concat(col("node"), lit("#"), col("j").cast("string")).as("walk_id"), col("node"))
+    val start = starts(sym, nWalks)
 
     // step 1: uniform hash-argmin (second-order bias needs a prev, which
     // only exists from the second transition on) — frontier = (walk, prev, node)
-    var frontier = sym
-      .join(starts.hint("SHUFFLE_HASH"), sym("src") === starts("node"))
-      .select(
-        col("walk_id"),
-        starts("node").as("prev"),
-        col("dst"),
-        conv(substring(md5(concat_ws("|", col("walk_id"), lit("1"), col("dst"))), 1, 15), 16, 10)
-          .cast("long")
-          .as("h"))
-      .groupBy("walk_id")
-      .agg(min(struct(col("h"), col("dst"), col("prev"))).as("m"))
-      .select(col("walk_id"), col("m.prev").as("prev"), col("m.dst").as("node"))
-    var corpus = starts
-      .select(col("walk_id"), lit(0).as("step"), col("node"))
-      .union(frontier.select(col("walk_id"), lit(1).as("step"), col("node")))
+    val first = sym
+      .join(onEdges(start, nP).hint("SHUFFLE_HASH"), col("src") === col("node"))
+      .select(col("src"), col("walk_id"), col("dst"), coin(col("walk_id"), lit("1"), col("dst")).as("h"))
+      .groupBy("src", "walk_id")
+      .agg(min(struct(col("h"), col("dst"))).as("m"))
+      .select(col("walk_id"), col("src").as("prev"), col("m.dst").as("node"))
+      .localCheckpoint()
 
     // the distance-1 classifier probe joins on (prev, cand): a SECOND static
     // cache of the same edges partitioned on that pair key, built once, so
@@ -180,13 +163,13 @@ object Walks {
 
     val byWalk = org.apache.spark.sql.expressions.Window.partitionBy("walk_id")
     val cumWin = byWalk.orderBy("cand")
-    for (t <- 2 to len) {
+    val frontiers = (2 to len).scanLeft(first) { (frontier, t) =>
       val cand = sym
-        .join(frontier.hint("SHUFFLE_HASH"), sym("src") === frontier("node"))
+        .join(onEdges(frontier, nP).hint("SHUFFLE_HASH"), col("src") === col("node"))
         .select(col("walk_id"), col("prev"), col("node").as("cur"), col("dst").as("cand"))
-      val inProbe = symPair
       val weighted = cand
-        .join(inProbe, Seq("prev", "cand"), "left")
+        .repartition(nP, col("prev"), col("cand"))
+        .join(symPair, Seq("prev", "cand"), "left")
         .select(
           col("walk_id"),
           col("cur"),
@@ -195,7 +178,7 @@ object Walks {
             .when(col("is_in").isNotNull, lit(wIn))
             .otherwise(lit(wOut))
             .as("w"))
-      frontier = weighted
+      weighted
         .select(
           col("walk_id"),
           col("cur"),
@@ -203,24 +186,44 @@ object Walks {
           col("w"),
           sum(col("w")).over(cumWin).as("cum"),
           sum(col("w")).over(byWalk).as("tot"))
-        .withColumn(
-          "coin",
-          conv(substring(md5(concat_ws("|", col("walk_id"), lit(t.toString))), 1, 15), 16, 10)
-            .cast("long") % col("tot"))
+        .withColumn("coin", coin(col("walk_id"), lit(t.toString)) % col("tot"))
         .where(col("coin") >= col("cum") - col("w") && col("coin") < col("cum"))
         .select(col("walk_id"), col("cur").as("prev"), col("cand").as("node"))
-      corpus = corpus.union(frontier.select(col("walk_id"), lit(t).as("step"), col("node")))
+        .localCheckpoint()
     }
-    val out = corpus.localCheckpoint()
     sym.unpersist(false)
     symPair.unpersist(false)
-    out
+    corpus(start +: frontiers)
   }
 
-  /** 0..n-1 as a 1-column (j) DataFrame on the input's session — a plan
-    * literal (n is the per-node walk budget, a constant). */
-  private def spark_range0(like: DataFrame, n: Int): DataFrame =
-    like.sparkSession.range(n).select(col("id").cast("int").as("j"))
+  /** The frontier exchanged onto the edge cache's layout (hash of the node,
+    * `nP` partitions), so the step's join exchanges the frontier alone.
+    * Left to the planner, a cache narrower than the session's shuffle
+    * partitions would be re-exchanged at every step. */
+  private def onEdges(frontier: DataFrame, nP: Int): DataFrame =
+    frontier.repartition(nP, col("node"))
+
+  /** The walk starts (walk_id = "node#j", node): `nWalks` per node with an
+    * out-edge in `sym`, checkpointed like every later frontier. */
+  private def starts(sym: DataFrame, nWalks: Int): DataFrame =
+    sym
+      .select(col("src").as("node"))
+      .distinct()
+      .select(col("node"), explode(array((0 until nWalks).map(lit): _*)).as("j"))
+      .select(concat(col("node"), lit("#"), col("j").cast("string")).as("walk_id"), col("node"))
+      .localCheckpoint()
+
+  /** The portable hash coin: the first 15 hex digits of md5 over the
+    * '|'-joined parts, as a 60-bit long. */
+  private def coin(parts: Column*): Column =
+    conv(substring(md5(concat_ws("|", parts: _*)), 1, 15), 16, 10).cast("long")
+
+  /** The walk corpus (walk_id, step, node) from the frontiers of steps
+    * 0..len: a union of checkpoint scans. */
+  private def corpus(frontiers: Seq[DataFrame]): DataFrame =
+    frontiers.zipWithIndex
+      .map { case (f, t) => f.select(col("walk_id"), lit(t).as("step"), col("node")) }
+      .reduce(_ union _)
 
   /** Negative sampling for KG-embedding training (the TransE/DistMult
     * contrastive feedstock, Bordes et al. 2013): for every positive edge
@@ -253,8 +256,7 @@ object Walks {
       .select(
         col("concept_a"),
         col("concept_b"),
-        (conv(substring(md5(concat_ws("|", col("concept_a"), col("concept_b"))), 1, 15), 16, 10)
-          .cast("long") % col("n")).as("idx"))
+        (coin(col("concept_a"), col("concept_b")) % col("n")).as("idx"))
     withIdx
       .join(broadcast(dict), col("idx") === col("rn"))
       .where(col("node") =!= col("concept_a") && col("node") =!= col("concept_b"))

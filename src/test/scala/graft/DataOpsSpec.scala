@@ -1172,4 +1172,35 @@ class DataOpsSpec extends AnyFunSuite {
     assert(got === want)
     assert(got(1L)._2 > got(4L)._2)
   }
+
+  test("fanOut reads the input's partition count from its planned scans; a shuffled input throws") {
+    // every fanOut input shape in the program (narrow projections of the
+    // documents/embeddings scans), a union of local relations (the sketch
+    // merge laws above) and a cached input: the planned count must equal
+    // what the executed plan reports, so every repartition decision stands.
+    // Small file splits make the scans span several partitions.
+    val local = (0 until 50).map(i => (i.toLong, s"t$i")).toDF("doc_id", "text")
+    def shapes = Seq(
+      docs.select(col("text")),
+      docs.select(col("doc_id"), col("text")),
+      docs.where(col("doc_id") % 10 === 0).select(col("text")),
+      docs.where(length(col("text")) > 20).select(col("doc_id"), col("text")),
+      emb.select(col("vec_id"), col("embedding")),
+      local.union(local.where(col("doc_id") > 3)).select(col("text")),
+      docs.select(col("doc_id"), col("text")).union(local)
+    )
+    for (split <- Seq(None, Some("16384"))) {
+      split.foreach(spark.conf.set("spark.sql.files.maxPartitionBytes", _))
+      try shapes.foreach { df =>
+        assert(graft.data.Par.inputPartitions(df) === df.rdd.getNumPartitions, df.queryExecution.sparkPlan.treeString)
+      } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    }
+    assert(shapes.map(graft.data.Par.inputPartitions).max > 1, "some shape must span several partitions")
+    val cached = docs.select(col("doc_id"), col("text")).cache()
+    try assert(graft.data.Par.inputPartitions(cached.select(col("text"))) === cached.select(col("text")).rdd.getNumPartitions)
+    finally cached.unpersist(true)
+    // a shuffled input has no scan partitioning to read
+    for (shuffled <- Seq(docs.repartition(3).select(col("text")), docs.groupBy("lang").count(), docs.distinct()))
+      intercept[IllegalArgumentException](graft.data.Par.fanOut(shuffled))
+  }
 }

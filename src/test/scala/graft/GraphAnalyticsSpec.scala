@@ -1111,4 +1111,21 @@ class GraphAnalyticsSpec extends AnyFunSuite {
     assert(row.getAs[Int]("radius_hops") === 2)
     assert(row.getAs[Long]("n_nodes") === 5L)
   }
+
+  test("walk generators return a constant-size plan: checkpoint scans under a union, no join or aggregate") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, Union}
+    import org.apache.spark.sql.execution.LogicalRDD
+    val df = edges.toDF("concept_a", "concept_b", "n_convs")
+    val len = 6
+    for ((name, walks) <- Seq(
+        "deepWalks" -> graft.kg.Walks.deepWalks(df, nWalks = 2, len = len),
+        "node2vecWalks" -> graft.kg.Walks.node2vecWalks(df, nWalks = 2, len = len))) {
+      val plan = walks.queryExecution.logical
+      assert(plan.find(p => p.isInstanceOf[Join] || p.isInstanceOf[Aggregate]).isEmpty, s"$name:\n$plan")
+      assert(plan.find(_.isInstanceOf[Union]).nonEmpty, s"$name:\n$plan")
+      assert(plan.collectLeaves().forall(_.isInstanceOf[LogicalRDD]), s"$name:\n$plan")
+      assert(plan.collectLeaves().size === len + 1, s"$name: one checkpoint per step")
+      assert(walks.count() === 7L * 2 * (len + 1), s"$name: every walk runs full length")
+    }
+  }
 }

@@ -66,20 +66,86 @@ class SourcesSpec extends AnyFunSuite {
       val f = new java.io.File(dir, "documents.parquet")
       java.nio.file.Files.write(f.toPath, "v1".getBytes)
       f.setLastModified(1000000L)
-      val fp1 = SparkEntry.fingerprint(dir.getPath, "documents")
+      val fp1 = Sources.fingerprint(dir.getPath, "documents")
       assert(fp1 != "documents:17", "single-file dataset must not collapse to the empty fingerprint")
       // in-place rewrite: same name, new length/mtime -> new fingerprint
       java.nio.file.Files.write(f.toPath, "v2-longer".getBytes)
       f.setLastModified(2000000L)
-      val fp2 = SparkEntry.fingerprint(dir.getPath, "documents")
+      val fp2 = Sources.fingerprint(dir.getPath, "documents")
       assert(fp2 != fp1)
       // directory-of-parts layout still fingerprints its contents
       val sub = new java.io.File(dir, "orders.parquet")
       assert(sub.mkdir())
       java.nio.file.Files.write(new java.io.File(sub, "part-0").toPath, "p".getBytes)
-      val fp3 = SparkEntry.fingerprint(dir.getPath, "orders")
+      val fp3 = Sources.fingerprint(dir.getPath, "orders")
       java.nio.file.Files.write(new java.io.File(sub, "part-1").toPath, "q".getBytes)
-      assert(SparkEntry.fingerprint(dir.getPath, "orders") != fp3)
+      assert(Sources.fingerprint(dir.getPath, "orders") != fp3)
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+      }
+      rm(dir)
+    }
+  }
+
+  /** Whether `body` submits a Spark job: its jobs run under a job group
+    * the listener watches for. The listener bus is FIFO, so once a later
+    * marker job's start arrives any job `body` submitted has been seen. */
+  private def submitsJob(body: => Unit): Boolean = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("registry-lookup", "lookup")
+      body
+      sc.setJobGroup("registry-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("registry-marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains("registry-marker"))
+      groups.contains("registry-lookup")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("table registry: a table resolves once per fingerprint; rewrites re-resolve; self-joins hold") {
+    val dir = Files.createTempDirectory("tables").toFile
+    val path = dir.getPath
+    val src = s"${TestSpark.sf0001}/documents.parquet"
+    val docsFile = new java.io.File(dir, "documents.parquet")
+    Files.copy(new java.io.File(src).toPath, docsFile.toPath)
+    def lookup() = Sources.table(spark, path, "documents")
+    try {
+      val d1 = lookup()
+      assert(!submitsJob(assert(lookup() eq d1)), "a resolved table was resolved again")
+
+      // two lookups of one table share attribute ids: a join of them must
+      // still equal the same join over two independent reads
+      def selfJoin(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+        a.groupBy("source").agg(count(lit(1)).as("n"), sum("n_chars").as("chars"))
+          .join(b.where(col("lang") === "en").select(col("source"), col("doc_id")), "source")
+      val viaRegistry = selfJoin(lookup(), lookup())
+      val fresh = selfJoin(spark.read.parquet(docsFile.getPath), spark.read.parquet(docsFile.getPath))
+      assert(viaRegistry.count() > 0)
+      assert(viaRegistry.exceptAll(fresh).count() === 0 && fresh.exceptAll(viaRegistry).count() === 0)
+
+      // a rewrite (here: a directory of parts holding half the rows) changes
+      // the fingerprint; the next lookup re-resolves and reads the new rows
+      val fp1 = Sources.fingerprint(path, "documents")
+      assert(docsFile.delete())
+      spark.read.parquet(src).where(col("doc_id") % 2 === 0).coalesce(1).write.parquet(docsFile.getPath)
+      assert(Sources.fingerprint(path, "documents") != fp1)
+      val d2 = lookup()
+      assert(d2 ne d1)
+      assert(d2.count() === spark.read.parquet(src).where(col("doc_id") % 2 === 0).count())
+      assert(lookup() eq d2)
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
@@ -115,34 +181,18 @@ class SourcesSpec extends AnyFunSuite {
       assert(c1.rdd.getNumPartitions == 1, "the edge layer was compacted")
       assert(cached1 == 1, "a compacted artifact holds one cached copy, not the intermediate as well")
 
-      // a second lookup is served from the registry: same value, no job.
-      // The listener bus is FIFO, so once the marker job's start arrives
-      // any job the lookups submitted has been seen.
-      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-      }
-      sc.addSparkListener(listener)
-      try {
-        sc.setJobGroup("registry-lookup", "second lookup")
+      // a second lookup is served from the registry: same value, no job
+      assert(!submitsJob {
         assert(lookup("kg_mentions") eq m1)
         assert(lookup("kg_cooccurrence") eq c1)
-        sc.setJobGroup("registry-marker", "marker")
-        sc.parallelize(Seq(1), 1).count()
-        sc.clearJobGroup()
-        val deadline = System.nanoTime() + 30L * 1000000000L
-        while (!groups.contains("registry-marker") && System.nanoTime() < deadline) Thread.sleep(10)
-        assert(groups.contains("registry-marker"))
-        assert(!groups.contains("registry-lookup"), "a cached lookup submitted a Spark job")
-      } finally sc.removeSparkListener(listener)
-      val fp1 = SparkEntry.fingerprint(path, "documents")
+      }, "a cached lookup submitted a Spark job")
+      val fp1 = Sources.fingerprint(path, "documents")
       assert(held == Seq("coEdges" -> fp1, "mentions" -> fp1))
 
       // rewriting the backing parquet rebuilds and replaces the old entries
       Files.copy(src, docsFile.toPath, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       assert(docsFile.setLastModified(docsFile.lastModified() + 60000L))
-      val fp2 = SparkEntry.fingerprint(path, "documents")
+      val fp2 = Sources.fingerprint(path, "documents")
       assert(fp2 != fp1)
       val m2 = lookup("kg_mentions")
       val (c2, cached2) = newlyCached(lookup("kg_cooccurrence"))

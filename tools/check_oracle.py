@@ -23,13 +23,15 @@ for a in sys.argv:
         ONLY = {x.strip() for x in a[len("--only="):].split(",") if x.strip()}
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+# the checkout this script lives in: Verify runs from here, not a fixed path
+REPO_ROOT = Path(__file__).resolve().parent.parent
 
 
 def run_verify():
     only = (" " + ",".join(sorted(ONLY))) if ONLY else ""
     subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF_DIR} {OUT_DIR}{only}'],
-        check=True, cwd="/root/repo",
+        check=True, cwd=REPO_ROOT,
     )
 
 

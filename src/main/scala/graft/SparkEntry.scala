@@ -171,6 +171,22 @@ object SparkEntry {
   private val pqBooks = new Artifact[Seq[(Int, Int, Seq[Double])]]("pqBooks", "embeddings")((s, dir) =>
     Similarity.pqCodebooks(emb(s, dir)))
 
+  /** The PQ code table (vec_id, s, cent) — the corpus encoded against the
+    * PQ codebooks, m small ints per vector: the persisted 32×-compressed
+    * index every PQ query probes, so a query scores its ADC partials
+    * against it instead of re-encoding the corpus. */
+  private val pqCodes = new Artifact[DataFrame]("pqCodes", "embeddings")((s, dir) =>
+    Similarity.pqEncode(emb(s, dir), pqBooks(s, dir)))
+
+  /** The eval harness's inputs, (passage_id, spans) over the full
+    * eligible-turn universe: gold from the executed-reference fixture,
+    * predictions from the mention layer under the deterministic
+    * perturbation documented at eval_pr. Both are a function of the corpus
+    * (`ref_mentions` is a fixed fixture), derived once per corpus epoch and
+    * read by every eval query. */
+  private val evalGold = new Artifact[DataFrame]("evalGold", "documents")((s, dir) => evalGoldPred(s, dir)._1)
+  private val evalPred = new Artifact[DataFrame]("evalPred", "documents")((s, dir) => evalGoldPred(s, dir)._2)
+
   /** Build every declared session artifact, in declaration order. The bench
     * warms these OUTSIDE its timed per-query loop and reports the build as
     * its own line, so per-query numbers measure the query rather than
@@ -590,8 +606,11 @@ object SparkEntry {
       Similarity.semanticDedup(emb(s, dir), ivfCodebook(s, dir), threshold = 0.4)),
     // ---- similarity search --------------------------------------------------
     "sim_topk" -> ((s, dir) => Similarity.bruteForceTopK(emb(s, dir), nQueries = 50, k = 10)),
-    // the cell index (assigned) is the persisted ANN index: built once from
-    // the shared codebook, checkpointed, probed by the query side
+    // the cell index (assigned) stands for the persisted ANN index: each
+    // call assigns every vector to its cell under the shared codebook and
+    // checkpoints the result before the query side probes it. It is the
+    // next candidate for a session artifact; no benchmark workload times
+    // these two queries yet
     "sim_ann_ivf" -> ((s, dir) => {
       val cb = ivfCodebook(s, dir)
       val assigned = Similarity.ivfAssign(emb(s, dir), preCents = Some(cb)).localCheckpoint()
@@ -607,7 +626,8 @@ object SparkEntry {
       Similarity.sq8TopK(emb(s, dir), sq8Scales(s, dir), nQueries = 50, k = 10)),
     // IVF pruning × SQ8 compression composed: scanned fraction bounded by
     // nProbe/nCells AND bytes-per-row bounded at 1/dim — the production
-    // ANN shape; both model artifacts come from the session cache
+    // ANN shape; both model artifacts come from the session cache, the
+    // cell index is rebuilt and checkpointed per call as in sim_ann_ivf
     "sim_ann_ivf_sq8" -> ((s, dir) => {
       val cb = ivfCodebook(s, dir)
       val assigned = Similarity.ivfAssign(emb(s, dir), preCents = Some(cb)).localCheckpoint()
@@ -619,12 +639,13 @@ object SparkEntry {
     // compression), asymmetric-distance scoring — per candidate the scan
     // does m integer lookups+adds, never touching the float vector
     "sim_topk_pq" -> ((s, dir) =>
-      Similarity.pqTopK(emb(s, dir), pqBooks(s, dir), nQueries = 50, k = 10)),
+      Similarity.pqTopK(emb(s, dir), pqBooks(s, dir), nQueries = 50, k = 10, preCodes = Some(pqCodes(s, dir)))),
     // PQ-then-re-rank: integer ADC nominates a 50-candidate shortlist,
     // exact cosine re-ranks it — float work is queries × shortlist, never
     // queries × corpus (the standard coarse-code deployment shape)
     "sim_topk_pq_rerank" -> ((s, dir) =>
-      Similarity.pqRerankTopK(emb(s, dir), pqBooks(s, dir), nQueries = 50, k = 10, shortlist = 50)),
+      Similarity.pqRerankTopK(
+        emb(s, dir), pqBooks(s, dir), nQueries = 50, k = 10, shortlist = 50, preCodes = Some(pqCodes(s, dir)))),
     // ---- text analysis ------------------------------------------------------
     "text_quality" -> ((s, dir) => TextAnalysis.quality(docs(s, dir))),
     "text_tokens" -> ((s, dir) => TextAnalysis.tokenStats(docs(s, dir))),
@@ -1260,30 +1281,25 @@ object SparkEntry {
     // kg_mentions proves engine==fixture byte-exactly) and recomputes the
     // counts with a different strategy (per-span max-jaccard vs the engine's
     // per-passage array filters).
-    "eval_pr" -> ((s, dir) => {
-      val (gold, pred) = evalGoldPred(s, dir)
-      graft.eval.Metrics.spanLevelSweep(gold, pred, Seq(0, 50, 90, 99))
-    }),
+    "eval_pr" -> ((s, dir) =>
+      graft.eval.Metrics.spanLevelSweep(evalGold(s, dir), evalPred(s, dir), Seq(0, 50, 90, 99))),
     // G6 passage grain (metrics.py:145-186): positive = any span on the
     // passage; same gold/perturbed-prediction construction as eval_pr
-    "eval_pr_passage" -> ((s, dir) => {
-      val (gold, pred) = evalGoldPred(s, dir)
-      graft.eval.Metrics.passageLevelDF(gold, pred)
-    }),
+    "eval_pr_passage" -> ((s, dir) => graft.eval.Metrics.passageLevelDF(evalGold(s, dir), evalPred(s, dir))),
     // G6 × G8: the same sweep stratified by source (equity-group metrics,
     // operations/evaluate.py:109-171) — one extra groupBy key on the same join
-    "eval_pr_strata" -> ((s, dir) => {
-      val (gold, pred) = evalGoldPred(s, dir)
+    "eval_pr_strata" -> ((s, dir) =>
       graft.eval.Metrics.spanLevelSweepBy(
-        gold, pred, Seq(0, 50, 90, 99),
-        split(col("passage_id"), "\\.").getItem(0).as("stratum"))
-    })
+        evalGold(s, dir), evalPred(s, dir), Seq(0, 50, 90, 99),
+        split(col("passage_id"), "\\.").getItem(0).as("stratum")))
   )
 
-  /** Shared eval-harness inputs: (gold, predicted) span arrays over the FULL
-    * eligible-turn universe (mention-free turns participate as negatives).
-    * Gold = executed-reference fixture spans; predicted = the engine's
-    * mentions under the deterministic perturbation documented at eval_pr. */
+  /** Builds the `evalGold`/`evalPred` artifacts: (gold, predicted) span
+    * arrays over the FULL eligible-turn universe (mention-free turns
+    * participate as negatives). Gold = executed-reference fixture spans;
+    * predicted = the engine's mentions under the deterministic perturbation
+    * documented at eval_pr. Both plans are lazy; each artifact
+    * materializes its own half. */
   private def evalGoldPred(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val turns = KgPipeline
       .eligibleTurns(Transcripts.read(s, dir))

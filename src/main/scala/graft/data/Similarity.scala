@@ -765,19 +765,11 @@ object Similarity {
   private def pqL2(x: Column, c: Column): Column =
     dot(x, x) - lit(2.0) * dot(x, c) + dot(c, c)
 
-  /** PQ-ADC top-k: encode the corpus as (vec_id, s, cent) — the CODE TABLE,
-    * m small ints per vector, the persisted 32×-compressed index — then
-    * score queries by asymmetric distance: per (query, subspace, centroid)
-    * the partial inner product is computed ONCE against the codebook
-    * (m·kCents dots per query, not per candidate), QUANTIZED to fixed
-    * point (floor(pd·2^20 + 0.5) — the cross-subspace sum must be
-    * order-free for oracle parity), broadcast, and each candidate's score
-    * is the sum of its m looked-up partials. The corpus-side work per
-    * candidate is m integer additions — no float ops, no full-vector
-    * reads. Output (query_id, rank, neighbor_id), rank by (score desc,
-    * neighbor_id). */
   /** Encode the corpus against trained PQ books: the CODE TABLE
-    * (vec_id, s, cent) — the persisted 32×-compressed index artifact. */
+    * (vec_id, s, cent) — the persisted 32×-compressed index artifact.
+    * `SparkEntry` keeps it as a session artifact and passes it to
+    * [[pqTopK]]/[[pqRerankTopK]] as `preCodes`; without `preCodes` they
+    * encode the corpus themselves. */
   def pqEncode(emb: DataFrame, books: Seq[(Int, Int, Seq[Double])]): DataFrame = {
     val m = books.map(_._1).max + 1
     val sub = pqSubvectors(emb, m)
@@ -794,6 +786,18 @@ object Similarity {
       .agg(min(col("sc")).getField("cent").as("cent"))
   }
 
+  /** PQ-ADC top-k: take the CODE TABLE (vec_id, s, cent) — `preCodes`,
+    * else the corpus encoded by [[pqEncode]]; m small ints per vector, the
+    * persisted 32×-compressed index — then
+    * score queries by asymmetric distance: per (query, subspace, centroid)
+    * the partial inner product is computed ONCE against the codebook
+    * (m·kCents dots per query, not per candidate), QUANTIZED to fixed
+    * point (floor(pd·2^20 + 0.5) — the cross-subspace sum must be
+    * order-free for oracle parity), broadcast, and each candidate's score
+    * is the sum of its m looked-up partials. The corpus-side work per
+    * candidate is m integer additions — no float ops, no full-vector
+    * reads. Output (query_id, rank, neighbor_id), rank by (score desc,
+    * neighbor_id). */
   def pqTopK(
       emb: DataFrame,
       books: Seq[(Int, Int, Seq[Double])],

@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftCheckpointBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -63,14 +63,16 @@ object Walks {
       .persist(StorageLevel.MEMORY_AND_DISK)
     sym.count()
 
-    val frontiers = (1 to len).scanLeft(starts(sym, nWalks)) { (frontier, t) =>
-      sym
-        .join(onEdges(frontier, nP).hint("SHUFFLE_HASH"), col("src") === col("node"))
-        .select(col("src"), col("walk_id"), col("dst"), coin(col("walk_id"), lit(t.toString), col("dst")).as("h"))
-        .groupBy("src", "walk_id")
-        .agg(min(struct(col("h"), col("dst"))).as("m"))
-        .select(col("walk_id"), col("m.dst").as("node"))
-        .localCheckpoint()
+    val start = starts(sym, nWalks)
+    val frontiers = (1 to len).scanLeft(start) { (frontier, t) =>
+      checkpointFrontier(
+        sym
+          .join(onEdges(frontier, nP).hint("SHUFFLE_HASH"), col("src") === col("node"))
+          .select(col("src"), col("walk_id"), col("dst"), coin(col("walk_id"), lit(t.toString), col("dst")).as("h"))
+          .groupBy("src", "walk_id")
+          .agg(min(struct(col("h"), col("dst"))).as("m"))
+          .select(col("walk_id"), col("m.dst").as("node")),
+        start)
     }
     sym.unpersist(false)
     corpus(frontiers)
@@ -142,13 +144,14 @@ object Walks {
 
     // step 1: uniform hash-argmin (second-order bias needs a prev, which
     // only exists from the second transition on) — frontier = (walk, prev, node)
-    val first = sym
-      .join(onEdges(start, nP).hint("SHUFFLE_HASH"), col("src") === col("node"))
-      .select(col("src"), col("walk_id"), col("dst"), coin(col("walk_id"), lit("1"), col("dst")).as("h"))
-      .groupBy("src", "walk_id")
-      .agg(min(struct(col("h"), col("dst"))).as("m"))
-      .select(col("walk_id"), col("src").as("prev"), col("m.dst").as("node"))
-      .localCheckpoint()
+    val first = checkpointFrontier(
+      sym
+        .join(onEdges(start, nP).hint("SHUFFLE_HASH"), col("src") === col("node"))
+        .select(col("src"), col("walk_id"), col("dst"), coin(col("walk_id"), lit("1"), col("dst")).as("h"))
+        .groupBy("src", "walk_id")
+        .agg(min(struct(col("h"), col("dst"))).as("m"))
+        .select(col("walk_id"), col("src").as("prev"), col("m.dst").as("node")),
+      start)
 
     // the distance-1 classifier probe joins on (prev, cand): a SECOND static
     // cache of the same edges partitioned on that pair key, built once, so
@@ -178,18 +181,19 @@ object Walks {
             .when(col("is_in").isNotNull, lit(wIn))
             .otherwise(lit(wOut))
             .as("w"))
-      weighted
-        .select(
-          col("walk_id"),
-          col("cur"),
-          col("cand"),
-          col("w"),
-          sum(col("w")).over(cumWin).as("cum"),
-          sum(col("w")).over(byWalk).as("tot"))
-        .withColumn("coin", coin(col("walk_id"), lit(t.toString)) % col("tot"))
-        .where(col("coin") >= col("cum") - col("w") && col("coin") < col("cum"))
-        .select(col("walk_id"), col("cur").as("prev"), col("cand").as("node"))
-        .localCheckpoint()
+      checkpointFrontier(
+        weighted
+          .select(
+            col("walk_id"),
+            col("cur"),
+            col("cand"),
+            col("w"),
+            sum(col("w")).over(cumWin).as("cum"),
+            sum(col("w")).over(byWalk).as("tot"))
+          .withColumn("coin", coin(col("walk_id"), lit(t.toString)) % col("tot"))
+          .where(col("coin") >= col("cum") - col("w") && col("coin") < col("cum"))
+          .select(col("walk_id"), col("cur").as("prev"), col("cand").as("node")),
+        start)
     }
     sym.unpersist(false)
     symPair.unpersist(false)
@@ -202,6 +206,23 @@ object Walks {
     * partitions would be re-exchanged at every step. */
   private def onEdges(frontier: DataFrame, nP: Int): DataFrame =
     frontier.repartition(nP, col("node"))
+
+  /** A step's frontier, checkpointed with a size estimate no larger than the
+    * walk starts' (scaled to the frontier's row width): a frontier holds at
+    * most one row per walk. Left alone, the checkpoint keeps the estimate of
+    * the step plan it replaces, and an inner join is estimated at the
+    * product of its inputs, so step t's frontier is estimated at about
+    * |edges|^t·|starts| bytes. Once that passes
+    * `spark.sql.maxSinglePartitionBytes` (128 MiB by default; step 3 on an
+    * 11-node complete graph), the planner no longer joins a single-partition
+    * frontier with a single-partition edge cache (numParts = 1) where they
+    * lie, and re-exchanges both at the session's shuffle partitions, the
+    * edge cache included, at every later step. */
+  private def checkpointFrontier(step: DataFrame, starts: DataFrame): DataFrame = {
+    val ck = step.localCheckpoint()
+    val bound = starts.queryExecution.optimizedPlan.stats.sizeInBytes * ck.schema.defaultSize / starts.schema.defaultSize
+    GraftCheckpointBridge.withSizeEstimate(ck, ck.queryExecution.optimizedPlan.stats.sizeInBytes.min(bound))
+  }
 
   /** The walk starts (walk_id = "node#j", node): `nWalks` per node with an
     * out-edge in `sym`, checkpointed like every later frontier. */

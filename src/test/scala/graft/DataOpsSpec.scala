@@ -275,6 +275,20 @@ class DataOpsSpec extends AnyFunSuite {
     val rrRecall = (exact & rr50).size.toDouble / exact.size
     info(s"PQ+rerank(50) recall=$rrRecall vs raw ADC $recall")
     assert(rrRecall >= recall)
+
+    // the cached-codes path (the code table SparkEntry keeps as a session
+    // artifact): passing the encoded table as preCodes must return exactly
+    // what encoding per call returns, ranks and ties included
+    val preCodes = Some(Similarity.pqEncode(emb, books))
+    def ranked(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
+    assert(ranked(Similarity.pqTopK(emb, books, nQueries = 20, k = 10, preCodes = preCodes)) ===
+      pq.map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq)
+    for (shortlist <- Seq(50, 1000))
+      assert(
+        ranked(Similarity.pqRerankTopK(emb, books, nQueries = 20, k = 10, shortlist = shortlist, preCodes = preCodes)) ===
+          ranked(Similarity.pqRerankTopK(emb, books, nQueries = 20, k = 10, shortlist = shortlist)),
+        s"shortlist $shortlist")
   }
 
   test("incremental embedding dedup == exact pairs touching the batch (measured-recall corpus)") {

@@ -208,4 +208,50 @@ class SourcesSpec extends AnyFunSuite {
       dir.delete()
     }
   }
+
+  test("session-artifact registry: the PQ code table and the eval inputs build once, each on its own table's rewrite") {
+    val dir = Files.createTempDirectory("registry_pq_eval").toFile
+    val path = dir.getPath
+    val copies = Seq("documents", "embeddings").map { t =>
+      val f = new java.io.File(dir, s"$t.parquet")
+      Files.copy(new java.io.File(TestSpark.sf0001, s"$t.parquet").toPath, f.toPath)
+      t -> f
+    }.toMap
+    val queries = Seq("sim_topk_pq", "eval_pr", "eval_pr_passage", "eval_pr_strata")
+    def construct(): Unit = queries.foreach(q => SparkEntry.queries(q)(spark, path))
+    val watched = Seq("pqCodes", "evalGold", "evalPred")
+    def held = SparkEntry.Artifact.entries.toSeq.collect { case ((name, _, d), e) if d == path && watched.contains(name) => name -> e }
+    def values = held.map { case (name, e) => name -> e.value }.toMap
+    def rewrite(table: String): Unit = {
+      val f = copies(table)
+      Files.copy(new java.io.File(TestSpark.sf0001, s"$table.parquet").toPath, f.toPath, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      assert(f.setLastModified(f.lastModified() + 60000L))
+    }
+    def rebuilt(before: Map[String, Any]): Set[String] = {
+      val now = values
+      watched.filter(a => !(now(a).asInstanceOf[AnyRef] eq before(a).asInstanceOf[AnyRef])).toSet
+    }
+    try {
+      construct()
+      assert(held.map(_._1).sorted == watched.sorted, "one registry entry per artifact")
+      val v1 = values
+      assert(!submitsJob(construct()), "a second construction submitted a Spark job")
+      assert(rebuilt(v1).isEmpty)
+
+      rewrite("documents")
+      construct()
+      assert(held.map(_._1).sorted == watched.sorted)
+      assert(rebuilt(v1) == Set("evalGold", "evalPred"), "a documents rewrite rebuilds the eval inputs only")
+      val v2 = values
+
+      rewrite("embeddings")
+      construct()
+      assert(rebuilt(v2) == Set("pqCodes"), "an embeddings rewrite rebuilds the code table only")
+      assert(!submitsJob(construct()))
+    } finally {
+      SparkEntry.Artifact.entries.keys.filter(_._3 == path).foreach(SparkEntry.Artifact.entries.remove)
+      copies.values.foreach(_.delete())
+      dir.delete()
+    }
+  }
 }

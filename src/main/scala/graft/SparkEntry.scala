@@ -148,9 +148,10 @@ object SparkEntry {
     graft.data.Sketches.hllRegisters(docs(s, dir), m = 256).collect().toSeq.map(r => (r.getLong(0), r.getLong(1))))
 
   /** MinHash signature index over the full corpus — in production a
-    * PERSISTED artifact of a corpus epoch (DedupBench measures exactly that
-    * build + persist); every LSH consumer (pair query, clustering) probes
-    * the same index rather than re-hashing the corpus. */
+    * PERSISTED artifact of a corpus epoch (BENCH/BASELINE.md keeps a
+    * historical 1M-doc build + persist timing); every LSH consumer (pair
+    * query, clustering) probes the same index rather than re-hashing the
+    * corpus. */
   private val minhashSigs = new Artifact[DataFrame]("minhashSigs", "documents")((s, dir) =>
     Dedup.minhashSignatures(docs(s, dir), k = 32))
 
@@ -508,7 +509,8 @@ object SparkEntry {
     // verified pair set equals the all-pairs truth on any corpus (the
     // sf1-equivalent sweep surfaced the classic S-curve recall gap of the
     // production (8,4) banding: 2527/3144 pairs at j in [0.5, 0.8); (8,4)
-    // stays the benched production default in DedupBench, 5x cheaper)
+    // stays the production default, 5x cheaper, and PlantedDedupSpec pins
+    // its recall on the planted near-dup tiers)
     "dedup_minhash" -> ((s, dir) => {
       val d = docs(s, dir)
       Dedup

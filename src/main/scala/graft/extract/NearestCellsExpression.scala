@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
   *
   * Replaces the `slice(sort_array(array(struct(-dot(v,c_0),0), ...,
   * struct(-dot(v,c_{n-1}),n-1))), 1, w)` formulation (`Similarity
-  * .cellRanking`), which was measured at ~284us/row for a 64-cell x 64-dim
+  * .cellStructs`), which was measured at ~284us/row for a 64-cell x 64-dim
   * codebook: the struct-array tree allocates nCells `GenericInternalRow`s
   * per row and `sort_array`'s interpreted struct comparator re-boxes every
   * comparison, all for an output of which only the first `w` elements are

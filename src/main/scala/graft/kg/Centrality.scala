@@ -133,7 +133,15 @@ object Centrality {
     * (self-pairs excluded; the upper-bound property is asserted in the
     * spec against true BFS distances). */
   def landmarkDistances(edges: DataFrame, landmarks: Int = 4, maxHops: Int = 6, numParts: Int = 0): DataFrame = {
-    val dist = landmarkBfs(edges, landmarks, maxHops, numParts)
+    require(landmarks > 0, s"landmarks must be positive: $landmarks")
+    val sym = symmetrize(edges, numParts)
+    val seeds = sym
+      .select(col("src").as("node"))
+      .distinct()
+      .orderBy(md5(col("node")), col("node"))
+      .limit(landmarks)
+    val dist = bfsDistances(sym, maxHops, seeds = Some(seeds)).localCheckpoint()
+    sym.unpersist(false)
     val du = dist.select(col("s").as("l"), col("v").as("a"), col("hops").as("ha"))
     val dv = dist.select(col("s").as("l"), col("v").as("b"), col("hops").as("hb"))
     du
@@ -144,38 +152,6 @@ object Centrality {
       .select(col("a").as("concept_a"), col("b").as("concept_b"), col("est_hops"))
       .localCheckpoint()
   }
-
-  /** The landmark-distance ARTIFACT: (s = landmark, v, hops) for the k
-    * smallest-md5 landmarks — the relation a real deployment persists per
-    * corpus epoch (landmarks × nodes, never nodes²) and serves pair
-    * queries from. [[landmarkDistances]] materializes the all-pairs tail
-    * on top (fine at dictionary grain); past that, batch-query via
-    * [[landmarkDistanceQueries]]. */
-  def landmarkBfs(edges: DataFrame, landmarks: Int, maxHops: Int, numParts: Int = 0): DataFrame = {
-    require(landmarks > 0, s"landmarks must be positive: $landmarks")
-    val sym = symmetrize(edges, numParts)
-    val seeds = sym
-      .select(col("src").as("node"))
-      .distinct()
-      .orderBy(md5(col("node")), col("node"))
-      .limit(landmarks)
-    val dist = bfsDistances(sym, maxHops, seeds = Some(seeds)).localCheckpoint()
-    sym.unpersist(false)
-    dist
-  }
-
-  /** Answer a BATCH of pair queries (a, b) against the persisted landmark
-    * artifact: two hash joins on node + a min partial-agg — cost scales
-    * with the query batch (× landmarks), never with nodes². Pairs with no
-    * shared in-bound landmark are absent (unreachable within the sketch's
-    * horizon). */
-  def landmarkDistanceQueries(dist: DataFrame, pairs: DataFrame): DataFrame =
-    dist
-      .select(col("s").as("l"), col("v").as("a"), col("hops").as("ha"))
-      .join(pairs, Seq("a"))
-      .join(dist.select(col("s").as("l"), col("v").as("b"), col("hops").as("hb")), Seq("l", "b"))
-      .groupBy("a", "b")
-      .agg(min(col("ha") + col("hb")).as("est_hops"))
 
   /** Exact betweenness centrality (Brandes 2001) within `maxHops`, in
     * fixed-point arithmetic so the DuckDB oracle reproduces every score

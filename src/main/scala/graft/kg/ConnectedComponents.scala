@@ -13,8 +13,10 @@ import org.apache.spark.storage.StorageLevel
   *    converges in O(log n) rounds REGARDLESS of graph diameter, so a
   *    pathological chain is as cheap as a star. Each round is two
   *    shuffle-aggregations + joins; hub skew (a hot concept linked from
-  *    millions of surfaces) is absorbed by map-side partial MIN aggregation
-  *    and AQE skew-join splitting.
+  *    millions of surfaces) is absorbed by map-side partial MIN
+  *    aggregation. The relink joins are join-on-aggregate, which AQE's
+  *    skew rule cannot split (PERF.md §3), so a hub's partition remains
+  *    one straggler task per round.
   *  - `runPropagation`: simple min-label propagation, O(diameter) rounds —
   *    cheaper per round for the tiny-diameter dictionary graphs the linking
   *    step produces, with a salted two-level neighbour-min so hub updates
@@ -55,29 +57,12 @@ object ConnectedComponents {
     ids.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
   }
 
-  /** Alternating star contraction. `edges`: string columns (src, dst).
-    *
-    * `skewHardened`: materialize (localCheckpoint) each round's per-node
-    * minimum BEFORE the relink join. The star joins are join-on-aggregate —
-    * a shape AQE's skew rule can never split (splitting the aggregate's
-    * partition would break group atomicity), so a hub holding a large
-    * fraction of all edges serializes the relink into one straggler task.
-    * Materializing the (one-row-per-key) aggregate turns the join into the
-    * canonical shuffle⋈shuffle shape, and AQE then splits the hub partition
-    * (`SortMergeJoin(skew=true)` / `AQEShuffleRead coalesced and skewed`,
-    * CcBench skew leg: 3.6x faster per round at a 50%-of-edges hub). Off by
-    * default: dictionary-scale graphs pay the extra materialization without
-    * a hub to win it back on. */
+  /** Alternating star contraction. `edges`: string columns (src, dst). */
   def run(
       spark: SparkSession,
       edges: DataFrame,
-      maxIterations: Int = 30,
-      skewHardened: Boolean = false
+      maxIterations: Int = 30
   ): DataFrame = {
-    var matIds = Set.empty[Int] // skewHardened per-round materializations
-    def mat(df: DataFrame): DataFrame = if (skewHardened) {
-      val (out, ids) = cpSer(spark, df); matIds ++= ids; out
-    } else df
     // one lazy checkpoint of the INPUT pair relation: `nodes` and the
     // canonical edge list both derive from it — without this the (possibly
     // expensive) upstream edge plan ran twice (r6 profile: dedup_cluster
@@ -114,7 +99,7 @@ object ConnectedComponents {
       * minimum (neighbours ∪ self). */
     def largeStar(cur: DataFrame): DataFrame = {
       val und = cur.union(cur.select(col("b").as("a"), col("a").as("b"))) // (u, v)
-      val mins = mat(und.groupBy(col("a").as("u")).agg(least(min(col("b")), first(col("a"))).as("m")))
+      val mins = und.groupBy(col("a").as("u")).agg(least(min(col("b")), first(col("a"))).as("m"))
       und
         .join(mins, und("a") === mins("u"))
         .where(col("b") > col("a"))
@@ -126,7 +111,7 @@ object ConnectedComponents {
     /** small-star: every node connects its smaller neighbours (and itself)
       * to their minimum. Canonical edges grouped by the larger endpoint. */
     def smallStar(cur: DataFrame): DataFrame = {
-      val grouped = mat(cur.groupBy(col("b").as("u")).agg(min(col("a")).as("m")))
+      val grouped = cur.groupBy(col("b").as("u")).agg(min(col("a")).as("m"))
       val relinked = cur
         .join(grouped, cur("b") === grouped("u"))
         .select(col("m").as("a"), cur("a").as("b"))
@@ -139,16 +124,15 @@ object ConnectedComponents {
     var iteration = 0
     var converged = false
     while (!converged && iteration < maxIterations) {
-      matIds = Set.empty
       // lazy checkpoint + signature = ONE job per round (the signature
       // action materializes the round), vs eager-checkpoint-then-signature's
       // two — same shuffles, half the per-round scheduling latency
       val (next, nextIds) = cpSer(spark, smallStar(largeStar(e)), eager = false)
       val nextSig = signature(next)
-      // previous round + intra-round skew materializations are fully
-      // consumed once `next` is on disk — drop them so the cached working
-      // set stays at one round, not `iterations` rounds
-      dropCached(spark, eIds ++ matIds)
+      // the previous round is fully consumed once `next` is on disk — drop
+      // it so the cached working set stays at one round, not `iterations`
+      // rounds
+      dropCached(spark, eIds)
       converged = nextSig == sig
       e = next
       eIds = nextIds

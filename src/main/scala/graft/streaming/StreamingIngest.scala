@@ -164,6 +164,32 @@ object StreamingIngest {
         graft.extract.MisraGriesAggregate.mgSketch(col("tok"), k).as("summary"),
         count(lit(1)).as("n"))
 
+  /** Eligible turns -> one [[EdgeEvent]] per turn with at least one
+    * concept present, watermarked on `ts` — the input of both stateful
+    * edge-dedup operators below. */
+  private def edgeEvents(
+      spark: SparkSession,
+      transcripts: DataFrame,
+      concepts: Vector[Concept],
+      watermarkDelay: String
+  ): Dataset[EdgeEvent] = {
+    import spark.implicits._
+    val gaz = new Gazetteer(concepts)
+    transcripts
+      .where(KgPipeline.eligible)
+      .withWatermark("ts", watermarkDelay)
+      .select(
+        col("conv_id"),
+        col("turn_idx").cast("int").as("turn_idx"),
+        graft.extract.expressions.extractOrdinalsPresent(col("text"), gaz).as("ords"),
+        col("ts")
+      )
+      // mention-free turns would otherwise shuffle and create state entries
+      // (the edge-grain explode dropped them implicitly)
+      .where(size(col("ords")) > 0)
+      .as[EdgeEvent]
+  }
+
   /** STATEFUL incremental MENTIONS_CONCEPT emission — the streaming twin of
     * the batch path's distinct-by-construction dedup and the Cypher MERGE
     * contract: per-conversation state (KeyValueGroupedDataset
@@ -181,24 +207,9 @@ object StreamingIngest {
       stateRetentionMs: Long = 10 * 60 * 1000L
   ): Dataset[TripleEdge] = {
     import spark.implicits._
-    val gaz = new Gazetteer(concepts)
     val nC = concepts.length
     val conceptIds = concepts.map(_.wikibaseId).toArray
-    val events = transcripts
-      .where(KgPipeline.eligible)
-      .withWatermark("ts", watermarkDelay)
-      .select(
-        col("conv_id"),
-        col("turn_idx").cast("int").as("turn_idx"),
-        graft.extract.expressions.extractOrdinalsPresent(col("text"), gaz).as("ords"),
-        col("ts")
-      )
-      // mention-free turns would otherwise shuffle and create state entries
-      // (the edge-grain explode dropped them implicitly)
-      .where(size(col("ords")) > 0)
-      .as[EdgeEvent]
-
-    events
+    edgeEvents(spark, transcripts, concepts, watermarkDelay)
       .groupByKey(_.conv_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         (convId: String, batch: Iterator[EdgeEvent], state: GroupState[SeenEdges]) =>
@@ -321,22 +332,8 @@ object StreamingIngest {
       stateRetentionMs: Long = 10 * 60 * 1000L
   ): Dataset[TripleEdge] = {
     import spark.implicits._
-    val gaz = new Gazetteer(concepts)
     val conceptIds = concepts.map(_.wikibaseId).toArray
-    val events = transcripts
-      .where(KgPipeline.eligible)
-      .withWatermark("ts", watermarkDelay)
-      .select(
-        col("conv_id"),
-        col("turn_idx").cast("int").as("turn_idx"),
-        graft.extract.expressions.extractOrdinalsPresent(col("text"), gaz).as("ords"),
-        col("ts")
-      )
-      // mention-free turns would otherwise shuffle and create state entries
-      // (the edge-grain explode dropped them implicitly)
-      .where(size(col("ords")) > 0)
-      .as[EdgeEvent]
-    events
+    edgeEvents(spark, transcripts, concepts, watermarkDelay)
       .groupByKey(_.conv_id)
       .transformWithState(
         new EdgeDedupProcessor(concepts.length, conceptIds, stateRetentionMs),

@@ -65,19 +65,6 @@ class CcSpec extends AnyFunSuite {
     runBoth(hub)
   }
 
-  test("skew-hardened star contraction == plain on hub + chain + random graphs") {
-    import spark.implicits._
-    val rng = new scala.util.Random(13)
-    val hub = (0 until 400).map(i => (s"s$i", "hub")) ++
-      (0 until 200).map(i => (s"c$i", s"c${i + 1}")) ++
-      (0 until 150).map(_ => (s"r${rng.nextInt(40)}", s"r${rng.nextInt(40)}")).filter(e => e._1 != e._2)
-    val edges = hub.toDF("src", "dst")
-    val plain = ConnectedComponents.run(spark, edges).as[(String, String)].collect().toMap
-    val hardened =
-      ConnectedComponents.run(spark, edges, skewHardened = true).as[(String, String)].collect().toMap
-    assert(plain == hardened)
-  }
-
   test("incremental CC == full CC: batch merges components, adds nodes, no-ops") {
     val rng = new scala.util.Random(11)
     val base = (0 until 300).map { _ =>

@@ -101,6 +101,26 @@ class GraphAnalyticsSpec extends AnyFunSuite {
       .toMap
     assert(got === referenceTriangles(tedges))
     assert(got("Q1") === 3L && got("Q5") === 0L && got("Q6") === 0L)
+
+    // planted cliques with an analytic truth: 20 disjoint 10-cliques (each
+    // node closes C(9,2) = 36 triangles), a chain edge from each clique's
+    // last node to the next clique's first, and a hub n0 (inside block 0)
+    // fanned into every other clique's first node. Chain and hub edges
+    // close exactly one more triangle, n0-n9-n10, whose corners count 37.
+    val blocks = 20
+    val planted = (for (b <- 0 until blocks; i <- 0 until 10; j <- (i + 1) until 10)
+      yield (s"n${b * 10 + i}", s"n${b * 10 + j}")) ++
+      (0 until blocks - 1).map(b => (s"n${b * 10 + 9}", s"n${(b + 1) * 10}")) ++
+      (1 until blocks).map(b => ("n0", s"n${b * 10}"))
+    val gotPlanted = graft.kg.Triangles
+      .triangleCounts(planted.toDF("concept_a", "concept_b"))
+      .collect()
+      .map(r => r.getString(0) -> r.getLong(1))
+      .toMap
+    assert(gotPlanted === referenceTriangles(planted))
+    assert(gotPlanted.size === blocks * 10)
+    assert(gotPlanted.filter(_._2 != 36L) === Map("n0" -> 37L, "n9" -> 37L, "n10" -> 37L),
+      "every node at 36 except the n0-n9-n10 seam at 37")
   }
 
   test("triangle counts equal brute-force reference on a pseudo-random graph with a hub") {
@@ -1022,6 +1042,30 @@ class GraphAnalyticsSpec extends AnyFunSuite {
     } yield (f"V$i%02d", f"V$j%02d")).toSeq
     assert(edges.nonEmpty)
     assert(runScc(edges) === kosarajuScc(edges))
+
+    // planted directed 4-cycles in three layers, bridged one-way from cycle
+    // c to cycle c + 10 (layers 0 -> 1 -> 2). Ids are zero-padded so an
+    // upstream cycle's minimum colors its whole downstream chain: only the
+    // chain head settles per outer round, so the peel needs three rounds.
+    val nCyc = 30
+    def v(k: Int) = f"v$k%03d"
+    val cycles = (0 until nCyc * 4).map(k => (v(k), v(k - k % 4 + (k + 1) % 4)))
+    val bridges = (0 until 20).map(c => (v(c * 4), v((c + 10) * 4)))
+    val layered = cycles ++ bridges
+    val got = runScc(layered)
+    assert(got === kosarajuScc(layered))
+    val sccs = got.groupBy(_._2).values.map(_.keys.toSeq)
+    assert(sccs.size === nCyc, "one component per planted cycle")
+    assert(sccs.forall(m => m.size == 4 && m.map(_.drop(1).toInt / 4).distinct.size == 1),
+      "every SCC is exactly one planted 4-cycle")
+    val capped = intercept[IllegalArgumentException](
+      graft.kg.Scc.run(spark, layered.toDF("src", "dst"), maxOuterRounds = 2))
+    assert(capped.getMessage.contains("did not settle within 2 outer rounds"))
+    val cond = graft.kg.Scc
+      .condensation(spark, layered.toDF("src", "dst"))
+      .collect()
+      .map(r => (r.getString(0), r.getString(1)))
+    assert(cond.toSet === bridges.toSet && cond.length === bridges.size, "one condensation edge per bridge")
   }
 
   test("pivot-sampled betweenness: all-pivots equals exact; k pivots match the restricted reference") {

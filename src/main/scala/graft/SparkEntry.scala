@@ -86,16 +86,13 @@ object SparkEntry {
     * so a compacted artifact is cached once, not twice. Returns the
     * artifact and its row count. */
   private def compact(df: DataFrame): (DataFrame, Long) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
     val ck = df.localCheckpoint()
     val n = ck.count()
     val p = partsFor(df.sparkSession, n)
     if (p * 2 > ck.rdd.getNumPartitions) (ck, n)
     else {
-      val ckIds = sc.getPersistentRDDs.keySet.toSet -- before
       val out = ck.repartition(p).localCheckpoint()
-      ckIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+      graft.kg.Rounds.release(ck)
       (out, n)
     }
   }
@@ -138,6 +135,18 @@ object SparkEntry {
       .where(col("n_convs") * 100 >= col("mx") * 85)
       .select("concept_a", "concept_b")
   })
+
+  /** The implication digraph of the backbone (`Scc.implicationDigraph`),
+    * directed by each concept's marginal: the number of conversations that
+    * mention it. */
+  private def implicationDigraph(s: SparkSession, dir: String): DataFrame = {
+    val marginals = mentions(s, dir)
+      .select("conv_id", "concept_id")
+      .distinct()
+      .groupBy("concept_id")
+      .agg(count(lit(1)).as("n"))
+    graft.kg.Scc.implicationDigraph(strongBackbone(s, dir), marginals)
+  }
 
   /** HLL register table over the corpus token stream (≤ 256 rows) — the
     * corpus-epoch cardinality artifact whose estimate seeds sketch_kmv's
@@ -387,28 +396,10 @@ object SparkEntry {
     // rarer to the more frequent concept; equal marginals -> mutual, which
     // is where real cycles come from): forward-backward coloring vs the
     // oracle's mutual-reachability closure
-    "kg_scc" -> ((s, dir) => {
-      val marginals = mentions(s, dir)
-        .select("conv_id", "concept_id")
-        .distinct()
-        .groupBy("concept_id")
-        .agg(count(lit(1)).as("n"))
-      graft.kg.Scc.run(
-        s,
-        graft.kg.Scc.implicationDigraph(strongBackbone(s, dir), marginals))
-    }),
+    "kg_scc" -> ((s, dir) => graft.kg.Scc.run(s, implicationDigraph(s, dir))),
     // condensation DAG of the implication digraph: mutually-implicative
     // clusters rolled up, edges = the specific-to-general hierarchy
-    "kg_condensation" -> ((s, dir) => {
-      val marginals = mentions(s, dir)
-        .select("conv_id", "concept_id")
-        .distinct()
-        .groupBy("concept_id")
-        .agg(count(lit(1)).as("n"))
-      graft.kg.Scc.condensation(
-        s,
-        graft.kg.Scc.implicationDigraph(strongBackbone(s, dir), marginals))
-    }),
+    "kg_condensation" -> ((s, dir) => graft.kg.Scc.condensation(s, implicationDigraph(s, dir))),
     // pivot-sampled betweenness (Brandes-Pich 2007): the documented
     // past-10^5-nodes scale move, exercised and oracle-checked — sources
     // are the 6 hash-min pivots, deterministic in both engines

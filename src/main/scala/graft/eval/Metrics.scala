@@ -24,14 +24,6 @@ final case class ConfusionMatrix(tp: Long = 0, fp: Long = 0, tn: Long = 0, fn: L
       (1 + b2) * p * r / (b2 * p + r)
     }
   }
-  def cohensKappa: Double = {
-    val total = support
-    if (total == 0) return 0.0
-    val observed = (tp + tn).toDouble / total
-    val expected =
-      ((tp + fp).toDouble * (tp + fn) + (fp + tn).toDouble * (fn + tn)) / (total.toDouble * total)
-    if (expected == 1.0) 0.0 else (observed - expected) / (1 - expected)
-  }
   def +(other: ConfusionMatrix): ConfusionMatrix =
     ConfusionMatrix(tp + other.tp, fp + other.fp, tn + other.tn, fn + other.fn)
 }

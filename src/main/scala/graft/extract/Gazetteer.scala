@@ -373,8 +373,6 @@ object Gazetteer {
     }
   }
 
-  def isWordChar(c: Char): Boolean = isWordCp(c)
-
   /** Python/Java \s (Unicode White_Space) plus the hyphen/dash separators.
     * Character.isWhitespace misses the no-break spaces and NEL that the
     * White_Space property (java \s under UNICODE_CHARACTER_CLASS) includes. */

@@ -39,13 +39,4 @@ object ConceptJson {
 
   def loadFile(path: java.nio.file.Path): Concept =
     parse(new String(java.nio.file.Files.readAllBytes(path), "UTF-8"))
-
-  def loadDir(dir: java.nio.file.Path): Vector[Concept] =
-    java.nio.file.Files
-      .list(dir)
-      .iterator
-      .asScala
-      .filter(_.toString.endsWith(".json"))
-      .map(loadFile)
-      .toVector
 }

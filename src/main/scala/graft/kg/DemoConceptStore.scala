@@ -68,8 +68,6 @@ object DemoConceptStore {
   /** Entity-linking dictionary edges: every label surface links to its
     * concept (the broadcast-dictionary scoring step of J7; reference analog
     * /root/reference/scripts/wikidata_linker.py:55-98 searches labels). */
-  def surfaceEdges: Vector[(String, String)] = surfaceEdgesOf(concepts)
-
   def surfaceEdgesOf(cs: Vector[Concept]): Vector[(String, String)] =
     cs.flatMap(c => c.allLabels.map(l => ("surface:" + l.toLowerCase, c.wikibaseId))).distinct
 

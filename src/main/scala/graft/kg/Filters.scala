@@ -54,9 +54,6 @@ object Filters {
     (mentions.where(valid), mentions.where(!valid))
   }
 
-  /** F7 (operations/predict.py:42-54): first passage per distinct text. */
-  def dedupByText(df: DataFrame): DataFrame = df.dropDuplicates("text")
-
   /** F8 (operations/predict.py:259-305): exclude passages whose text was in
     * the training set — broadcast anti-join on a content hash so the big
     * side never shuffles its text column. */

@@ -17,14 +17,12 @@ import org.apache.spark.sql.functions._
   * oracle unrolls a generous fixed number of peel rounds and equality
   * holds because extra rounds past the fixpoint are no-ops.
   *
-  * Scale posture (same discipline as [[ConnectedComponents]]' rounds):
-  * per round one map-side-combined degree aggregate + two semi-joins on
-  * node keys; the working edge set is localCheckpointed serialized each
-  * round (one round cached, lineage truncated); convergence is detected
-  * by a 1-row count action — the only driver-side value per round. Round
-  * count is bounded by the peel depth (≤ graph degeneracy ordering depth,
-  * typically a handful; worst case O(n) on a path). A hot hub is ONE
-  * aggregation key whose partial sums combine map-side.
+  * Scale posture: per round one map-side-combined degree aggregate + two
+  * semi-joins on node keys over the working edge set, a [[Rounds]] round
+  * whose convergence is a count — the only driver-side value per round.
+  * Round count is bounded by the peel depth (≤ graph degeneracy ordering
+  * depth, typically a handful; worst case O(n) on a path). A hot hub is
+  * ONE aggregation key whose partial sums combine map-side.
   */
 object KCore {
 
@@ -39,34 +37,21 @@ object KCore {
         greatest(col("concept_a"), col("concept_b")).as("b"))
       .where(col("a") =!= col("b"))
       .distinct()
-    var und = canon
-      .select(col("a").as("src"), col("b").as("dst"))
-      .union(canon.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
-
-    var prevEdges = und.count()
-    var rounds = 0
-    var converged = prevEdges == 0L
-    while (!converged && rounds < maxRounds) {
-      val deg = und.groupBy("src").agg(count(lit(1)).as("deg"))
-      val keep = deg.where(col("deg") >= k).select("src")
-      val next = und
+    // a non-fixpoint edge set is not the k-core but a superset of it;
+    // maxRounds only bounds pathological inputs (the peel depth is ≤ the
+    // degeneracy ordering depth in practice)
+    val und = Rounds.untilStable(
+      canon
+        .select(col("a").as("src"), col("b").as("dst"))
+        .union(canon.select(col("b").as("src"), col("a").as("dst"))),
+      maxRounds)(_.count())(n =>
+      s"k-core peeling did not converge within $maxRounds rounds ($n edges remain); raise maxRounds") { und =>
+      val keep = und.groupBy("src").agg(count(lit(1)).as("deg")).where(col("deg") >= k).select("src")
+      und
         .join(keep, Seq("src"), "left_semi")
         .join(keep.select(col("src").as("dst")), Seq("dst"), "left_semi")
         .select("src", "dst")
-        .localCheckpoint()
-      val n = next.count()
-      converged = n == prevEdges
-      prevEdges = n
-      und = next
-      rounds += 1
     }
-    // a non-fixpoint edge set is not the k-core — fail loudly rather than
-    // silently returning a superset (maxRounds only bounds pathological
-    // inputs; the peel depth is ≤ the degeneracy ordering depth in practice)
-    require(
-      converged,
-      s"k-core peeling did not converge within $maxRounds rounds ($prevEdges edges remain); raise maxRounds")
     und
       .groupBy(col("src"))
       .agg(count(lit(1)).cast("long").as("deg"))

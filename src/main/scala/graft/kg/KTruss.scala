@@ -24,9 +24,8 @@ import org.apache.spark.sql.functions._
   * Scale posture: each round is ONE degree-ordered triangle enumeration
   * ([[Triangles.triangleEdges]] — the audited O(m^1.5) wedge bound, hubs
   * cost nothing at wedge time) + one map-side-combined support aggregate
-  * + one semi-join; the working edge set is localCheckpointed serialized
-  * per round (one round cached, lineage truncated) and convergence is a
-  * 1-row count action. Production truss engines decrement supports
+  * + one semi-join over the working edge set, a [[Rounds]] round whose
+  * convergence is a count. Production truss engines decrement supports
   * instead of recomputing, but decrement state is mutable and
   * order-sensitive; recompute-per-round keeps every round a pure
   * deterministic Dataset transform, and the round count is bounded by
@@ -42,34 +41,19 @@ object KTruss {
     *         (≥ k−2 by construction); concept_a < concept_b. */
   def kTruss(edges: DataFrame, k: Int, maxRounds: Int = 100): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3 (support threshold k-2 >= 1); got $k")
-    var e = edges
-      .select(
-        least(col("concept_a"), col("concept_b")).as("a"),
-        greatest(col("concept_a"), col("concept_b")).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
-
-    var prevEdges = e.count()
-    var rounds = 0
-    var converged = prevEdges == 0L
-    var support = supportOf(e)
-    while (!converged && rounds < maxRounds) {
-      val keep = support.where(col("sup") >= k - 2).select("a", "b")
-      val next = e.join(keep, Seq("a", "b"), "left_semi").localCheckpoint()
-      val n = next.count()
-      converged = n == prevEdges
-      prevEdges = n
-      e = next
-      if (!converged) support = supportOf(e)
-      rounds += 1
-    }
-    require(
-      converged,
-      s"k-truss peeling did not converge within $maxRounds rounds ($prevEdges edges remain); raise maxRounds")
-    // support at the fixpoint: the last supportOf ran on an edge set equal
-    // to the final one, so its rows ARE the within-truss supports
-    e.join(support, Seq("a", "b"))
+    val e = Rounds.untilStable(
+      edges
+        .select(
+          least(col("concept_a"), col("concept_b")).as("a"),
+          greatest(col("concept_a"), col("concept_b")).as("b"))
+        .where(col("a") =!= col("b"))
+        .distinct(),
+      maxRounds)(_.count())(n =>
+      s"k-truss peeling did not converge within $maxRounds rounds ($n edges remain); raise maxRounds")(
+      e => e.join(supportOf(e).where(col("sup") >= k - 2).select("a", "b"), Seq("a", "b"), "left_semi"))
+    // at the fixpoint no edge peels, so the supports over the final edge set
+    // are the within-truss supports
+    e.join(supportOf(e), Seq("a", "b"))
       .select(col("a").as("concept_a"), col("b").as("concept_b"), col("sup").as("support"))
   }
 

@@ -32,10 +32,9 @@ import org.apache.spark.sql.functions._
   * Every phase is the audited iterate-join shape: static edge relation
   * filtered to the active set per outer round, per inner round ONE
   * SHUFFLE_HASH join exchanging only the (node, label) vector + a
-  * min/exists partial-agg, serialized localCheckpoint lineage truncation.
-  * Inner fixpoints are detected by a 1-row change count; the outer loop
-  * raises LOUDLY on maxRounds exhaustion ([[KCore]]'s posture) instead of
-  * returning a partial assignment.
+  * min/exists partial-agg. Each round is a [[Rounds]] round whose count is
+  * its one action; every loop, inner and outer, raises LOUDLY at its cap
+  * ([[KCore]]'s posture) instead of returning a partial assignment.
   *
   * Scale posture: label relations are node-grain (dictionary-sized here —
   * the corpus enters only through pre-aggregated co-occurrence counts),
@@ -73,7 +72,7 @@ object Scc {
     // its own edge relation, and the two endpoint joins below then read the
     // cache instead of re-running the (possibly expensive) digraph plan —
     // the kg_condensation query recomputed the marginals joins post-SCC
-    val ein = edges.localCheckpoint(false)
+    val ein = Rounds.checkpoint(edges)
     val scc = run(spark, ein)
     ein
       .join(scc.select(col("node").as("src"), col("scc_id").as("scc_src")), Seq("src"))
@@ -84,6 +83,8 @@ object Scc {
   }
 
   /** @param edges directed edges (src, dst); self-loops ignored.
+    * @param maxOuterRounds cap on the trim + FW-BW rounds
+    * @param maxInnerRounds cap on each inner phase: trim, forward, backward
     * @return (node, scc_id) for every node appearing in `edges`,
     *         scc_id = min node id of the component. */
   def run(
@@ -105,6 +106,10 @@ object Scc {
     finally spark.conf.set(cpKey, cpPrev)
   }
 
+  /** An outer round's state: the unassigned nodes and the edges between
+    * them, the assignment so far and the number of unassigned nodes. */
+  private final case class Part(active: DataFrame, edges: DataFrame, settled: DataFrame, left: Long)
+
   private def runInner(
       spark: SparkSession,
       edges: DataFrame,
@@ -112,134 +117,114 @@ object Scc {
       maxInnerRounds: Int
   ): DataFrame = {
     import spark.implicits._
-    // Job-count discipline (r6): every fixpoint round below runs exactly ONE
-    // Spark job — each round's relation is LAZILY localCheckpointed (logical
-    // plan truncated immediately, physical planning done here under the
-    // constraint-propagation override) and the round's loop-control count is
-    // the action that materializes it. The r5 shape ran 2-3 jobs per round
-    // (eager checkpoint + separate convergence count) — at dictionary grain
-    // that was 175+ driver-bound jobs per SCC run (~10 ms planning gap each,
-    // half the query's wall clock); at production grain the fusion saves the
-    // same per-round scheduling latency without changing any shuffle.
-    val e0 = edges
-      .select(col("src").cast("string").as("src"), col("dst").cast("string").as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint() // eager: the input subtree (digraph build) runs once
-    val allNodes = e0.select(col("src").as("node"))
-      .union(e0.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint(false)
+    // Each round's relation is a lazy Rounds checkpoint (logical plan cut at
+    // once, physical planning done here under the constraint-propagation
+    // override), and the round's loop-control count is the one action that
+    // materializes it.
+    //
+    // `settled` grows as a lazy union whose pieces read the rounds that
+    // settled them, so the rounds stay cached until the result has
+    // materialized; then all of them are released.
+    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def cp(df: DataFrame): DataFrame = { val ck = Rounds.checkpoint(df); rounds += ck; ck }
+    def inner(phase: String)(s: Any) = s"SCC $phase phase did not converge within $maxInnerRounds rounds; raise maxInnerRounds"
 
-    var active = allNodes // nodes not yet assigned
-    var activeEdges = e0
-    var settled: DataFrame = Seq.empty[(String, String)].toDF("node", "scc_id")
-    var outer = 0
-    var activeCount = active.count()
+    def restrict(activeEdges: DataFrame, active: DataFrame): DataFrame =
+      cp(
+        activeEdges
+          .join(active.select(col("node").as("src")), Seq("src"), "left_semi")
+          .join(active.select(col("node").as("dst")), Seq("dst"), "left_semi")
+          .select("src", "dst"))
 
-    while (activeCount > 0) {
-      outer += 1
-      require(
-        outer <= maxOuterRounds,
-        s"SCC coloring did not settle within $maxOuterRounds outer rounds ($activeCount nodes left)")
+    // ---- trim phase: a node with no incoming or no outgoing ACTIVE edge is
+    // a singleton SCC (scc_id = itself) — peel those iteratively before
+    // coloring. FW-BW coloring settles only each color root's SCC per outer
+    // round, which degenerates to one-node-per-round on DAG-like regions
+    // (and the implication digraph is mostly acyclic); trim settles those
+    // regions at one count per round, eating the graph from both ends
+    // at once, and leaves only the cyclic cores to the coloring — the
+    // published trim-FWBW composition (Slota et al.).
+    def trim(p: Part): Part =
+      Rounds.fixpoint((p, false), maxInnerRounds)(s => s._2 || s._1.left == 0, inner("trim")) { case (s, _) =>
+        val keep = cp(
+          s.active
+            .join(s.edges.select(col("dst").as("node")), Seq("node"), "left_semi")
+            .join(s.edges.select(col("src").as("node")), Seq("node"), "left_semi"))
+        val kept = keep.count()
+        if (kept == s.left) (s, true)
+        else {
+          val singles = s.active.join(keep, Seq("node"), "left_anti").select(col("node"), col("node").as("scc_id"))
+          val settled = cp(s.settled.union(singles))
+          (Part(keep, restrict(s.edges, keep), settled, kept), false)
+        }
+      }._1
 
-      // ---- trim phase: a node with no incoming or no outgoing ACTIVE edge
-      // is a singleton SCC (scc_id = itself) — peel those iteratively
-      // before coloring. FW-BW coloring settles only each color root's SCC
-      // per outer round, which degenerates to one-node-per-round on
-      // DAG-like regions (and the implication digraph is mostly acyclic);
-      // trim settles those regions at ONE cheap job per round, eating the
-      // graph from both ends at once, and leaves only the cyclic cores to
-      // the coloring — the published trim-FWBW composition (Slota et al.),
-      // here enacted rather than only cited as the drop-in mitigation.
-      var trimmed = 1L
-      var trimRounds = 0
-      while (trimmed > 0 && activeCount > 0) {
-        trimRounds += 1
-        require(trimRounds <= maxInnerRounds, s"SCC trim phase exceeded $maxInnerRounds rounds")
-        val keep = active
-          .join(activeEdges.select(col("dst").as("node")), Seq("node"), "left_semi")
-          .join(activeEdges.select(col("src").as("node")), Seq("node"), "left_semi")
-          .localCheckpoint(false)
-        val keepCount = keep.count() // materializes the round — its one job
-        trimmed = activeCount - keepCount
-        if (trimmed > 0) {
-          val singles = active
-            .join(keep, Seq("node"), "left_anti")
-            .select(col("node"), col("node").as("scc_id"))
-          settled = settled.union(singles).localCheckpoint(false)
-          active = keep
-          activeEdges = activeEdges
-            .join(active.select(col("node").as("src")), Seq("src"), "left_semi")
-            .join(active.select(col("node").as("dst")), Seq("dst"), "left_semi")
-            .select("src", "dst")
-            .localCheckpoint(false)
-          activeCount = keepCount
+    // ---- forward phase: min reaching id to fixpoint. Color starts as a
+    // projection of the materialized active set; the carry-forward rows are
+    // tagged 0, neighbour contributions 1, so ONE aggregation yields both the
+    // new color (min over all) and the old color (min over tag-0 rows) — the
+    // convergence test is then a filter over the materialized round, not a
+    // join back to the previous color.
+    def forward(p: Part): DataFrame =
+      Rounds.fixpoint((p.active.select(col("node"), col("node").as("c")), 1L), maxInnerRounds)(
+        _._2 == 0, inner("forward")) { case (color, _) =>
+        val next = cp(
+          color
+            .join(p.edges, col("node") === col("src"))
+            .select(col("dst").as("node"), col("c"), lit(1).as("tag"))
+            .union(color.select(col("node"), col("c"), lit(0).as("tag")))
+            .groupBy("node")
+            .agg(min(col("c")).as("c"), min(when(col("tag") === 0, col("c"))).as("c_old")))
+        (next.select(col("node"), col("c")), next.where(col("c") =!= col("c_old")).count())
+      }._1
+
+    // ---- backward phase: reverse-BFS from the roots (c(r) = r) inside
+    // their color class; the frontier carries the color, so each reached
+    // node's SCC id is its c. `reached` accumulates as a lazy union of the
+    // materialized frontier checkpoints — recomputing it is a cached-block
+    // scan, never a join.
+    def backward(color: DataFrame, activeEdges: DataFrame): DataFrame = {
+      val roots = color.where(col("node") === col("c"))
+      Rounds.fixpoint((roots, roots, roots.count()), maxInnerRounds)(_._3 == 0, inner("backward")) {
+        case (reached, frontier, _) =>
+          val step = frontier
+            .join(activeEdges, col("node") === col("dst"))
+            .select(col("src").as("node"), col("c"))
+            .join(color.withColumnRenamed("c", "c_node"), Seq("node"))
+            .where(col("c") === col("c_node")) // stay inside the color class
+            .select("node", "c")
+            .distinct()
+          val next = cp(step.join(reached, Seq("node", "c"), "left_anti"))
+          val n = next.count()
+          (if (n > 0) cp(reached.union(next)) else reached, next, n)
+      }._1
+    }
+
+    try {
+      val e0 = cp(
+        edges
+          .select(col("src").cast("string").as("src"), col("dst").cast("string").as("dst"))
+          .where(col("src") =!= col("dst"))
+          .distinct())
+      val allNodes = cp(
+        e0.select(col("src").as("node"))
+          .union(e0.select(col("dst").as("node")))
+          .distinct())
+      val start = Part(allNodes, e0, Seq.empty[(String, String)].toDF("node", "scc_id"), allNodes.count())
+      val done = Rounds.fixpoint(start, maxOuterRounds)(
+        _.left == 0,
+        p => s"SCC coloring did not settle within $maxOuterRounds outer rounds (${p.left} nodes left)") { p0 =>
+        val p = trim(p0)
+        if (p.left == 0) p
+        else {
+          val newlySettled = backward(forward(p), p.edges).select(col("node"), col("c").as("scc_id"))
+          val settled = cp(p.settled.union(newlySettled))
+          val active = cp(p.active.join(newlySettled, Seq("node"), "left_anti"))
+          Part(active, restrict(p.edges, active), settled, active.count())
         }
       }
-      if (activeCount > 0) {
-
-      // ---- forward phase: min reaching id to fixpoint --------------------
-      // color starts as a projection of the materialized active set (cheap
-      // on every re-read — no checkpoint needed)
-      // the carry-forward rows are tagged 0, neighbour contributions 1, so
-      // ONE aggregation yields both the new color (min over all) and the
-      // old color (min over tag-0 rows) — the convergence test is then a
-      // filter over the materialized round, not a join back to the
-      // previous color (one fewer join + broadcast build per round)
-      var color = active.select(col("node"), col("node").as("c"))
-      var changed = 1L
-      var inner = 0
-      while (changed > 0) {
-        inner += 1
-        require(inner <= maxInnerRounds, s"SCC forward phase exceeded $maxInnerRounds rounds")
-        val next = color
-          .join(activeEdges, col("node") === col("src"))
-          .select(col("dst").as("node"), col("c"), lit(1).as("tag"))
-          .union(color.select(col("node"), col("c"), lit(0).as("tag")))
-          .groupBy("node")
-          .agg(min(col("c")).as("c"), min(when(col("tag") === 0, col("c"))).as("c_old"))
-          .localCheckpoint(false)
-        // this count materializes `next` — the round's one job
-        changed = next.where(col("c") =!= col("c_old")).count()
-        color = next.select(col("node"), col("c"))
-      }
-
-      // ---- backward phase: reverse-BFS from roots inside their color ----
-      // seed: the roots themselves (c(r) = r); frontier carries the color,
-      // expansion stays within it, so each reached node's SCC id is its c.
-      // `reached` accumulates as a lazy union of the materialized frontier
-      // checkpoints — recomputing it is a cached-block scan, never a join.
-      val roots = color.where(col("node") === col("c"))
-      var reached = roots
-      var frontier = roots
-      var frontierCount = frontier.count()
-      while (frontierCount > 0) {
-        val step = frontier
-          .join(activeEdges, col("node") === col("dst"))
-          .select(col("src").as("node"), col("c"))
-          .join(color.withColumnRenamed("c", "c_node"), Seq("node"))
-          .where(col("c") === col("c_node")) // stay inside the color class
-          .select("node", "c")
-          .distinct()
-        frontier = step.join(reached, Seq("node", "c"), "left_anti").localCheckpoint(false)
-        frontierCount = frontier.count() // materializes the frontier — one job
-        if (frontierCount > 0) reached = reached.union(frontier).localCheckpoint(false)
-      }
-
-      val newlySettled = reached.select(col("node"), col("c").as("scc_id"))
-      settled = settled.union(newlySettled).localCheckpoint(false)
-      active = active.join(newlySettled, Seq("node"), "left_anti").localCheckpoint(false)
-      activeEdges = activeEdges
-        .join(active.select(col("node").as("src")), Seq("src"), "left_semi")
-        .join(active.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .select("src", "dst")
-        .localCheckpoint(false)
-      activeCount = active.count() // materializes the new active set
-      } // end cyclic-core FW-BW (skipped when trim finished the graph)
-    }
-    // consumers (condensation) reference the assignment twice — hand back a
-    // truncated plan whose first action materializes it once
-    settled.localCheckpoint(false)
+      // consumers (condensation) reference the assignment twice
+      Rounds.materialize(done.settled)
+    } finally rounds.foreach(Rounds.release)
   }
 }

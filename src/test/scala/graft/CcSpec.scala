@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.kg.ConnectedComponents
 
-/** Connected components: star-contraction vs min-propagation vs a local
-  * union-find oracle, including the diameter-pathological chain. */
+/** Connected components: star contraction vs a local union-find oracle,
+  * including the diameter-pathological chain. */
 class CcSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -26,21 +26,13 @@ class CcSpec extends AnyFunSuite {
     members.flatMap { case (_, ms) => val m = ms.min; ms.map(_ -> m) }.toMap
   }
 
-  private def runBoth(edges: Seq[(String, String)]): Unit = {
-    val df = edges.toDF("src", "dst")
-    val want = unionFind(edges)
+  private def matchesUnionFind(edges: Seq[(String, String)]): Unit = {
     val star = ConnectedComponents
-      .run(spark, df)
+      .run(spark, edges.toDF("src", "dst"))
       .collect()
       .map(r => r.getString(0) -> r.getString(1))
       .toMap
-    assert(star == want, "star contraction")
-    val prop = ConnectedComponents
-      .runPropagation(spark, df, maxIterations = 2000)
-      .collect()
-      .map(r => r.getString(0) -> r.getString(1))
-      .toMap
-    assert(prop == want, "min propagation")
+    assert(star == unionFind(edges), "star contraction")
   }
 
   test("long chain (diameter 300) converges under star contraction in O(log n) rounds") {
@@ -57,12 +49,12 @@ class CcSpec extends AnyFunSuite {
       val cluster = rng.nextInt(12)
       (s"c$cluster-${rng.nextInt(30)}", s"c$cluster-${rng.nextInt(30)}")
     }.filter(e => e._1 != e._2)
-    runBoth(edges)
+    matchesUnionFind(edges)
   }
 
   test("hub graph (one concept linked from many surfaces)") {
     val hub = (0 until 500).map(i => (s"surface:$i", "Q1")) ++ Seq(("Q1", "Q2"), ("x", "y"))
-    runBoth(hub)
+    matchesUnionFind(hub)
   }
 
   test("incremental CC == full CC: batch merges components, adds nodes, no-ops") {
@@ -113,12 +105,8 @@ class CcSpec extends AnyFunSuite {
   }
 
   test("a graph wider than the round cap fails loudly instead of returning unconverged labels") {
-    // 40-node path: propagation needs 40 rounds, star contraction more than 1
+    // 40-node path: star contraction needs more than 1 round
     val path = (0 until 39).map(i => (f"p$i%02d", f"p${i + 1}%02d")).toDF("src", "dst")
-    val prop = intercept[IllegalArgumentException] {
-      ConnectedComponents.runPropagation(spark, path, maxIterations = 25).collect()
-    }
-    assert(prop.getMessage.contains("did not converge within 25 rounds"))
     val star = intercept[IllegalArgumentException] {
       ConnectedComponents.run(spark, path, maxIterations = 1).collect()
     }

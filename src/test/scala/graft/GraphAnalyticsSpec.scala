@@ -439,6 +439,19 @@ class GraphAnalyticsSpec extends AnyFunSuite {
     assert(got.nonEmpty, "hub graph should retain a 3-core")
   }
 
+  test("k-core and k-truss peeling raise at their round caps") {
+    // K4 + a tail Q4-T1-T2-T3: k-core peels it a link a round, k-truss in
+    // one round (its edges close no triangle); either needs a second round
+    // to see the edge set stable
+    val edges = Seq(
+      ("Q1", "Q2"), ("Q1", "Q3"), ("Q1", "Q4"), ("Q2", "Q3"), ("Q2", "Q4"), ("Q3", "Q4"),
+      ("Q4", "T1"), ("T1", "T2"), ("T2", "T3")).toDF("concept_a", "concept_b")
+    val core = intercept[IllegalArgumentException](graft.kg.KCore.kCore(edges, k = 2, maxRounds = 1).collect())
+    assert(core.getMessage.contains("k-core peeling did not converge within 1 rounds"))
+    val truss = intercept[IllegalArgumentException](graft.kg.KTruss.kTruss(edges, k = 3, maxRounds = 1).collect())
+    assert(truss.getMessage.contains("k-truss peeling did not converge within 1 rounds"))
+  }
+
   test("co-occurrence lift: exact quantized values; chance rate divided out") {
     // convs: c1{A,B} c2{A,B} c3{A,C} c4{B} — duplicate mention rows must
     // not inflate counts (per-conv distinct)
@@ -1066,6 +1079,49 @@ class GraphAnalyticsSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getString(0), r.getString(1)))
     assert(cond.toSet === bridges.toSet && cond.length === bridges.size, "one condensation edge per bridge")
+  }
+
+  test("SCC trim and forward phases raise at the inner round cap") {
+    // a chain trims from both ends, two nodes a round: two rounds
+    val chain = Seq(("A", "B"), ("B", "C"), ("C", "D")).toDF("src", "dst")
+    val trim = intercept[IllegalArgumentException](graft.kg.Scc.run(spark, chain, maxInnerRounds = 1))
+    assert(trim.getMessage.contains("SCC trim phase did not converge within 1 rounds"))
+    // a 6-cycle trims nothing (one round); its minimum takes 5 rounds to
+    // color the cycle forward
+    val cycle = (0 until 6).map(i => (s"N$i", s"N${(i + 1) % 6}")).toDF("src", "dst")
+    val fwd = intercept[IllegalArgumentException](graft.kg.Scc.run(spark, cycle, maxInnerRounds = 2))
+    assert(fwd.getMessage.contains("SCC forward phase did not converge within 2 rounds"))
+  }
+
+  test("fixpoint loops leave the same cached rounds behind however many rounds they run") {
+    import org.apache.spark.sql.DataFrame
+    // a 4-clique (both directions) with a one-way tail of n links: k-core
+    // and SCC's trim peel the tail one link a round
+    val clique = for (a <- 1 to 4; b <- 1 to 4 if a != b) yield (s"Q$a", s"Q$b")
+    def withTail(n: Int) = clique ++ (1 to n).map(i => (if (i == 1) "Q4" else s"T${i - 1}", s"T$i"))
+    val sc = spark.sparkContext
+    // persisted RDDs a call leaves behind once its result is collected. The
+    // registry holds them weakly, so a collection first drops those nothing
+    // references any more; what remains is what the result keeps cached
+    def residue(run: Seq[(String, String)] => DataFrame, edges: Seq[(String, String)]): Int = {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val out = run(edges)
+      out.collect()
+      System.gc()
+      val left = (sc.getPersistentRDDs.keySet.toSet -- before).size
+      assert(out.columns.nonEmpty) // keeps `out` reachable through the count
+      left
+    }
+    val loops: Seq[(String, Seq[(String, String)] => DataFrame)] = Seq(
+      "connected components" -> (es => graft.kg.ConnectedComponents.run(spark, es.toDF("src", "dst"))),
+      "SCC" -> (es => graft.kg.Scc.run(spark, es.toDF("src", "dst"))),
+      "k-core" -> (es => graft.kg.KCore.kCore(es.toDF("concept_a", "concept_b"), k = 2)),
+      "k-truss" -> (es => graft.kg.KTruss.kTruss(es.toDF("concept_a", "concept_b"), k = 3)))
+    loops.foreach { case (name, run) =>
+      val short = residue(run, withTail(2))
+      val long = residue(run, withTail(8))
+      assert(long <= short, s"$name: $short cached RDDs left after a 2-link tail, $long after an 8-link tail")
+    }
   }
 
   test("pivot-sampled betweenness: all-pivots equals exact; k pivots match the restricted reference") {

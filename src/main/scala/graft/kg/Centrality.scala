@@ -2,7 +2,6 @@ package graft.kg
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Harmonic closeness centrality over the concept co-occurrence graph —
   * "which concepts sit nearest to everything else", the distance-based
@@ -21,65 +20,32 @@ import org.apache.spark.storage.StorageLevel
   * every source + MIN rollup + the same sum) reproduces the scores
   * bit-for-bit.
   *
-  * The all-sources BFS is one multi-source frontier relation dist(src,
-  * node, hops) seeded with every node at distance 0 — N simultaneous BFS
-  * runs sharing each round's single join + min-aggregate, not N sequential
-  * traversals.
+  * The all-sources BFS is one multi-source frontier relation dist(s, v, d)
+  * seeded with every node at distance 0 — N simultaneous BFS runs sharing
+  * each round's single join + min-aggregate, not N sequential traversals;
+  * its rounds are [[ShortestPaths.relax]] at hop cost 1.
   *
   * Scale posture: dist is O(nodes * reach) rows — DICTIONARY-squared, not
   * corpus-scale (the co-occurrence node set is the concept dictionary; the
   * corpus only ever enters through the already-aggregated edge weights).
-  * The static edge list is cached columnar and hash-partitioned on src, so
-  * each round exchanges only the frontier; the min-dist merge is a
-  * union + partial-agg min (no outer join). Past ~10^5 dictionary nodes
-  * the standard move is pivoting: sample K sources (hash-pick, still
-  * deterministic) for an unbiased centrality estimate — the loop body is
-  * unchanged, only the seed relation shrinks.
+  * Every entry point here runs over the static edge cache of [[Rounds]].
+  * Past ~10^5 dictionary nodes the standard move is pivoting: sample K
+  * sources (hash-pick, still deterministic) for an unbiased centrality
+  * estimate — the loop body is unchanged, only the seed relation shrinks.
   */
 object Centrality {
 
   val Scale: Long = 1000000L
 
-  /** Symmetrized, src-partitioned, materialized edge cache shared by every
-    * traversal here; callers must unpersist the returned frame.
-    * `numParts` derives the cache's partition count from the edge count
-    * (~500k edges per partition; see SparkEntry.partsFor) so a
-    * dictionary-sized backbone is 1 partition instead of the session
-    * shuffle-partition constant; 0 = the session constant (legacy). */
-  private def symmetrize(edges: DataFrame, numParts: Int = 0): DataFrame = {
-    val nP =
-      if (numParts > 0) numParts
-      else edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val sym = edges
-      .select(col("concept_a").as("src"), col("concept_b").as("dst"))
-      .union(edges.select(col("concept_b").as("src"), col("concept_a").as("dst")))
-      .repartition(nP, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    sym.count()
-    sym
-  }
+  /** Runs `body` over the both-directions (src, dst) edge cache. */
+  private def overEdges(edges: DataFrame, numParts: Int)(body: DataFrame => DataFrame): DataFrame =
+    Rounds.withStaticEdges(GraphStats.bothDirections(edges), numParts, "src")(body)
 
-  /** All-pairs bounded-hop distances: one multi-source frontier relation
-    * (s, v, hops) seeded with every node at distance 0 — N simultaneous BFS
-    * runs sharing each round's single join + min partial-aggregate. */
-  private def bfsDistances(sym: DataFrame, maxHops: Int, seeds: Option[DataFrame] = None): DataFrame = {
+  /** Bounded-hop distances (s, v, d) from every node of `sym`, or from
+    * `seeds`. */
+  private def hopDistances(sym: DataFrame, maxHops: Int, seeds: Option[DataFrame] = None): DataFrame = {
     val nodes = seeds.getOrElse(sym.select(col("src").as("node")).distinct())
-    var dist = nodes.select(col("node").as("s"), col("node").as("v"), lit(0).as("hops"))
-    for (r <- 1 to maxHops) {
-      val relaxed = sym
-        .join(dist.hint("SHUFFLE_HASH"), sym("src") === dist("v"))
-        .select(col("s"), col("dst").as("v"), (col("hops") + 1).as("hops"))
-      dist = dist
-        .union(relaxed)
-        .groupBy("s", "v")
-        .agg(min(col("hops")).as("hops"))
-      // truncate lineage every 2 rounds: each round references `dist`
-      // TWICE (carry-forward union + relaxation), so a fully lazy loop
-      // doubles the plan tree per round — 2^maxHops stages by round 6
-      // (measured: 35 s on an 11-node sf0.1 backbone, vs ~2 s truncated)
-      if (r % 2 == 0 && r < maxHops) dist = dist.localCheckpoint()
-    }
-    dist
+    ShortestPaths.relax(sym, nodes.select(col("node").as("s"), col("node").as("v"), lit(0).as("d")), maxHops, lit(1))
   }
 
   /** @param edges undirected weighted edges (concept_a, concept_b, n_convs),
@@ -87,16 +53,13 @@ object Centrality {
     *              distance here is hops).
     * @return (concept_id, harm_q) — fixed-point harmonic centrality within
     *         `maxHops`; every node of the edge set carries a row. */
-  def harmonic(edges: DataFrame, maxHops: Int = 6, numParts: Int = 0): DataFrame = {
-    val sym = symmetrize(edges, numParts)
-    val out = bfsDistances(sym, maxHops)
-      .where(col("hops") > 0)
-      .groupBy(col("s").as("concept_id"))
-      .agg(sum(expr(s"$Scale div hops")).as("harm_q"))
-      .localCheckpoint()
-    sym.unpersist(false)
-    out
-  }
+  def harmonic(edges: DataFrame, maxHops: Int = 6, numParts: Int = 0): DataFrame =
+    overEdges(edges, numParts) { sym =>
+      hopDistances(sym, maxHops)
+        .where(col("d") > 0)
+        .groupBy(col("s").as("concept_id"))
+        .agg(sum(expr(s"$Scale div d")).as("harm_q"))
+    }
 
   /** Bounded-hop eccentricity per node — max distance to any node REACHED
     * within `maxHops` (an unreachable pair contributes nothing, the same
@@ -104,15 +67,12 @@ object Centrality {
     * sibling of the diameter/radius corpus summary, which the consumer
     * derives as max/min over this relation. Same multi-source BFS; the
     * dist relation stays dictionary-squared, never corpus-scale. */
-  def eccentricity(edges: DataFrame, maxHops: Int = 6, numParts: Int = 0): DataFrame = {
-    val sym = symmetrize(edges, numParts)
-    val out = bfsDistances(sym, maxHops)
-      .groupBy(col("s").as("concept_id"))
-      .agg(max(col("hops")).as("ecc_hops"))
-      .localCheckpoint()
-    sym.unpersist(false)
-    out
-  }
+  def eccentricity(edges: DataFrame, maxHops: Int = 6, numParts: Int = 0): DataFrame =
+    overEdges(edges, numParts) { sym =>
+      hopDistances(sym, maxHops)
+        .groupBy(col("s").as("concept_id"))
+        .agg(max(col("d")).as("ecc_hops"))
+    }
 
   /** Landmark distance oracle (Potamias et al., CIKM'09): BFS from only k
     * LANDMARK nodes, then estimate every pair's distance as
@@ -124,7 +84,7 @@ object Centrality {
     * time distance oracle past the all-pairs regime: the traversal cost
     * drops from nodes×graph to landmarks×graph (the same economics as
     * pivot-sampled betweenness), the landmark-distance relation
-    * (landmarks × nodes) is the persisted artifact, and a single pair
+    * (landmarks × nodes) is the materialized artifact, and a single pair
     * query is a k-element min over two of its rows. Landmarks are the k
     * smallest-md5 nodes — the deterministic uniform pivot coin both
     * engines reproduce, so even the ESTIMATES are oracle-checkable.
@@ -134,23 +94,25 @@ object Centrality {
     * spec against true BFS distances). */
   def landmarkDistances(edges: DataFrame, landmarks: Int = 4, maxHops: Int = 6, numParts: Int = 0): DataFrame = {
     require(landmarks > 0, s"landmarks must be positive: $landmarks")
-    val sym = symmetrize(edges, numParts)
-    val seeds = sym
-      .select(col("src").as("node"))
-      .distinct()
-      .orderBy(md5(col("node")), col("node"))
-      .limit(landmarks)
-    val dist = bfsDistances(sym, maxHops, seeds = Some(seeds)).localCheckpoint()
-    sym.unpersist(false)
-    val du = dist.select(col("s").as("l"), col("v").as("a"), col("hops").as("ha"))
-    val dv = dist.select(col("s").as("l"), col("v").as("b"), col("hops").as("hb"))
-    du
-      .join(dv, Seq("l"))
-      .where(col("a") < col("b"))
-      .groupBy("a", "b")
-      .agg(min(col("ha") + col("hb")).as("est_hops"))
-      .select(col("a").as("concept_a"), col("b").as("concept_b"), col("est_hops"))
-      .localCheckpoint()
+    val dist = overEdges(edges, numParts) { sym =>
+      val seeds = sym
+        .select(col("src").as("node"))
+        .distinct()
+        .orderBy(md5(col("node")), col("node"))
+        .limit(landmarks)
+      hopDistances(sym, maxHops, seeds = Some(seeds))
+    }
+    val du = dist.select(col("s").as("l"), col("v").as("a"), col("d").as("ha"))
+    val dv = dist.select(col("s").as("l"), col("v").as("b"), col("d").as("hb"))
+    val out = Rounds.materialize(
+      du
+        .join(dv, Seq("l"))
+        .where(col("a") < col("b"))
+        .groupBy("a", "b")
+        .agg(min(col("ha") + col("hb")).as("est_hops"))
+        .select(col("a").as("concept_a"), col("b").as("concept_b"), col("est_hops")))
+    Rounds.release(dist)
+    out
   }
 
   /** Exact betweenness centrality (Brandes 2001) within `maxHops`, in
@@ -175,11 +137,11 @@ object Centrality {
     * stored value an exact integer.
     *
     * Scale posture: each level relation is (sources × frontier) rows —
-    * dictionary-squared like [[bfsDistances]], never corpus-scale. Every
+    * dictionary-squared like [[hopDistances]], never corpus-scale. Every
     * forward step is one join against the cached static edges + one
     * partial-agg sum (sigma fan-in collapses map-side) + one anti-join
     * against the cumulative seen set; every backward step is one join
-    * between adjacent (localCheckpointed) levels. Hop-bounding is the
+    * between adjacent (materialized) levels. Hop-bounding is the
     * published large-graph practice (k-bounded betweenness); past ~10^5
     * dictionary nodes the standard next move is source sampling — the loop
     * body is unchanged, only the seed relation shrinks. `pivots > 0`
@@ -190,62 +152,59 @@ object Centrality {
     * extrapolates by n/k; the raw per-pivot sums are emitted so the
     * consumer's scaling never floors away exactness). Level relations
     * shrink from (nodes × frontier) to (k × frontier). */
-  def betweenness(edges: DataFrame, maxHops: Int = 4, pivots: Int = 0, numParts: Int = 0): DataFrame = {
-    val sym = symmetrize(edges, numParts)
-    val nodes = sym.select(col("src").as("node")).distinct()
-    val sources =
-      if (pivots > 0) nodes.orderBy(md5(col("node")), col("node")).limit(pivots)
-      else nodes
+  def betweenness(edges: DataFrame, maxHops: Int = 4, pivots: Int = 0, numParts: Int = 0): DataFrame =
+    overEdges(edges, numParts) { sym =>
+      val nodes = sym.select(col("src").as("node")).distinct()
+      val sources =
+        if (pivots > 0) nodes.orderBy(md5(col("node")), col("node")).limit(pivots)
+        else nodes
 
-    // forward: levels(t) = (s, v, sigma), nodes first reached at hop t
-    val levels = scala.collection.mutable.ArrayBuffer(
-      sources.select(col("node").as("s"), col("node").as("v"), lit(1L).as("sigma")).localCheckpoint())
-    var seen = levels(0).select("s", "v")
-    for (_ <- 1 to maxHops) {
-      val prev = levels.last
-      val next = sym
-        .join(prev.hint("SHUFFLE_HASH"), sym("src") === prev("v"))
-        .select(col("s"), col("dst").as("v"), col("sigma"))
-        .groupBy("s", "v")
-        .agg(sum(col("sigma")).as("sigma"))
-        .join(seen, Seq("s", "v"), "left_anti")
-        .localCheckpoint()
-      levels += next
-      seen = seen.union(next.select("s", "v")).localCheckpoint()
+      // forward: levels(t) = (s, v, sigma), nodes first reached at hop t
+      val levels = scala.collection.mutable.ArrayBuffer(
+        Rounds.materialize(sources.select(col("node").as("s"), col("node").as("v"), lit(1L).as("sigma"))))
+      var seen = levels(0).select("s", "v")
+      for (_ <- 1 to maxHops) {
+        val prev = levels.last
+        val next = Rounds.materialize(
+          sym
+            .join(prev.hint("SHUFFLE_HASH"), sym("src") === prev("v"))
+            .select(col("s"), col("dst").as("v"), col("sigma"))
+            .groupBy("s", "v")
+            .agg(sum(col("sigma")).as("sigma"))
+            .join(seen, Seq("s", "v"), "left_anti"))
+        levels += next
+        seen = Rounds.materialize(seen.union(next.select("s", "v")))
+      }
+
+      // backward: deltas per level, deepest first (delta at the last level = 0)
+      var deltaNext = levels.last.select(col("s"), col("v"), col("sigma"), lit(0L).as("delta"))
+      var acc = deltaNext.sparkSession.emptyDataFrame
+      var accInit = false
+      for (t <- (maxHops - 1) to 1 by -1) {
+        val succ = deltaNext
+          .select(col("s").as("s2"), col("v").as("w"), col("sigma").as("sigma_w"), col("delta").as("delta_w"))
+        val cur = levels(t)
+        val contrib = sym
+          .join(cur.hint("SHUFFLE_HASH"), sym("src") === cur("v"))
+          .join(succ, col("dst") === col("w") && col("s") === col("s2"))
+          .selectExpr("s", "v", "sigma", s"(sigma * (${Scale}L + delta_w)) div sigma_w AS term")
+          .groupBy("s", "v", "sigma")
+          .agg(sum(col("term")).as("delta"))
+        // nodes of this level with no successor keep delta = 0
+        val deltaCur = Rounds.materialize(
+          cur
+            .join(contrib.select(col("s"), col("v"), col("delta")), Seq("s", "v"), "left")
+            .select(col("s"), col("v"), col("sigma"), coalesce(col("delta"), lit(0L)).as("delta")))
+        val nonzero = deltaCur.where(col("delta") > 0).select("v", "delta")
+        acc = if (accInit) acc.union(nonzero) else { accInit = true; nonzero }
+        deltaNext = deltaCur
+      }
+
+      nodes
+        .join(
+          acc.groupBy(col("v")).agg(sum(col("delta")).as("bc")),
+          nodes("node") === col("v"),
+          "left")
+        .select(col("node").as("concept_id"), coalesce(col("bc"), lit(0L)).as("bc_q"))
     }
-
-    // backward: deltas per level, deepest first (delta at the last level = 0)
-    var deltaNext = levels.last.select(col("s"), col("v"), col("sigma"), lit(0L).as("delta"))
-    var acc = deltaNext.sparkSession.emptyDataFrame
-    var accInit = false
-    for (t <- (maxHops - 1) to 1 by -1) {
-      val succ = deltaNext
-        .select(col("s").as("s2"), col("v").as("w"), col("sigma").as("sigma_w"), col("delta").as("delta_w"))
-      val cur = levels(t)
-      val contrib = sym
-        .join(cur.hint("SHUFFLE_HASH"), sym("src") === cur("v"))
-        .join(succ, col("dst") === col("w") && col("s") === col("s2"))
-        .selectExpr("s", "v", "sigma", s"(sigma * (${Scale}L + delta_w)) div sigma_w AS term")
-        .groupBy("s", "v", "sigma")
-        .agg(sum(col("term")).as("delta"))
-      // nodes of this level with no successor keep delta = 0
-      val deltaCur = cur
-        .join(contrib.select(col("s"), col("v"), col("delta")), Seq("s", "v"), "left")
-        .select(col("s"), col("v"), col("sigma"), coalesce(col("delta"), lit(0L)).as("delta"))
-        .localCheckpoint()
-      val nonzero = deltaCur.where(col("delta") > 0).select("v", "delta")
-      acc = if (accInit) acc.union(nonzero) else { accInit = true; nonzero }
-      deltaNext = deltaCur
-    }
-
-    val out = nodes
-      .join(
-        acc.groupBy(col("v")).agg(sum(col("delta")).as("bc")),
-        nodes("node") === col("v"),
-        "left")
-      .select(col("node").as("concept_id"), coalesce(col("bc"), lit(0L)).as("bc_q"))
-      .localCheckpoint()
-    sym.unpersist(false)
-    out
-  }
 }

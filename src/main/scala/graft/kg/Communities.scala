@@ -2,7 +2,6 @@ package graft.kg
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Community detection over the concept co-occurrence graph via weighted
   * label propagation (Raghavan et al. 2007) — "which concepts form a topic
@@ -20,15 +19,13 @@ import org.apache.spark.storage.StorageLevel
   * Classic async/randomized LPA converges faster but is seed-dependent —
   * useless for a hash-checked oracle and for reproducible production runs.
   *
-  * Scale posture (same discipline as [[PageRank.run]], measured there at
-  * 32M directed edges): the static weighted edge list lives in the
-  * compressed COLUMNAR cache hash-partitioned on src, so per iteration only
-  * the node-sized label vector moves; the (dst, label) weight aggregation
-  * partial-aggregates map-side (a hub's incoming votes cost one row per
-  * upstream partition per candidate label); the argmax is a single
-  * min(struct(-weight, label)) aggregate — no window, no second join; the
-  * loop is ONE lazy DAG with shuffle files as the inter-iteration
-  * checkpoint (plan depth bounded by checkpointing every 8 rounds).
+  * Scale posture: the weighted edge list is the static cache of
+  * [[Rounds]] and the rounds are its lazy fixed-count loop, so per
+  * iteration only the node-sized label vector moves; the (dst, label)
+  * weight aggregation partial-aggregates map-side (a hub's incoming votes
+  * cost one row per upstream partition per candidate label); the argmax is
+  * a single min(struct(-weight, label)) aggregate — no window, no second
+  * join.
   */
 object Communities {
 
@@ -36,37 +33,24 @@ object Communities {
     *              each pair once with concept_a < concept_b.
     * @return (concept_id, community) after `iterations` synchronous rounds;
     *         community = the adopted label (a concept id). */
-  def labelPropagation(edges: DataFrame, iterations: Int = 4, numParts: Int = 0): DataFrame = {
-    val nP =
-      if (numParts > 0) numParts
-      else edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val sym = edges
-      .select(col("concept_a").as("src"), col("concept_b").as("dst"), col("n_convs").as("w"))
-      .union(
-        edges.select(col("concept_b").as("src"), col("concept_a").as("dst"), col("n_convs").as("w")))
-      .repartition(nP, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    sym.count() // materialize the static cache in one action
-
-    // every node appears as dst (sym holds both directions), so each round's
-    // aggregation re-derives the full node set — no left join needed
-    var labels = sym.select(col("src").as("node"), col("src").as("label")).distinct()
-    for (i <- 1 to iterations) {
-      val votes = sym
-        .join(labels.hint("SHUFFLE_HASH"), sym("src") === labels("node"))
-        .groupBy(col("dst"), col("label"))
-        .agg(sum(col("w")).as("ws"))
-      labels = votes
-        .groupBy(col("dst"))
-        .agg(min(struct((lit(0L) - col("ws")).as("nws"), col("label"))).as("m"))
-        .select(col("dst").as("node"), col("m.label").as("label"))
-      if (i % 8 == 0 && i < iterations) labels = labels.localCheckpoint()
+  def labelPropagation(edges: DataFrame, iterations: Int = 4, numParts: Int = 0): DataFrame =
+    Rounds.withStaticEdges(GraphStats.bothDirections(edges, col("n_convs").as("w")), numParts, "src") { sym =>
+      // every node appears as dst (sym holds both directions), so each round's
+      // aggregation re-derives the full node set — no left join needed
+      val init = sym.select(col("src").as("node"), col("src").as("label")).distinct()
+      Rounds
+        .repeat(init, iterations, every = 8) { (labels, _) =>
+          val votes = sym
+            .join(labels.hint("SHUFFLE_HASH"), sym("src") === labels("node"))
+            .groupBy(col("dst"), col("label"))
+            .agg(sum(col("w")).as("ws"))
+          votes
+            .groupBy(col("dst"))
+            .agg(min(struct((lit(0L) - col("ws")).as("nws"), col("label"))).as("m"))
+            .select(col("dst").as("node"), col("m.label").as("label"))
+        }
+        .select(col("node").as("concept_id"), col("label").as("community"))
     }
-    val out = labels.select(col("node").as("concept_id"), col("label").as("community"))
-      .localCheckpoint()
-    sym.unpersist(false)
-    out
-  }
 
   /** Newman modularity of a community assignment — the standard "was this
     * partition better than chance" quality score for [[labelPropagation]]'s

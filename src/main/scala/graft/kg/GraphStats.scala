@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Whole-graph structural statistics over the concept co-occurrence graph —
@@ -17,6 +17,26 @@ import org.apache.spark.sql.functions._
   * hash-compares against an independently formulated DuckDB oracle.
   */
 object GraphStats {
+
+  /** Both directions of undirected edges (concept_a, concept_b) as
+    * (src, dst, carry…): each pair once per direction, `carry` evaluated
+    * on the edge row. */
+  def bothDirections(edges: DataFrame, carry: Column*): DataFrame =
+    edges
+      .select(col("concept_a").as("src") +: col("concept_b").as("dst") +: carry: _*)
+      .union(edges.select(col("concept_b").as("src") +: col("concept_a").as("dst") +: carry: _*))
+
+  /** The strongest node of undirected weighted edges (concept_a,
+    * concept_b, n_convs), as the one-row relation (seed): the max total
+    * incident weight, ties to the min id. Data-derived but deterministic
+    * and scale-free, with no driver-side collect; the seed of personalized
+    * PageRank and of the bounded shortest paths. */
+  def strongestNode(edges: DataFrame): DataFrame =
+    bothDirections(edges, col("n_convs").as("w"))
+      .groupBy("src")
+      .agg(sum(col("w")).as("wtot"))
+      .agg(min(struct((lit(0L) - col("wtot")).as("nw"), col("src"))).as("m"))
+      .select(col("m.src").as("seed"))
 
   /** Degree assortativity (Newman, "Assortative mixing in networks", PRL
     * 2002): the Pearson correlation of the degrees at the two ends of an

@@ -2,7 +2,6 @@ package graft.kg
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** HITS (Kleinberg 1999) over the DIRECTED conversation → concept mention
   * graph — the bipartite sibling of [[PageRank]]'s undirected co-occurrence
@@ -34,84 +33,59 @@ import org.apache.spark.storage.StorageLevel
   * concept). The floor losses are identical in both engines (DuckDB `//`
   * == Spark `div` on non-negatives).
   *
-  * Scale posture: the static weighted edge list is cached columnar and
-  * hash-partitioned once; each half-iteration is one broadcast of the
-  * 1-row max + one SHUFFLE_HASH join exchanging only the score vector (one
-  * long per node) + a map-side-combining sum — the edge relation never
-  * moves after the one-time build, exactly the PageRank loop shape that
-  * held at 32M edges. Iterations build one lazy DAG; a hot concept's
-  * incoming sum is absorbed by partial aggregation (one long per upstream
-  * partition, not one row per edge).
+  * Scale posture: the edge list is the static cache of [[Rounds]], keyed
+  * on concept_id; each half-iteration is one broadcast of the 1-row max +
+  * one SHUFFLE_HASH join exchanging only the score vector (one long per
+  * node) + a map-side-combining sum.
   */
 object Hits {
 
   val Scale: Long = 1L << 24
 
   /** @param edges bipartite weighted edges (conv_id, concept_id, n_mentions).
-    * @return (node, kind, score_q): kind ∈ ('hub','auth'), hub rows at conv
-    *         grain, auth rows at concept grain; fixed-point scale 2^24;
-    *         eagerly materialized so the static edge cache can be released. */
-  /** @param numParts static-edge-cache partition count — derive from the
+    * @param numParts static-edge-cache partition count — derive from the
     *   edge count (~500k edges per partition; see SparkEntry.partsFor) so a
     *   dictionary-sized graph is 1 partition and a corpus-epoch graph fans
-    *   out; 0 = the session shuffle-partition constant (legacy callers). */
+    *   out; 0 = the session shuffle-partition constant (legacy callers).
+    * @return (node, kind, score_q): kind ∈ ('hub','auth'), hub rows at conv
+    *         grain, auth rows at concept grain; fixed-point scale 2^24;
+    *         materialized. */
   def run(edges: DataFrame, iterations: Int = 4, numParts: Int = 0): DataFrame = {
-    val nP =
-      if (numParts > 0) numParts
-      else edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val e = edges
-      .select(col("conv_id"), col("concept_id"), col("n_mentions").as("w"))
-      .repartition(nP, col("concept_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    e.count() // materialize the static cache once
-
-    // ceil(max(raw)/Scale) as a broadcast 1-row denominator; max >= 1
-    // whenever edges exist, so denom >= 1 and the division is total
-    def normalized(raw: DataFrame): DataFrame = {
-      val mx = raw.agg(max(col("raw")).as("mx"))
-      raw
-        .crossJoin(broadcast(mx))
-        .selectExpr("node", s"raw div ((mx + ${Scale - 1}L) div ${Scale}L) AS s")
-    }
-
-    var auth = e.select(col("concept_id").as("node")).distinct().select(col("node"), lit(Scale).as("s"))
-    var hub: DataFrame = null
-    for (_ <- 1 to iterations) {
-      // each half-iteration's lineage is TRUNCATED (localCheckpoint of the
-      // node-sized score vector): `normalized` references its input twice
+    require(iterations > 0, s"HITS needs at least one iteration: $iterations")
+    Rounds.withStaticEdges(
+        edges.select(col("conv_id"), col("concept_id"), col("n_mentions").as("w")), numParts, "concept_id") { e =>
+      // ceil(max(raw)/Scale) as a broadcast 1-row denominator; max >= 1
+      // whenever edges exist, so denom >= 1 and the division is total
+      def normalized(raw: DataFrame): DataFrame = {
+        val mx = raw.agg(max(col("raw")).as("mx"))
+        raw
+          .crossJoin(broadcast(mx))
+          .selectExpr("node", s"raw div ((mx + ${Scale - 1}L) div ${Scale}L) AS s")
+      }
+      // one half-iteration: the `to` side's scores from the `from` side's.
+      // The raw sum is checkpointed: `normalized` reads its input twice
       // (the max-denominator branch + the main branch), so a fully lazy
       // loop doubles the plan tree per HALF-iteration — 2^(2·iters) join
       // stages by the end (measured: 322 s for 4 iterations on a 16k-edge
-      // sf0.1 graph, vs ~2 s truncated; the Spark-side twin of the DuckDB
-      // AS MATERIALIZED defense every unrolled oracle here carries).
-      // The checkpoint sits on the SINGLE-referenced raw sum, not on
-      // normalized's output: checkpointing after `normalized` re-ran the
-      // whole join+aggregate twice per half-iteration (once under the
-      // broadcast max branch, once under the main branch — r6 profile);
-      // with raw materialized, both normalized branches are cheap scans
-      // of the node-sized cached vector.
-      val rawH = e
-        .join(auth.hint("SHUFFLE_HASH"), e("concept_id") === auth("node"))
-        .selectExpr("conv_id", "w * s AS t")
-        .groupBy("conv_id")
-        .agg(sum(col("t")).as("raw"))
-        .withColumnRenamed("conv_id", "node")
-        .localCheckpoint()
-      hub = normalized(rawH)
-      val rawA = e
-        .join(hub.hint("SHUFFLE_HASH"), e("conv_id") === hub("node"))
-        .selectExpr("concept_id", "w * s AS t")
-        .groupBy("concept_id")
-        .agg(sum(col("t")).as("raw"))
-        .withColumnRenamed("concept_id", "node")
-        .localCheckpoint()
-      auth = normalized(rawA)
+      // sf0.1 graph, vs ~2 s truncated). A checkpoint after `normalized`
+      // instead re-ran the join + aggregate under both branches.
+      def half(scores: DataFrame, from: String, to: String): DataFrame =
+        normalized(
+          Rounds.checkpoint(
+            e.join(scores.hint("SHUFFLE_HASH"), e(from) === scores("node"))
+              .selectExpr(to, "w * s AS t")
+              .groupBy(to)
+              .agg(sum(col("t")).as("raw"))
+              .withColumnRenamed(to, "node")))
+
+      val auth0 = e.select(col("concept_id").as("node")).distinct().select(col("node"), lit(Scale).as("s"))
+      val (hub, auth) = (1 to iterations).foldLeft((auth0, auth0)) { case ((_, auth), _) =>
+        val hub = half(auth, "concept_id", "conv_id")
+        (hub, half(hub, "conv_id", "concept_id"))
+      }
+      auth
+        .selectExpr("node", "'auth' AS kind", "s AS score_q")
+        .union(hub.selectExpr("node", "'hub' AS kind", "s AS score_q"))
     }
-    val out = auth
-      .selectExpr("node", "'auth' AS kind", "s AS score_q")
-      .union(hub.selectExpr("node", "'hub' AS kind", "s AS score_q"))
-      .localCheckpoint()
-    e.unpersist(false)
-    out
   }
 }

@@ -623,14 +623,19 @@ object KgPipeline {
     * the component id is the lexicographically minimal node id. */
   def canonicalEntities(spark: SparkSession, concepts: Vector[Concept] = defaultConcepts): DataFrame = {
     import spark.implicits._
+    ConnectedComponents.run(spark, dictionaryEdges(concepts).toDF("src", "dst"))
+  }
+
+  /** The canonicalization edge universe: concept-concept pairs plus
+    * surface-label -> concept pairs, both restricted to the dictionary. */
+  private def dictionaryEdges(concepts: Vector[Concept]): Vector[(String, String)] = {
     val ids = concepts.map(_.wikibaseId).toSet
     val conceptPairs = DemoConceptStore
       .conceptEdgesOf(concepts)
       .filter { case (s, _, o) => ids(s) && ids(o) }
       .map { case (s, _, o) => (s, o) }
     val surfacePairs = DemoConceptStore.surfaceEdgesOf(concepts).filter { case (_, c) => ids(c) }
-    val edges = (conceptPairs ++ surfacePairs).toDF("src", "dst")
-    ConnectedComponents.run(spark, edges)
+    conceptPairs ++ surfacePairs
   }
 
   /** Bounded-depth BFS over the concept/surface graph (the same undirected
@@ -638,10 +643,10 @@ object KgPipeline {
     * concept out to `maxHops`. The frontier-expansion loop is the standard
     * distributed BFS — each round joins ONLY the newest frontier (not the
     * whole visited set) against the edge list, anti-joins the visited set,
-    * and localCheckpoints to truncate lineage, so round cost tracks frontier
-    * size. At 10^9-node scale the visited set stays partitioned on node and
-    * the per-round shuffle is frontier-sized; the oracle is an independent
-    * recursive-CTE walk with min-hop aggregation. */
+    * and checkpoints each round to truncate lineage, so round cost tracks
+    * frontier size. At 10^9-node scale the visited set stays partitioned
+    * on node and the per-round shuffle is frontier-sized; the oracle is an
+    * independent recursive-CTE walk with min-hop aggregation. */
   def kHopNeighborhood(
       spark: SparkSession,
       seed: String,
@@ -649,19 +654,9 @@ object KgPipeline {
       concepts: Vector[Concept] = defaultConcepts
   ): DataFrame = {
     import spark.implicits._
-    val ids = concepts.map(_.wikibaseId).toSet
-    val conceptPairs = DemoConceptStore
-      .conceptEdgesOf(concepts)
-      .filter { case (s, _, o) => ids(s) && ids(o) }
-      .map { case (s, _, o) => (s, o) }
-    val surfacePairs = DemoConceptStore.surfaceEdgesOf(concepts).filter { case (_, c) => ids(c) }
-    val e = (conceptPairs ++ surfacePairs).toDF("src", "dst")
-    val und = e
-      .union(e.select(col("dst"), col("src")))
-      .distinct()
-      .localCheckpoint()
-    var dist = Seq((seed, 0)).toDF("node", "hops")
-    for (d <- 1 to maxHops) {
+    val e = dictionaryEdges(concepts).toDF("src", "dst")
+    val und = Rounds.materialize(e.union(e.select(col("dst"), col("src"))).distinct())
+    Rounds.materialize(Rounds.repeat(Seq((seed, 0)).toDF("node", "hops"), maxHops, every = 1) { (dist, d) =>
       val next = dist
         .where(col("hops") === d - 1)
         .join(und, col("node") === col("src"))
@@ -669,9 +664,8 @@ object KgPipeline {
         .distinct()
         .join(dist.select("node"), Seq("node"), "left_anti")
         .select(col("node"), lit(d).as("hops"))
-      dist = dist.unionByName(next).localCheckpoint()
-    }
-    dist
+      dist.unionByName(next)
+    })
   }
 
   /** J7 incremental canonicalization: a deterministic ~25% of the store's
@@ -686,15 +680,8 @@ object KgPipeline {
       concepts: Vector[Concept] = defaultConcepts
   ): DataFrame = {
     import spark.implicits._
-    val ids = concepts.map(_.wikibaseId).toSet
-    val conceptPairs = DemoConceptStore
-      .conceptEdgesOf(concepts)
-      .filter { case (s, _, o) => ids(s) && ids(o) }
-      .map { case (s, _, o) => (s, o) }
-    val surfacePairs = DemoConceptStore.surfaceEdgesOf(concepts).filter { case (_, c) => ids(c) }
-    val all = conceptPairs ++ surfacePairs
     val (batch, base) =
-      all.partition { case (s, d) => math.floorMod((s + "" + d).hashCode, 4) == 0 }
+      dictionaryEdges(concepts).partition { case (s, d) => math.floorMod((s + "" + d).hashCode, 4) == 0 }
     val existing = ConnectedComponents.run(spark, base.toDF("src", "dst"))
     ConnectedComponents.runIncremental(spark, existing, batch.toDF("src", "dst"))
   }

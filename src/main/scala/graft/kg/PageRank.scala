@@ -1,8 +1,7 @@
 package graft.kg
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Weighted PageRank over the concept co-occurrence graph — the standard
   * "which entities matter" analytic over the extracted KG (the corpus-level
@@ -25,32 +24,13 @@ import org.apache.spark.storage.StorageLevel
   * ulp per edge + one per node); rankings are unaffected and both engines
   * lose identically.
   *
-  * Scale posture (re-derived from stage metrics at 32M directed edges):
-  *
-  *   - The static weighted edge list is cached COLUMNAR (`persist`, not
-  *     `localCheckpoint`): the row-object cache behind localCheckpoint holds
-  *     two JVM objects per row, and at 32M rows the resulting old-gen
-  *     churn made GC >50% of executor runtime (measured: 1938s GC of 3729s
-  *     task time in the materialization stage). The compressed columnar
-  *     cache stores a handful of buffers per batch instead.
-  *   - The edge list is hash-REPARTITIONED on src before caching, and the
-  *     columnar cache preserves that partitioning, so the per-iteration
-  *     contrib join exchanges only the rank vector (one long per node) —
-  *     the 32M-row edge relation never moves after the one-time build.
-  *     The rank-update join is exchange-free on both sides: contrib comes
-  *     out of its aggregation hash-partitioned on dst, and the cached node
-  *     list is partitioned on the same attribute lineage.
-  *   - Iterations build ONE lazy DAG — no per-iteration materialization.
-  *     Shuffle files are the natural inter-iteration checkpoint; nothing
-  *     rank-sized is cached until the single final localCheckpoint (which
-  *     also lets the static caches be dropped before returning). Plan
-  *     depth is bounded for deep runs by checkpointing every 8 iterations.
-  *   - SHUFFLE_HASH on the rank side keeps the streamed edge relation
-  *     unsorted (a sort-merge join would re-sort it every iteration).
-  *   - A hot hub node concentrates its *incoming* contribution sum into
-  *     one aggregation key; the sum is a partial-agg (map-side combine) so
-  *     the skew cost is one long per upstream partition, not one row per
-  *     edge.
+  * Scale posture: [[Rounds]] holds the account of the static edge cache
+  * and the lazy round plan. Here the edge list carries each source's total
+  * weight W_u, joined in once before caching (at 32M directed edges a
+  * per-iteration join of it dominated the loop), and the node list is
+  * cached beside it: the rank-update join is exchange-free on both sides,
+  * since contrib comes out of its aggregation hash-partitioned on dst and
+  * the cached node list is partitioned on the same attribute lineage.
   */
 object PageRank {
 
@@ -60,48 +40,14 @@ object PageRank {
 
   /** @param edges undirected weighted edges (concept_a, concept_b, n_convs);
     *              each pair listed once with concept_a < concept_b.
-    * @return (concept_id, rank_q) — fixed-point rank, scale 2^32; eagerly
-    *         materialized (localCheckpoint) so the static edge/node caches
-    *         can be released before returning. */
-  /** @param numParts static-edge-cache partition count — derive from the
+    * @param numParts static-edge-cache partition count — derive from the
     *   edge count (~500k edges per partition; see SparkEntry.partsFor) so a
     *   dictionary-sized graph is 1 partition and a corpus-epoch graph fans
-    *   out; 0 = the session shuffle-partition constant (legacy callers). */
-  def run(edges: DataFrame, iterations: Int = 5, numParts: Int = 0): DataFrame = {
-    val nP =
-      if (numParts > 0) numParts
-      else edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val symRaw = edges
-      .select(col("concept_a").as("src"), col("concept_b").as("dst"), col("n_convs").as("w"))
-      .union(
-        edges.select(col("concept_b").as("src"), col("concept_a").as("dst"), col("n_convs").as("w")))
-    val outw = symRaw.groupBy("src").agg(sum(col("w")).as("wtot"))
-    // wtot is static — join it into the edge list ONCE, not once per
-    // iteration (at 32M directed edges that join dominated the loop)
-    val sym = symRaw
-      .join(outw, Seq("src"))
-      .repartition(nP, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = sym.select(col("src").as("node")).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    nodes.count() // materialize both static caches in one action
-
-    var rank = nodes.select(col("node"), lit(Scale).as("r"))
-    for (i <- 1 to iterations) {
-      val contrib = sym
-        .join(rank.hint("SHUFFLE_HASH"), sym("src") === rank("node"))
-        .selectExpr("dst", "(r * w) div wtot AS c")
-        .groupBy("dst")
-        .agg(sum(col("c")).as("csum"))
-      rank = nodes
-        .join(contrib.hint("SHUFFLE_HASH"), nodes("node") === contrib("dst"), "left")
-        .selectExpr("node", s"$Teleport + (85 * coalesce(csum, 0L)) div 100 AS r")
-      if (i % 8 == 0 && i < iterations) rank = rank.localCheckpoint()
-    }
-    val out = rank.select(col("node").as("concept_id"), col("r").as("rank_q")).localCheckpoint()
-    sym.unpersist(false)
-    nodes.unpersist(false)
-    out
-  }
+    *   out; 0 = the session shuffle-partition constant (legacy callers).
+    * @return (concept_id, rank_q) — fixed-point rank, scale 2^32,
+    *         materialized. */
+  def run(edges: DataFrame, iterations: Int = 5, numParts: Int = 0): DataFrame =
+    ranks(edges, iterations, numParts)(identity, lit(true))
 
   /** Personalized PageRank (random walk with restart): the teleport mass
     * returns to ONE seed node instead of spreading uniformly, so ranks
@@ -116,59 +62,39 @@ object PageRank {
     *   r_0(v)     = [v = seed] * 2^32
     *   r_{t+1}(v) = [v = seed] * T + (85 * sum_{(u,v)} floor(r_t(u) * w / W_u)) div 100
     *
-    * with T = (15 * 2^32) div 100. The seed is DATA-DERIVED but
-    * deterministic and scale-free: argmax total incident weight, tie -> min
-    * id (one 1-row aggregate broadcast — the [[ShortestPaths]] device; no
-    * driver-side collect). Nodes the walk hasn't reached carry rank 0 —
-    * kept as rows so the output grain is the node set, same as [[run]].
-    *
-    * Scale posture identical to [[run]]: static cached columnar edges
-    * partitioned on src, per-iteration exchange is the rank vector only,
-    * map-side-combined sums absorb hub fan-in, one lazy DAG. The extra
-    * seed comparison is a broadcast of one row. */
+    * with T = (15 * 2^32) div 100 and the seed
+    * [[GraphStats.strongestNode]], joined into the cached node list once
+    * (a one-row broadcast). Nodes the walk hasn't reached carry rank 0 —
+    * kept as rows so the output grain is the node set, same as [[run]]. */
   def personalized(edges: DataFrame, iterations: Int = 5, numParts: Int = 0): DataFrame = {
-    val nP =
-      if (numParts > 0) numParts
-      else edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val symRaw = edges
-      .select(col("concept_a").as("src"), col("concept_b").as("dst"), col("n_convs").as("w"))
-      .union(
-        edges.select(col("concept_b").as("src"), col("concept_a").as("dst"), col("n_convs").as("w")))
-    val outw = symRaw.groupBy("src").agg(sum(col("w")).as("wtot"))
-    val sym = symRaw
-      .join(outw, Seq("src"))
-      .repartition(nP, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = sym.select(col("src").as("node")).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    nodes.count()
+    val seed = GraphStats.strongestNode(edges)
+    ranks(edges, iterations, numParts)(_.crossJoin(broadcast(seed)), col("node") === col("seed"))
+  }
 
-    // seed = argmax total incident weight, tie -> min id; 1-row broadcast
-    val seed = symRaw
-      .groupBy("src")
-      .agg(sum(col("w")).as("wtot"))
-      .agg(min(struct((lit(0L) - col("wtot")).as("nw"), col("src"))).as("m"))
-      .select(col("m.src").as("seed_node"))
-
-    var rank = nodes
-      .crossJoin(broadcast(seed))
-      .selectExpr("node", s"IF(node = seed_node, ${Scale}L, 0L) AS r")
-    for (i <- 1 to iterations) {
-      val contrib = sym
-        .join(rank.hint("SHUFFLE_HASH"), sym("src") === rank("node"))
-        .selectExpr("dst", "(r * w) div wtot AS c")
-        .groupBy("dst")
-        .agg(sum(col("c")).as("csum"))
-      rank = nodes
-        .join(contrib.hint("SHUFFLE_HASH"), nodes("node") === contrib("dst"), "left")
-        .crossJoin(broadcast(seed))
-        .selectExpr(
-          "node",
-          s"IF(node = seed_node, ${Teleport}L, 0L) + (85 * coalesce(csum, 0L)) div 100 AS r")
-      if (i % 8 == 0 && i < iterations) rank = rank.localCheckpoint()
+  /** The one PageRank loop: the teleport mass (and the initial mass) goes
+    * to the nodes where `home` holds, evaluated on the cached node list
+    * after `withHome` has added what it reads. */
+  private def ranks(edges: DataFrame, iterations: Int, numParts: Int)(
+      withHome: DataFrame => DataFrame, home: Column): DataFrame = {
+    val directed = GraphStats.bothDirections(edges, col("n_convs").as("w"))
+    val weighted = directed.join(directed.groupBy("src").agg(sum(col("w")).as("wtot")), Seq("src"))
+    Rounds.withStaticEdges(weighted, numParts, "src", e => withHome(e.select(col("src").as("node")).distinct())) {
+      (sym, nodes) =>
+        val init = nodes.select(col("node"), when(home, Scale).otherwise(0L).as("r"))
+        Rounds
+          .repeat(init, iterations, every = 8) { (rank, _) =>
+            val contrib = sym
+              .join(rank.hint("SHUFFLE_HASH"), sym("src") === rank("node"))
+              .selectExpr("dst", "(r * w) div wtot AS c")
+              .groupBy("dst")
+              .agg(sum(col("c")).as("csum"))
+            nodes
+              .join(contrib.hint("SHUFFLE_HASH"), nodes("node") === contrib("dst"), "left")
+              .select(
+                col("node"),
+                (when(home, Teleport).otherwise(0L) + expr("(85 * coalesce(csum, 0L)) div 100")).as("r"))
+          }
+          .select(col("node").as("concept_id"), col("r").as("rank_q"))
     }
-    val out = rank.select(col("node").as("concept_id"), col("r").as("rank_q")).localCheckpoint()
-    sym.unpersist(false)
-    nodes.unpersist(false)
-    out
   }
 }

@@ -1,8 +1,7 @@
 package graft.kg
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Bounded weighted shortest paths over the concept co-occurrence graph —
   * the weighted sibling of [[KgPipeline.kHopNeighborhood]]'s min-hop BFS:
@@ -18,17 +17,10 @@ import org.apache.spark.storage.StorageLevel
   * (bounded by hops, so it terminates despite cycles) + a MIN rollup. All
   * arithmetic is long adds/mins: order-free, hash-comparable.
   *
-  * The seed is DATA-DERIVED but deterministic and scale-free: the node with
-  * the maximum total incident weight (tie → min id) — a one-row aggregate,
-  * no driver-side collect, same device as the link-prediction backbone
-  * threshold.
-  *
-  * Scale posture: the static cost-edge list is cached columnar and
-  * hash-partitioned on src (only the frontier-sized dist vector moves per
-  * round); each relaxation is join → map-side-combined min aggregation;
-  * the dist merge is a union + min groupBy (partial-agg, no full outer
-  * join); the loop is one lazy DAG, checkpointed every 8 rounds for deep
-  * traversals. Unreached nodes carry no row (dist would be +inf).
+  * The seed is [[GraphStats.strongestNode]]. The relaxation is [[relax]],
+  * the one min-plus round that [[Centrality]]'s hop-distance BFS runs too,
+  * over the static cost-edge cache of [[Rounds]]. Unreached nodes carry no
+  * row (dist would be +inf).
   */
 object ShortestPaths {
 
@@ -38,41 +30,32 @@ object ShortestPaths {
     *              each pair once with concept_a < concept_b.
     * @return (concept_id, dist_q) for every node reachable from the
     *         max-strength seed within `maxHops` edges. */
-  def fromStrongestNode(edges: DataFrame, maxHops: Int = 3, numParts: Int = 0): DataFrame = {
-    val nP =
-      if (numParts > 0) numParts
-      else edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val sym = edges
-      .select(col("concept_a").as("src"), col("concept_b").as("dst"), col("n_convs").as("w"))
-      .union(
-        edges.select(col("concept_b").as("src"), col("concept_a").as("dst"), col("n_convs").as("w")))
-      .select(col("src"), col("dst"), expr(s"$CostScale div w").as("cost"))
-      .repartition(nP, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    sym.count()
-
-    // seed = argmax total incident weight, tie min id — a 1-row aggregate
-    val seed = edges
-      .select(col("concept_a").as("node"), col("n_convs").as("w"))
-      .union(edges.select(col("concept_b").as("node"), col("n_convs").as("w")))
-      .groupBy("node")
-      .agg(sum(col("w")).as("wtot"))
-      .agg(min(struct((lit(0L) - col("wtot")).as("nw"), col("node"))).as("m"))
-      .select(col("m.node").as("node"), lit(0L).as("d"))
-
-    var dist = seed
-    for (r <- 1 to maxHops) {
-      val relaxed = sym
-        .join(dist.hint("SHUFFLE_HASH"), sym("src") === dist("node"))
-        .select(col("dst").as("node"), (col("d") + col("cost")).as("d"))
-      dist = dist
-        .union(relaxed)
-        .groupBy("node")
-        .agg(min(col("d")).as("d"))
-      if (r % 8 == 0 && r < maxHops) dist = dist.localCheckpoint()
+  def fromStrongestNode(edges: DataFrame, maxHops: Int = 3, numParts: Int = 0): DataFrame =
+    Rounds.withStaticEdges(
+        GraphStats.bothDirections(edges, expr(s"$CostScale div n_convs").as("cost")), numParts, "src") { sym =>
+      val seed = GraphStats.strongestNode(edges).select(col("seed").as("s"), col("seed").as("v"), lit(0L).as("d"))
+      relax(sym, seed, maxHops, col("cost")).select(col("v").as("concept_id"), col("d").as("dist_q"))
     }
-    val out = dist.select(col("node").as("concept_id"), col("d").as("dist_q")).localCheckpoint()
-    sym.unpersist(false)
-    out
-  }
+
+  /** Bounded min-plus relaxation over (s, v, d): `rounds` rounds of
+    * d(s, v) = min(d(s, v), d(s, u) + cost(u, v)) from `init`, over the
+    * static edges `sym` (src, dst, …) partitioned on src, `cost` evaluated
+    * on the edge row. After round r, d(s, v) is exactly the minimum cost
+    * over all walks from s using ≤ r edges. Each round is one join
+    * exchanging only the frontier-sized dist relation + a union and a
+    * partial-agg min (no outer join). Each round reads `dist` twice (the
+    * carry-forward union + the relaxation), so a fully lazy loop doubles
+    * the plan tree per round: it is truncated every 2 rounds (measured on
+    * the all-sources BFS, 6 rounds over an 11-node sf0.1 backbone: 35 s
+    * lazy, ~2 s truncated). */
+  private[kg] def relax(sym: DataFrame, init: DataFrame, rounds: Int, cost: Column): DataFrame =
+    Rounds.repeat(init, rounds, every = 2) { (dist, _) =>
+      val relaxed = sym
+        .join(dist.hint("SHUFFLE_HASH"), sym("src") === dist("v"))
+        .select(col("s"), col("dst").as("v"), (col("d") + cost).as("d"))
+      dist
+        .union(relaxed)
+        .groupBy("s", "v")
+        .agg(min(col("d")).as("d"))
+    }
 }

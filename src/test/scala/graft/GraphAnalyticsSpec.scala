@@ -38,15 +38,19 @@ class GraphAnalyticsSpec extends AnyFunSuite {
 
   test("distributed fixed-point PageRank equals the single-threaded reference exactly") {
     val df = edges.toDF("concept_a", "concept_b", "n_convs")
-    val got = PageRank
-      .run(df, iterations = 5)
-      .collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-      .toMap
-    val want = referenceRanks(edges, 5)
-    assert(got === want)
-    // the hub must out-rank every spoke
-    assert(got("Q1") > got("Q2") && got("Q1") > got("Q4"))
+    // 9 iterations cross the every-8 checkpoint; numParts = 1 is the
+    // dictionary-grain edge cache every program caller gets
+    for (iterations <- Seq(5, 9); numParts <- Seq(0, 1)) {
+      val got = PageRank
+        .run(df, iterations, numParts)
+        .collect()
+        .map(r => r.getString(0) -> r.getLong(1))
+        .toMap
+      val want = referenceRanks(edges, iterations)
+      assert(got === want, s"iterations = $iterations, numParts = $numParts")
+      // the hub must out-rank every spoke
+      assert(got("Q1") > got("Q2") && got("Q1") > got("Q4"))
+    }
   }
 
   test("k-hop BFS equals single-threaded BFS over the concept graph") {
@@ -275,12 +279,14 @@ class GraphAnalyticsSpec extends AnyFunSuite {
       .map { case ((a, b), es) => (a, b, es.head._3) }
       .toSeq
     val df = ledges.toDF("concept_a", "concept_b", "n_convs").repartition(7)
-    val got = graft.kg.Communities
-      .labelPropagation(df, iterations = 3)
-      .collect()
-      .map(r => r.getString(0) -> r.getString(1))
-      .toMap
-    assert(got === referenceLpa(ledges, 3))
+    for ((iterations, numParts) <- Seq((3, 0), (3, 1), (9, 0))) {
+      val got = graft.kg.Communities
+        .labelPropagation(df, iterations, numParts)
+        .collect()
+        .map(r => r.getString(0) -> r.getString(1))
+        .toMap
+      assert(got === referenceLpa(ledges, iterations), s"iterations = $iterations, numParts = $numParts")
+    }
   }
 
   test("clustering coefficients: ppm formula over brute-force triangles and degrees") {
@@ -326,16 +332,18 @@ class GraphAnalyticsSpec extends AnyFunSuite {
       ("Q1", "Q2", 10L), ("Q1", "Q3", 5L), ("Q2", "Q3", 2L),
       ("Q3", "Q4", 4L), ("Q4", "Q8", 2L), ("Q8", "Q9", 2L))
     val df = sedges.toDF("concept_a", "concept_b", "n_convs").repartition(3)
-    val got = graft.kg.ShortestPaths
-      .fromStrongestNode(df, maxHops = 3)
-      .collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-      .toMap
-    assert(got === referenceSssp(sedges, 3))
-    assert(got("Q1") === 0L)
-    assert(!got.contains("Q9"), "Q9 is beyond the hop bound")
-    // the 2-hop path Q1->Q2->Q3 (100000+500000) loses to the direct edge (200000)
-    assert(got("Q3") === 200000L)
+    for (numParts <- Seq(0, 1)) {
+      val got = graft.kg.ShortestPaths
+        .fromStrongestNode(df, maxHops = 3, numParts = numParts)
+        .collect()
+        .map(r => r.getString(0) -> r.getLong(1))
+        .toMap
+      assert(got === referenceSssp(sedges, 3), s"numParts = $numParts")
+      assert(got("Q1") === 0L)
+      assert(!got.contains("Q9"), "Q9 is beyond the hop bound")
+      // the 2-hop path Q1->Q2->Q3 (100000+500000) loses to the direct edge (200000)
+      assert(got("Q3") === 200000L)
+    }
   }
 
   /** Single-threaded reference peeling to fixpoint. */
@@ -508,6 +516,8 @@ class GraphAnalyticsSpec extends AnyFunSuite {
     val (refHub, refAuth) = reference(4)
     assert(got.collect { case (n, "hub", s) => n -> s }.toMap === refHub)
     assert(got.collect { case (n, "auth", s) => n -> s }.toMap === refAuth)
+    assert(graft.kg.Hits.run(df, iterations = 4, numParts = 1).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet === got.toSet, "numParts = 1")
 
     // structure sanity: k1's reflected self-weight (3^2 + 5^2 + 1^2 = 35)
     // dominates the c4-k4 dyad's (3^2 = 9), so mutual reinforcement must
@@ -546,12 +556,14 @@ class GraphAnalyticsSpec extends AnyFunSuite {
       }
       rank
     }
-    val got = PageRank
-      .personalized(edges.toDF("concept_a", "concept_b", "n_convs"), iterations = 5)
+    def ppr(numParts: Int) = PageRank
+      .personalized(edges.toDF("concept_a", "concept_b", "n_convs"), iterations = 5, numParts = numParts)
       .collect()
       .map(r => r.getString(0) -> r.getLong(1))
       .toMap
+    val got = ppr(0)
     assert(got === reference(5))
+    assert(ppr(1) === reference(5), "numParts = 1")
     // proximity semantics: the seed out-ranks everything, its strong
     // neighbour Q2 out-ranks the weak one Q4, and the detached Q6-Q7
     // component gets exactly zero mass
@@ -582,12 +594,16 @@ class GraphAnalyticsSpec extends AnyFunSuite {
         s -> dist.collect { case (v, d) if d > 0 => graft.kg.Centrality.Scale / d }.sum
       }.toMap
     }
-    val got = graft.kg.Centrality
-      .harmonic(path.toDF("concept_a", "concept_b", "n_convs"), maxHops = 6)
+    def harmonic(maxHops: Int, numParts: Int) = graft.kg.Centrality
+      .harmonic(path.toDF("concept_a", "concept_b", "n_convs"), maxHops, numParts)
       .collect()
       .map(r => r.getString(0) -> r.getLong(1))
       .toMap
+    val got = harmonic(6, 0)
     assert(got === reference(6))
+    // an odd round count ends on an unchecked round after the every-2 one
+    for ((maxHops, numParts) <- Seq((6, 1), (5, 0)))
+      assert(harmonic(maxHops, numParts) === reference(maxHops), s"maxHops = $maxHops, numParts = $numParts")
     // the path centre is closest to everything on the path; the detached
     // dyad scores exactly one unit (its single 1-hop neighbour)
     assert(got("Q3") > got("Q1") && got("Q3") > got("Q5"))
@@ -757,12 +773,14 @@ class GraphAnalyticsSpec extends AnyFunSuite {
 
   test("eccentricity: exact hop radii on a path; the hop bound binds") {
     val path = Seq(("A", "B", 1L), ("B", "C", 1L), ("C", "D", 1L)).toDF("concept_a", "concept_b", "n_convs")
-    val got = graft.kg.Centrality
-      .eccentricity(path, maxHops = 6)
-      .collect()
-      .map(r => r.getString(0) -> r.getInt(1))
-      .toMap
-    assert(got === Map("A" -> 3, "B" -> 2, "C" -> 2, "D" -> 3))
+    for (numParts <- Seq(0, 1)) {
+      val got = graft.kg.Centrality
+        .eccentricity(path, maxHops = 6, numParts = numParts)
+        .collect()
+        .map(r => r.getString(0) -> r.getInt(1))
+        .toMap
+      assert(got === Map("A" -> 3, "B" -> 2, "C" -> 2, "D" -> 3), s"numParts = $numParts")
+    }
     // bounded at 1 hop, every node only sees its direct neighbours
     val capped = graft.kg.Centrality
       .eccentricity(path, maxHops = 1)
@@ -811,12 +829,14 @@ class GraphAnalyticsSpec extends AnyFunSuite {
       if ests.nonEmpty
     } yield (a, b) -> ests.min).toMap
 
-    val got = graft.kg.Centrality
-      .landmarkDistances(df, landmarks = 4, maxHops = 6)
+    def landmarks(numParts: Int) = graft.kg.Centrality
+      .landmarkDistances(df, landmarks = 4, maxHops = 6, numParts = numParts)
       .collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getInt(2))
       .toMap
+    val got = landmarks(0)
     assert(got === expected)
+    assert(landmarks(1) === expected, "numParts = 1")
     // triangle-inequality upper bound vs the true distance, with exactness
     // whenever a landmark endpoint is in the pair
     got.foreach { case ((a, b), est) =>
@@ -869,9 +889,10 @@ class GraphAnalyticsSpec extends AnyFunSuite {
     nodes.map(n => n -> bc(n)).toMap
   }
 
-  private def runBetweenness(es: Seq[(String, String)], maxHops: Int = 4): Map[String, Long] =
+  private def runBetweenness(es: Seq[(String, String)], maxHops: Int = 4, numParts: Int = 0): Map[String, Long] =
     graft.kg.Centrality
-      .betweenness(es.map { case (a, b) => (a, b, 1L) }.toDF("concept_a", "concept_b", "n_convs"), maxHops)
+      .betweenness(es.map { case (a, b) => (a, b, 1L) }.toDF("concept_a", "concept_b", "n_convs"), maxHops,
+        numParts = numParts)
       .collect()
       .map(r => r.getString(0) -> r.getLong(1))
       .toMap
@@ -896,6 +917,7 @@ class GraphAnalyticsSpec extends AnyFunSuite {
     val es = (for (i <- 0 until 12; j <- (i + 1) until 12 if (i * 7 + j * 13) % 5 == 0)
       yield (s"N$i", s"N$j")).toSeq
     assert(runBetweenness(es) === referenceBetweenness(es, 4))
+    assert(runBetweenness(es, numParts = 1) === referenceBetweenness(es, 4), "numParts = 1")
     // the hop bound binds identically in both formulations
     assert(runBetweenness(es, maxHops = 2) === referenceBetweenness(es, 2))
   }
@@ -1103,9 +1125,9 @@ class GraphAnalyticsSpec extends AnyFunSuite {
     // persisted RDDs a call leaves behind once its result is collected. The
     // registry holds them weakly, so a collection first drops those nothing
     // references any more; what remains is what the result keeps cached
-    def residue(run: Seq[(String, String)] => DataFrame, edges: Seq[(String, String)]): Int = {
+    def residue(run: => DataFrame): Int = {
       val before = sc.getPersistentRDDs.keySet.toSet
-      val out = run(edges)
+      val out = run
       out.collect()
       System.gc()
       val left = (sc.getPersistentRDDs.keySet.toSet -- before).size
@@ -1118,9 +1140,28 @@ class GraphAnalyticsSpec extends AnyFunSuite {
       "k-core" -> (es => graft.kg.KCore.kCore(es.toDF("concept_a", "concept_b"), k = 2)),
       "k-truss" -> (es => graft.kg.KTruss.kTruss(es.toDF("concept_a", "concept_b"), k = 3)))
     loops.foreach { case (name, run) =>
-      val short = residue(run, withTail(2))
-      val long = residue(run, withTail(8))
+      val short = residue(run(withTail(2)))
+      val long = residue(run(withTail(8)))
       assert(long <= short, s"$name: $short cached RDDs left after a 2-link tail, $long after an 8-link tail")
+    }
+    // the fixed-count loops over a static edge cache, at 2 and 9 rounds (9
+    // crosses both checkpoint cadences, 2 and 8): the cache is freed, and
+    // only the result's own checkpoint stays
+    val co = withTail(8).map { case (a, b) => if (a < b) (a, b) else (b, a) }.distinct
+      .map { case (a, b) => (a, b, 1L) }.toDF("concept_a", "concept_b", "n_convs")
+    val bipartite = withTail(8).map { case (a, b) => (a, b, 1L) }.toDF("conv_id", "concept_id", "n_mentions")
+    val fixed: Seq[(String, Int => DataFrame)] = Seq(
+      "PageRank" -> (n => PageRank.run(co, iterations = n)),
+      "PPR" -> (n => PageRank.personalized(co, iterations = n)),
+      "HITS" -> (n => graft.kg.Hits.run(bipartite, iterations = n)),
+      "label propagation" -> (n => graft.kg.Communities.labelPropagation(co, iterations = n)),
+      "shortest paths" -> (n => graft.kg.ShortestPaths.fromStrongestNode(co, maxHops = n)),
+      "harmonic" -> (n => graft.kg.Centrality.harmonic(co, maxHops = n)),
+      "betweenness" -> (n => graft.kg.Centrality.betweenness(co, maxHops = n)))
+    fixed.foreach { case (name, run) =>
+      val short = residue(run(2))
+      val long = residue(run(9))
+      assert(long <= short && short <= 1, s"$name: $short cached RDDs left after 2 rounds, $long after 9")
     }
   }
 

@@ -31,9 +31,15 @@ object Sources {
   /** Fingerprint of a parquet dataset: file names, lengths and mtimes. A
     * rewrite of the dataset within one application changes it, and so
     * invalidates every registry handle and session artifact derived from
-    * the dataset, instead of silently serving stale results. */
+    * the dataset, instead of silently serving stale results. `table` is a
+    * table name under `dir` or a dataset's own path (`pathOf`). */
   def fingerprint(dir: String, table: String): String =
-    s"$table:${filesHash(s"$dir/$table.parquet")}"
+    s"$table:${filesHash(pathOf(dir, table))}"
+
+  /** `<dir>/<name>.parquet`, or `name` itself when it is a dataset's path
+    * (it ends in `.parquet`: a fixture outside the dataset dir). */
+  def pathOf(dir: String, name: String): String =
+    if (name.endsWith(".parquet")) name else s"$dir/$name.parquet"
 
   private def filesHash(path: String): Long = {
     val d = new java.io.File(path)
@@ -49,13 +55,17 @@ object Sources {
       .foldLeft(17L)((acc, f) => ((acc * 31 + f.getName.hashCode) * 31 + f.length()) * 31 + f.lastModified())
   }
 
-  private val resolved = scala.collection.concurrent.TrieMap.empty[(String, String), (Long, DataFrame)]
+  private val resolved = scala.collection.mutable.HashMap.empty[(String, String), (Long, DataFrame)]
 
   /** The parquet table at `path`, resolved once per (application, path) and
     * fingerprint. Two lookups of one table share attribute ids, as two uses
     * of one DataFrame do: join them by column name (the analyzer
-    * re-instances the right side), never through `df("col")`. */
-  def table(spark: SparkSession, path: String): DataFrame = {
+    * re-instances the right side), never through `df("col")`. Resolution is
+    * single-flight: it holds the registry's lock, so two threads resolving
+    * one path get one handle, the second waiting for the first's schema
+    * read. The lock is taken inside a session artifact's lock and never
+    * the other way round (`SparkEntry.Artifact`). */
+  def table(spark: SparkSession, path: String): DataFrame = resolved.synchronized {
     val key = (spark.sparkContext.applicationId, path)
     val fp = filesHash(path)
     resolved.get(key).collect { case (`fp`, df) => df }.getOrElse {
@@ -65,9 +75,9 @@ object Sources {
     }
   }
 
-  /** `<dir>/<name>.parquet` through the registry. */
+  /** `pathOf(dir, name)` through the registry. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    table(spark, s"$dir/$name.parquet")
+    table(spark, pathOf(dir, name))
 
   val transcriptsSchema: StructType = StructType(
     Seq(

@@ -80,18 +80,14 @@ class SourcesSpec extends AnyFunSuite {
       val fp3 = Sources.fingerprint(dir.getPath, "orders")
       java.nio.file.Files.write(new java.io.File(sub, "part-1").toPath, "q".getBytes)
       assert(Sources.fingerprint(dir.getPath, "orders") != fp3)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
-    }
+    } finally rmTree(dir)
   }
 
-  /** Whether `body` submits a Spark job: its jobs run under a job group
-    * the listener watches for. The listener bus is FIFO, so once a later
-    * marker job's start arrives any job `body` submitted has been seen. */
-  private def submitsJob(body: => Unit): Boolean = {
+  /** The job group of every job started while `body` ran, `body` itself
+    * running under the job group `group` (threads it starts inherit it).
+    * The listener bus is FIFO, so once a later marker job's start arrives
+    * any job `body` submitted has been seen. */
+  private def jobGroupsDuring(group: String)(body: => Unit): Seq[String] = {
     val sc = spark.sparkContext
     val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -100,7 +96,7 @@ class SourcesSpec extends AnyFunSuite {
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup("registry-lookup", "lookup")
+      sc.setJobGroup(group, group)
       body
       sc.setJobGroup("registry-marker", "marker")
       sc.parallelize(Seq(1), 1).count()
@@ -108,11 +104,60 @@ class SourcesSpec extends AnyFunSuite {
       val deadline = System.nanoTime() + 30L * 1000000000L
       while (!groups.contains("registry-marker") && System.nanoTime() < deadline) Thread.sleep(10)
       assert(groups.contains("registry-marker"))
-      groups.contains("registry-lookup")
+      groups.toArray(Array.empty[String]).toSeq.takeWhile(_ != "registry-marker")
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** Whether `body` submits a Spark job. */
+  private def submitsJob(body: => Unit): Boolean =
+    jobGroupsDuring("registry-lookup")(body).contains("registry-lookup")
+
+  /** `body`'s value in each of `n` threads started together. */
+  private def concurrently[T](n: Int)(body: => T): Seq[T] = {
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val out = new java.util.concurrent.ConcurrentLinkedQueue[Either[Throwable, T]]()
+    val threads = (1 to n).map { _ =>
+      val t = new Thread(() => {
+        start.await()
+        out.add(try Right(body) catch { case e: Throwable => Left(e) })
+        ()
+      })
+      t.start()
+      t
+    }
+    start.countDown()
+    threads.foreach(_.join())
+    out.toArray(Array.empty[Either[Throwable, T]]).toSeq.map(_.fold(e => throw e, identity))
+  }
+
+  /** A temp dir holding copies of the named sf0.001 tables. */
+  private def copyOf(tables: String*): java.io.File = {
+    val dir = Files.createTempDirectory("registry").toFile
+    tables.foreach(t => Files.copy(new java.io.File(TestSpark.sf0001, s"$t.parquet").toPath, new java.io.File(dir, s"$t.parquet").toPath))
+    dir
+  }
+
+  /** Rewrite a parquet file with its own bytes and a later mtime (the
+    * copies keep the read-only mode of their sources, so write a new file). */
+  private def rewrite(f: java.io.File): Unit = {
+    val bytes = Files.readAllBytes(f.toPath)
+    Files.delete(f.toPath)
+    Files.write(f.toPath, bytes)
+    assert(f.setLastModified(f.lastModified() + 60000L))
+  }
+
+  private def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
+  }
+
+  /** Drop every registry entry for `dir` and undeclare `probes`. */
+  private def forget(dir: java.io.File, probes: SparkEntry.Artifact[_]*): Unit = {
+    SparkEntry.Artifact.entries.keys.filter(_._3 == dir.getPath).foreach(SparkEntry.Artifact.entries.remove)
+    SparkEntry.Artifact.declared --= probes
+    rmTree(dir)
   }
 
   test("table registry: a table resolves once per fingerprint; rewrites re-resolve; self-joins hold") {
@@ -146,12 +191,7 @@ class SourcesSpec extends AnyFunSuite {
       assert(d2 ne d1)
       assert(d2.count() === spark.read.parquet(src).where(col("doc_id") % 2 === 0).count())
       assert(lookup() eq d2)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
-    }
+    } finally rmTree(dir)
   }
 
   test("session-artifact registry: cached lookups run no job, rewrites supersede, compaction caches one copy") {
@@ -253,5 +293,94 @@ class SourcesSpec extends AnyFunSuite {
       copies.values.foreach(_.delete())
       dir.delete()
     }
+  }
+
+  test("session-artifact registry: an artifact is fingerprinted on every table its build reads") {
+    val dir = copyOf("documents", "embeddings")
+    val fixtureDir = Files.createTempDirectory("fixture").toFile
+    val fixture = new java.io.File(fixtureDir, "ref_mentions.parquet")
+    Files.copy(new java.io.File(graft.kg.OracleGen.refMentionsPath).toPath, fixture.toPath)
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val probe = new SparkEntry.Artifact[Seq[Long]]("probe_two_tables", "documents", fixture.getPath)((s, d) => {
+      builds.incrementAndGet()
+      Seq(Sources.table(s, d, "documents").count(), Sources.table(s, fixture.getPath).count())
+    })
+    try {
+      for (a <- Seq("evalGold", "evalPred"))
+        assert(SparkEntry.Artifact.declared.find(_.name == a).get.tables == Seq("documents", graft.kg.OracleGen.refMentionsPath))
+      val v1 = probe(spark, dir.getPath)
+      assert(v1.forall(_ > 0) && probe(spark, dir.getPath) == v1 && builds.get == 1)
+      rewrite(new java.io.File(dir, "embeddings.parquet"))
+      probe(spark, dir.getPath)
+      assert(builds.get == 1, "a rewrite of a table the build does not read rebuilt it")
+      rewrite(fixture)
+      assert(probe(spark, dir.getPath) == v1)
+      assert(builds.get == 2, "a rewrite of the fixture did not rebuild")
+      rewrite(new java.io.File(dir, "documents.parquet"))
+      assert(probe(spark, dir.getPath) == v1)
+      assert(builds.get == 3, "a rewrite of the dataset table did not rebuild")
+      probe(spark, dir.getPath)
+      assert(builds.get == 3)
+    } finally {
+      forget(dir, probe)
+      rmTree(fixtureDir)
+    }
+  }
+
+  test("session-artifact registry: concurrent lookups of a cold artifact build it once and share it") {
+    val dir = copyOf("documents")
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val probe = new SparkEntry.Artifact[org.apache.spark.sql.DataFrame]("probe_single_flight", "documents")((s, d) => {
+      builds.incrementAndGet()
+      Sources.table(s, d, "documents").groupBy("source").agg(count(lit(1)).as("n"))
+    })
+    def held = SparkEntry.Artifact.entries.keys.count(k => k._1 == probe.name && k._3 == dir.getPath)
+    try {
+      Sources.table(spark, dir.getPath, "documents") // both phases below read a resolved table
+      var got = Seq.empty[org.apache.spark.sql.DataFrame]
+      val together = jobGroupsDuring("cold-concurrent") { got = concurrently(6)(probe(spark, dir.getPath)) }
+      assert(builds.get == 1, "concurrent lookups built the artifact more than once")
+      assert(got.size == 6 && got.forall(_ eq got.head), "concurrent lookups got different instances")
+      assert(held == 1)
+      SparkEntry.Artifact.entries.keys.filter(_._3 == dir.getPath).foreach(SparkEntry.Artifact.entries.remove)
+      val serial = jobGroupsDuring("cold-serial")(probe(spark, dir.getPath))
+      assert(builds.get == 2)
+      val n = serial.count(_ == "cold-serial")
+      assert(n > 0 && together.count(_ == "cold-concurrent") == n, s"concurrent lookups ran ${together.count(_ == "cold-concurrent")} jobs, one build $n")
+    } finally forget(dir, probe)
+  }
+
+  test("warmSharedCaches: every job it submits carries the caller's job group; every entry keeps its build wall") {
+    val dir = copyOf("documents", "embeddings")
+    try {
+      val groups = jobGroupsDuring("warm-caller")(SparkEntry.warmSharedCaches(spark, dir.getPath))
+      assert(groups.nonEmpty)
+      assert(groups.forall(_ == "warm-caller"), s"jobs outside the caller's group: ${groups.filter(_ != "warm-caller").map(g => if (g.isEmpty) "(none)" else g).distinct}")
+      val held = SparkEntry.Artifact.entries.collect { case ((name, _, d), e) if d == dir.getPath => name -> e }
+      assert(held.keySet == SparkEntry.Artifact.declared.map(_.name).toSet)
+      assert(held.values.forall(_.buildS > 0))
+    } finally forget(dir)
+  }
+
+  test("warmSharedCaches: a build that throws reaches the caller, and the next lookup builds it again") {
+    val dir = copyOf("documents", "embeddings")
+    val attempts = new java.util.concurrent.atomic.AtomicInteger()
+    val flaky = new SparkEntry.Artifact[Seq[Int]]("probe_flaky", "documents")((_, _) =>
+      if (attempts.incrementAndGet() == 1) throw new IllegalStateException("planted build failure") else Seq(1, 2, 3))
+    try {
+      val e = intercept[IllegalStateException](SparkEntry.warmSharedCaches(spark, dir.getPath))
+      assert(e.getMessage == "planted build failure")
+      assert(!SparkEntry.Artifact.entries.keys.exists(k => k._1 == flaky.name && k._3 == dir.getPath), "a failed build left an entry")
+      assert(!Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread]).exists(_.getName.startsWith("warm-")), "a worker outlived the warm")
+      assert(flaky(spark, dir.getPath) == Seq(1, 2, 3) && attempts.get == 2)
+    } finally forget(dir, flaky)
+  }
+
+  test("table registry: concurrent lookups of one path share one handle") {
+    val dir = copyOf("documents")
+    try {
+      val got = concurrently(8)(Sources.table(spark, dir.getPath, "documents"))
+      assert(got.forall(_ eq got.head), s"${got.distinct.size} handles for one path")
+    } finally rmTree(dir)
   }
 }

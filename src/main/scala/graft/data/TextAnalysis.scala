@@ -138,7 +138,8 @@ object TextAnalysis {
           )).as("b"))
       .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
     val big = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c_big"))
-    val pre = bg.groupBy("w1").agg(count(lit(1)).as("c_pre"))
+    // c_pre(w1) = sum over w2 of c_big(w1, w2): no second corpus-grain pass
+    val pre = big.groupBy("w1").agg(sum(col("c_big")).as("c_pre"))
     val model = big
       .join(pre, "w1")
       .selectExpr(

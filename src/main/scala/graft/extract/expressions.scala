@@ -16,10 +16,11 @@ import graft.core.Identifier8
   * full decode of every input row into JVM objects and a re-encode of every
   * output object — at 10^8 rows that allocation traffic, not the matching
   * arithmetic, is what throttles single-node scaling. As expressions, the
-  * extraction runs inside the codegen'd projection: only the text column is
-  * materialized (one UTF8String -> String per row), conv_id/turn_idx flow
-  * through as unsafe rows untouched, and results are emitted as ArrayData
-  * consumed directly by explode.
+  * extraction runs inside the codegen'd projection: the presence
+  * expressions read the text column's UTF-8 bytes in place (span-grain
+  * extraction decodes one String per row), conv_id/turn_idx flow through as
+  * unsafe rows untouched, and results are emitted as ArrayData consumed
+  * directly by explode.
   *
   * These are CodegenFallback (the matcher itself is already compiled JVM
   * code; generating Java for it would buy nothing), which keeps the
@@ -41,7 +42,7 @@ case class ExtractOrdinalsPresent(child: Expression, gazetteer: Gazetteer)
   override def eval(input: InternalRow): Any = {
     val v = child.eval(input)
     if (v == null) return new GenericArrayData(Array.empty[Int])
-    val present = gazetteer.findPresent(v.asInstanceOf[UTF8String].toString)
+    val present = gazetteer.findPresent(v.asInstanceOf[UTF8String])
     var n = 0
     var i = 0
     while (i < present.length) { if (present(i)) n += 1; i += 1 }
@@ -75,7 +76,7 @@ case class ExtractConceptsPresent(child: Expression, gazetteer: Gazetteer)
   override def eval(input: InternalRow): Any = {
     val v = child.eval(input)
     if (v == null) return new GenericArrayData(Array.empty[Any])
-    val present = gazetteer.findPresent(v.asInstanceOf[UTF8String].toString)
+    val present = gazetteer.findPresent(v.asInstanceOf[UTF8String])
     var n = 0
     var i = 0
     while (i < present.length) { if (present(i)) n += 1; i += 1 }
@@ -120,7 +121,7 @@ case class PassageTriples(convId: Expression, passageId: Expression, text: Expre
     val out = scala.collection.mutable.ArrayBuffer[InternalRow](InternalRow(convId.eval(input), HasPassage, pid))
     val v = text.eval(input)
     if (v != null) {
-      val present = gazetteer.findPresent(v.asInstanceOf[UTF8String].toString)
+      val present = gazetteer.findPresent(v.asInstanceOf[UTF8String])
       var i = 0
       while (i < present.length) {
         if (present(i)) out += InternalRow(pid, MentionsConcept, idsUtf8(i))

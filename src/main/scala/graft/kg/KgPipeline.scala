@@ -70,7 +70,7 @@ object KgPipeline {
     * inference.py:714-735). The one definition the batch and streaming
     * paths share (streams cannot take the ordering window, so they apply it
     * with a bare `where`). */
-  val eligible: Column = col("role") =!= "tool" && length(trim(col("text"))) > 0
+  val eligible: Column = col("role") =!= "tool" && trim(col("text")) =!= lit("")
 
   /** Extraction-eligible turns in stable order. */
   def eligibleTurns(transcripts: DataFrame): DataFrame =

@@ -82,6 +82,10 @@ object Scc {
       .distinct()
   }
 
+  /** An outer round's state: the unassigned nodes and the edges between
+    * them, the assignment so far and the number of unassigned nodes. */
+  private final case class Part(active: DataFrame, edges: DataFrame, settled: DataFrame, left: Long)
+
   /** @param edges directed edges (src, dst); self-loops ignored.
     * @param maxOuterRounds cap on the trim + FW-BW rounds
     * @param maxInnerRounds cap on each inner phase: trim, forward, backward
@@ -93,33 +97,9 @@ object Scc {
       maxOuterRounds: Int = 50,
       maxInnerRounds: Int = 200
   ): DataFrame = {
-    // Spark 4.1's UnionBase.rewriteConstraints throws NoSuchElementException
-    // ("key not found: node#N") when a union child is a projected join whose
-    // inherited constraints mention pruned attributes — exactly the
-    // frontier-union shape every round here builds. Constraint propagation
-    // buys nothing in these equi-join loops (no derivable filters), so it is
-    // disabled for the duration of the run and restored after.
-    val cpKey = "spark.sql.constraintPropagation.enabled"
-    val cpPrev = spark.conf.get(cpKey, "true")
-    spark.conf.set(cpKey, "false")
-    try runInner(spark, edges, maxOuterRounds, maxInnerRounds)
-    finally spark.conf.set(cpKey, cpPrev)
-  }
-
-  /** An outer round's state: the unassigned nodes and the edges between
-    * them, the assignment so far and the number of unassigned nodes. */
-  private final case class Part(active: DataFrame, edges: DataFrame, settled: DataFrame, left: Long)
-
-  private def runInner(
-      spark: SparkSession,
-      edges: DataFrame,
-      maxOuterRounds: Int,
-      maxInnerRounds: Int
-  ): DataFrame = {
     import spark.implicits._
     // Each round's relation is a lazy Rounds checkpoint (logical plan cut at
-    // once, physical planning done here under the constraint-propagation
-    // override), and the round's loop-control count is the one action that
+    // once), and the round's loop-control count is the one action that
     // materializes it.
     //
     // `settled` grows as a lazy union whose pieces read the rounds that

@@ -1186,6 +1186,16 @@ class GraphAnalyticsSpec extends AnyFunSuite {
     assert(run(4) === referenceBetweenness(es, 4, Some(piv)))
   }
 
+  test("kg_scc and kg_condensation leave the session conf as they found it") {
+    val before = spark.conf.getAll
+    Seq("kg_scc", "kg_condensation").foreach { q =>
+      assert(SparkEntry.queries(q)(spark, TestSpark.sf0001).collect().nonEmpty, s"$q returned no rows")
+      val after = spark.conf.getAll
+      val changed = (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k))
+      assert(changed.isEmpty, s"$q changed the session conf: ${changed.map(k => k -> (before.get(k), after.get(k)))}")
+    }
+  }
+
   test("condensation: two bridged cycles collapse to one DAG edge") {
     val edges = Seq(
       ("A", "B"), ("B", "C"), ("C", "A"), // SCC {A,B,C}

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftCheckpointBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -103,17 +103,20 @@ object SparkEntry {
     * measures it also materializes it: one action, not an eager
     * checkpoint job and a count over the cached copy after it. The
     * intermediate checkpoint is unpersisted once the re-laid-out copy has
-    * materialized, so a compacted artifact is cached once, not twice.
-    * Returns the artifact and its row count. */
+    * materialized, so a compacted artifact is cached once, not twice. The
+    * artifact is settled (`GraftCheckpointBridge.settled`): a one-partition
+    * artifact reports its partitioning, so a keyed consumer plans no
+    * exchange over it, and its size estimate is bounded by its cached
+    * bytes. Returns the artifact and its row count. */
   private def compact(df: DataFrame): (DataFrame, Long) = {
     val ck = df.localCheckpoint(eager = false, StorageLevel.MEMORY_AND_DISK)
     val n = ck.count()
     val p = partsFor(df.sparkSession, n)
-    if (p * 2 > ck.rdd.getNumPartitions) (ck, n)
+    if (p * 2 > ck.rdd.getNumPartitions) (GraftCheckpointBridge.settled(ck), n)
     else {
       val out = ck.repartition(p).localCheckpoint()
       graft.kg.Rounds.release(ck)
-      (out, n)
+      (GraftCheckpointBridge.settled(out), n)
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.data
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftCheckpointBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Corpus deduplication operators over the `documents` table — the
@@ -164,8 +164,12 @@ object Dedup {
   ): DataFrame = {
     // lazy local checkpoint: the candidate subtree (band self-join +
     // distinct) feeds BOTH the id-prune below and the pair stream —
-    // materialize the bare id pairs once instead of running the join twice
-    val candCk = cand.localCheckpoint(false)
+    // materialize the bare id pairs once instead of running the join twice.
+    // Its count materializes it; settled, a one-partition candidate set is
+    // de-duplicated to ids where it lies, and its estimate is its size
+    val ck = cand.localCheckpoint(false)
+    val nCand = ck.count()
+    val candCk = GraftCheckpointBridge.settled(ck)
     val candIds = candCk
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
       .distinct()
@@ -192,16 +196,16 @@ object Dedup {
     // explicit round-robin repartition — user-specified repartitions are
     // exempt from AQE coalescing, and shuffling the bare id pairs is
     // trivial next to the merge work they fan out to. The partition count
-    // is derived from the ACTUAL candidate count (the pair set is already
-    // materialized for the id-prune, so the count is a ~free job over
-    // cached blocks), not pinned to the session constant: a handful of
-    // candidates on one task beats spraying them over hundreds of
-    // overhead-only tasks, and a large candidate set still fans out to the
-    // full session parallelism (~4k pairs ≈ 10 ms of merge work per task).
+    // is derived from the ACTUAL candidate count (the count that
+    // materializes the checkpoint above), not pinned to the session
+    // constant: a handful of candidates on one task beats spraying them
+    // over hundreds of overhead-only tasks, and a large candidate set still
+    // fans out to the full session parallelism (~4k pairs ≈ 10 ms of merge
+    // work per task). A candidate set that reports one partition already
+    // lies where one partition would put it.
     val confPart = cand.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val nPart = math.max(1L, math.min(confPart.toLong, candCk.count() / 4096L + 1L)).toInt
-    candCk
-      .repartition(nPart)
+    val nPart = math.max(1L, math.min(confPart.toLong, nCand / 4096L + 1L)).toInt
+    (if (nPart == 1 && GraftCheckpointBridge.onePartition(candCk)) candCk else candCk.repartition(nPart))
       .join(sh.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sh_a"), "doc_a")
       .join(sh.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sh", "sh_b"), "doc_b")
       // inter is bound in its own projection so the generated merge loop runs

@@ -30,14 +30,21 @@ object Par {
     * clamp, and an already-wide scan is untouched. Call on a narrow
     * projection so the conditional shuffle moves only the needed bytes.
     * Results are partitioning-independent for every consumer in this repo
-    * (aggregations / joins / sketches). */
+    * (aggregations / joins / sketches). An input with a leaf of unknown
+    * size (its estimate is `spark.sql.defaultSizeInBytes`, as for an RDD
+    * leaf without statistics) is kept as it is: that estimate is no size,
+    * and read as one it would fan out to the full session width. */
   def fanOut(df: DataFrame): DataFrame = {
     val conf = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val target =
-      if (bytes > BigInt(conf.toLong * 32768L)) conf
-      else math.max(1, (bytes / 32768).toInt + 1)
-    if (inputPartitions(df) < target) df.repartition(target) else df
+    val plan = df.queryExecution.optimizedPlan
+    if (plan.collectLeaves().exists(_.stats.sizeInBytes == plan.conf.defaultSizeInBytes)) df
+    else {
+      val bytes = plan.stats.sizeInBytes
+      val target =
+        if (bytes > BigInt(conf.toLong * 32768L)) conf
+        else math.max(1, (bytes / 32768).toInt + 1)
+      if (inputPartitions(df) < target) df.repartition(target) else df
+    }
   }
 
   /** The partition count `df` arrives with, read from the leaves of its

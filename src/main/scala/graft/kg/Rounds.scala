@@ -2,7 +2,7 @@ package graft.kg
 
 import scala.annotation.tailrec
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftCheckpointBridge}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
@@ -25,7 +25,9 @@ import org.apache.spark.storage.StorageLevel
   *    only its last stage waits for the action. Serialized blocks hold a
   *    few byte buffers per partition, where the deserialized default holds
   *    two JVM objects per row: at 16M-row rounds those row objects made GC
-  *    the dominant executor cost (PERF.md §7).
+  *    the dominant executor cost (PERF.md §7). The checkpoint is settled
+  *    (`GraftCheckpointBridge.settled`): a round of one partition reports
+  *    it, so the next round's keyed operators over it plan no exchange.
   *  - [[release]] frees a checkpoint through the RDD under its own
   *    `LogicalRDD` leaf. A loop releases a round once its successor has
   *    materialized and no lazy plan still reads it, so a call leaves no
@@ -67,19 +69,21 @@ import org.apache.spark.storage.StorageLevel
   */
 object Rounds {
 
-  /** A lazy local checkpoint at `MEMORY_AND_DISK_SER`; the first action
-    * over it materializes it. */
+  /** A lazy local checkpoint at `MEMORY_AND_DISK_SER`, settled; the first
+    * action over it materializes it. Nothing is cached when it is settled,
+    * so it keeps its inherited size estimate. */
   def checkpoint(df: DataFrame): DataFrame =
-    df.localCheckpoint(eager = false, StorageLevel.MEMORY_AND_DISK_SER)
+    GraftCheckpointBridge.settled(df.localCheckpoint(eager = false, StorageLevel.MEMORY_AND_DISK_SER))
 
   /** [[checkpoint]], materialized now: for a loop's result, which no
     * round's action measures, so that the rounds and caches it was built
-    * from can be released before it is returned. */
+    * from can be released before it is returned. Settled after it has
+    * materialized, its size estimate is bounded by its cached bytes. */
   def materialize(df: DataFrame): DataFrame =
-    df.localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+    GraftCheckpointBridge.settled(df.localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER))
 
   /** Frees the cached blocks of a local checkpoint (`ck` as
-    * `localCheckpoint` returned it, not a plan over it). */
+    * `localCheckpoint` or `settled` returned it, not a plan over it). */
   def release(ck: DataFrame): Unit = ck.queryExecution.analyzed match {
     case leaf: LogicalRDD => leaf.rdd.unpersist(blocking = false); ()
     case other            => throw new IllegalArgumentException(s"not a checkpoint: ${other.nodeName}")

@@ -31,8 +31,9 @@ import org.apache.spark.storage.StorageLevel
   * (src, walk_id) — a walk sits at one node, so that is the walk's group,
   * and the key rides the join's hash partitioning: one exchange per step,
   * and a hub's candidate fan-out collapses map-side, never a window sort.
-  * Each step's frontier is a local checkpoint, so step t plans one join
-  * over step t-1's rows whatever t is (a lazily chained loop re-plans all
+  * Each step's frontier is a settled local checkpoint
+  * (`GraftCheckpointBridge.settled`), so step t plans one join over step
+  * t-1's rows whatever t is (a lazily chained loop re-plans all
   * t steps at step t, and its corpus union carries len² joins); the
   * corpus is the union of the checkpoints, and the edge cache is freed
   * before it is returned. The emitted corpus is (nodes * nWalks * (len+1))
@@ -65,14 +66,13 @@ object Walks {
 
     val start = starts(sym, nWalks)
     val frontiers = (1 to len).scanLeft(start) { (frontier, t) =>
-      checkpointFrontier(
+      checkpoint(
         sym
           .join(onEdges(frontier, nP).hint("SHUFFLE_HASH"), col("src") === col("node"))
           .select(col("src"), col("walk_id"), col("dst"), coin(col("walk_id"), lit(t.toString), col("dst")).as("h"))
           .groupBy("src", "walk_id")
           .agg(min(struct(col("h"), col("dst"))).as("m"))
-          .select(col("walk_id"), col("m.dst").as("node")),
-        start)
+          .select(col("walk_id"), col("m.dst").as("node")))
     }
     sym.unpersist(false)
     corpus(frontiers)
@@ -144,14 +144,13 @@ object Walks {
 
     // step 1: uniform hash-argmin (second-order bias needs a prev, which
     // only exists from the second transition on) — frontier = (walk, prev, node)
-    val first = checkpointFrontier(
+    val first = checkpoint(
       sym
         .join(onEdges(start, nP).hint("SHUFFLE_HASH"), col("src") === col("node"))
         .select(col("src"), col("walk_id"), col("dst"), coin(col("walk_id"), lit("1"), col("dst")).as("h"))
         .groupBy("src", "walk_id")
         .agg(min(struct(col("h"), col("dst"))).as("m"))
-        .select(col("walk_id"), col("src").as("prev"), col("m.dst").as("node")),
-      start)
+        .select(col("walk_id"), col("src").as("prev"), col("m.dst").as("node")))
 
     // the distance-1 classifier probe joins on (prev, cand): a SECOND static
     // cache of the same edges partitioned on that pair key, built once, so
@@ -181,8 +180,11 @@ object Walks {
             .when(col("is_in").isNotNull, lit(wIn))
             .otherwise(lit(wOut))
             .as("w"))
-      checkpointFrontier(
-        weighted
+      // the window's exchange by walk runs at nP partitions: left to the
+      // planner it would run at the session's shuffle partitions. One
+      // partition already satisfies the window
+      checkpoint(
+        (if (nP > 1) weighted.repartition(nP, col("walk_id")) else weighted)
           .select(
             col("walk_id"),
             col("cur"),
@@ -192,8 +194,7 @@ object Walks {
             sum(col("w")).over(byWalk).as("tot"))
           .withColumn("coin", coin(col("walk_id"), lit(t.toString)) % col("tot"))
           .where(col("coin") >= col("cum") - col("w") && col("coin") < col("cum"))
-          .select(col("walk_id"), col("cur").as("prev"), col("cand").as("node")),
-        start)
+          .select(col("walk_id"), col("cur").as("prev"), col("cand").as("node")))
     }
     sym.unpersist(false)
     symPair.unpersist(false)
@@ -203,36 +204,33 @@ object Walks {
   /** The frontier exchanged onto the edge cache's layout (hash of the node,
     * `nP` partitions), so the step's join exchanges the frontier alone.
     * Left to the planner, a cache narrower than the session's shuffle
-    * partitions would be re-exchanged at every step. */
+    * partitions would be re-exchanged at every step. A frontier that
+    * reports a single partition already lies as a one-partition cache
+    * does, and is joined where it lies. */
   private def onEdges(frontier: DataFrame, nP: Int): DataFrame =
-    frontier.repartition(nP, col("node"))
+    if (nP == 1 && GraftCheckpointBridge.onePartition(frontier)) frontier
+    else frontier.repartition(nP, col("node"))
 
-  /** A step's frontier, checkpointed with a size estimate no larger than the
-    * walk starts' (scaled to the frontier's row width): a frontier holds at
-    * most one row per walk. Left alone, the checkpoint keeps the estimate of
-    * the step plan it replaces, and an inner join is estimated at the
-    * product of its inputs, so step t's frontier is estimated at about
-    * |edges|^t·|starts| bytes. Once that passes
-    * `spark.sql.maxSinglePartitionBytes` (128 MiB by default; step 3 on an
-    * 11-node complete graph), the planner no longer joins a single-partition
-    * frontier with a single-partition edge cache (numParts = 1) where they
-    * lie, and re-exchanges both at the session's shuffle partitions, the
-    * edge cache included, at every later step. */
-  private def checkpointFrontier(step: DataFrame, starts: DataFrame): DataFrame = {
-    val ck = step.localCheckpoint()
-    val bound = starts.queryExecution.optimizedPlan.stats.sizeInBytes * ck.schema.defaultSize / starts.schema.defaultSize
-    GraftCheckpointBridge.withSizeEstimate(ck, ck.queryExecution.optimizedPlan.stats.sizeInBytes.min(bound))
-  }
+  /** A step's frontier as a settled local checkpoint: its one partition
+    * reported when it has one, and its size estimate bounded by its cached
+    * bytes. Left alone, the checkpoint keeps the estimate of the step plan
+    * it replaces, an inner join is estimated at the product of its inputs,
+    * and step t's frontier would be estimated at about |edges|^t·|starts|
+    * bytes; past `spark.sql.maxSinglePartitionBytes` the planner stops
+    * joining a single-partition frontier with a single-partition edge cache
+    * (numParts = 1) where they lie. */
+  private def checkpoint(step: DataFrame): DataFrame =
+    GraftCheckpointBridge.settled(step.localCheckpoint())
 
   /** The walk starts (walk_id = "node#j", node): `nWalks` per node with an
     * out-edge in `sym`, checkpointed like every later frontier. */
   private def starts(sym: DataFrame, nWalks: Int): DataFrame =
-    sym
-      .select(col("src").as("node"))
-      .distinct()
-      .select(col("node"), explode(array((0 until nWalks).map(lit): _*)).as("j"))
-      .select(concat(col("node"), lit("#"), col("j").cast("string")).as("walk_id"), col("node"))
-      .localCheckpoint()
+    checkpoint(
+      sym
+        .select(col("src").as("node"))
+        .distinct()
+        .select(col("node"), explode(array((0 until nWalks).map(lit): _*)).as("j"))
+        .select(concat(col("node"), lit("#"), col("j").cast("string")).as("walk_id"), col("node")))
 
   /** The portable hash coin: the first 15 hex digits of md5 over the
     * '|'-joined parts, as a 60-bit long. */

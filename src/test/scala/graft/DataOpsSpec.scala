@@ -1217,4 +1217,18 @@ class DataOpsSpec extends AnyFunSuite {
     for (shuffled <- Seq(docs.repartition(3).select(col("text")), docs.groupBy("lang").count(), docs.distinct()))
       intercept[IllegalArgumentException](graft.data.Par.fanOut(shuffled))
   }
+
+  test("fanOut keeps an input of unknown size as it is, not fanned out to the session width") {
+    // an RDD leaf without statistics: its estimate is spark.sql.defaultSizeInBytes
+    val rows = spark.sparkContext.parallelize(0 until 50, 1).map(i => org.apache.spark.sql.Row(i.toLong, s"t$i"))
+    val df = spark.createDataFrame(rows, (0 until 50).map(i => (i.toLong, s"t$i")).toDF("doc_id", "text").schema)
+    val plan = df.queryExecution.optimizedPlan
+    assert(plan.stats.sizeInBytes === BigInt(plan.conf.defaultSizeInBytes))
+    for (in <- Seq(df, df.select(col("text")), df.where(col("doc_id") > 3).select(col("doc_id"), col("text"))))
+      assert(graft.data.Par.fanOut(in) eq in, in.queryExecution.optimizedPlan.treeString)
+    // a known size still fans out: the one-file documents scan (64 KB)
+    val known = docs
+    assert(graft.data.Par.inputPartitions(known) === 1)
+    assert(graft.data.Par.fanOut(known).rdd.getNumPartitions > 1)
+  }
 }

@@ -1280,63 +1280,88 @@ class GraphAnalyticsSpec extends AnyFunSuite {
     }
   }
 
-  test("walk steps at numParts = 1 exchange only the walks, never the single-partition edge cache") {
-    import org.apache.spark.sql.execution.{SparkPlan, QueryExecution}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, TableCacheQueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.execution.joins.HashJoin
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec        => nodes(q.plan)
-      case o                        => o.children.flatMap(nodes)
+  // The final plans of the checkpoints that run a walk step (a join), for
+  // the walk plan-shape tests below.
+  import org.apache.spark.sql.execution.{SparkPlan, QueryExecution}
+  import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    p +: (p match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+      case q: QueryStageExec        => planNodes(q.plan)
+      case o                        => o.children.flatMap(planNodes)
     })
-    // the final plans of the checkpoints that run a walk step (a join); the
-    // listener bus is FIFO, so once a later marker query has been seen every
-    // step has been
-    def stepPlans(walks: => org.apache.spark.sql.DataFrame): Seq[Seq[SparkPlan]] = {
-      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
-      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-        def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = { seen.add(f -> qe); () }
-        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-      }
-      spark.listenerManager.register(listener)
-      try {
-        walks.collect()
-        spark.range(1).toDF("walk_steps_marker").collect()
-        val deadline = System.nanoTime() + 30L * 1000000000L
-        def marked = seen.toArray.exists { case (_, qe: QueryExecution) => qe.analyzed.output.exists(_.name == "walk_steps_marker") }
-        while (!marked && System.nanoTime() < deadline) Thread.sleep(10)
-        assert(marked)
-        seen.toArray.toSeq.collect { case ("localCheckpoint", qe: QueryExecution) => nodes(qe.executedPlan) }
-          .filter(_.exists(_.isInstanceOf[HashJoin]))
-      } finally spark.listenerManager.unregister(listener)
+  }
+  // the listener bus is FIFO, so once a later marker query has been seen
+  // every step has been
+  private def stepPlans(walks: => org.apache.spark.sql.DataFrame): Seq[Seq[SparkPlan]] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = { seen.add(f -> qe); () }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    def readsCache(p: SparkPlan) = p.isInstanceOf[InMemoryTableScanExec] || p.isInstanceOf[TableCacheQueryStageExec]
-    // an exchange that reads the edge cache through no join re-exchanges it
-    def reExchangesCache(ex: SparkPlan) = {
-      val below = nodes(ex)
-      below.exists(readsCache) && !below.exists(_.isInstanceOf[HashJoin])
-    }
-    // an 11-node complete graph: by step 3 the estimate a frontier inherits
-    // from its step plan passes spark.sql.maxSinglePartitionBytes
+    spark.listenerManager.register(listener)
+    try {
+      walks.collect()
+      spark.range(1).toDF("walk_steps_marker").collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def marked = seen.toArray.exists { case (_, qe: QueryExecution) => qe.analyzed.output.exists(_.name == "walk_steps_marker") }
+      while (!marked && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(marked)
+      seen.toArray.toSeq.collect { case ("localCheckpoint", qe: QueryExecution) => planNodes(qe.executedPlan) }
+        .filter(_.exists(_.isInstanceOf[org.apache.spark.sql.execution.joins.HashJoin]))
+    } finally spark.listenerManager.unregister(listener)
+  }
+  // an exchange that reads the edge cache through no join re-exchanges it
+  private def reExchangesCache(ex: SparkPlan) = {
+    import org.apache.spark.sql.execution.adaptive.TableCacheQueryStageExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val below = planNodes(ex)
+    below.exists(p => p.isInstanceOf[InMemoryTableScanExec] || p.isInstanceOf[TableCacheQueryStageExec]) &&
+      !below.exists(_.isInstanceOf[org.apache.spark.sql.execution.joins.HashJoin])
+  }
+  // an 11-node complete graph: by step 3 the estimate a frontier inherits
+  // from its step plan passes spark.sql.maxSinglePartitionBytes
+  private def completeGraph = {
     val ids = (1 to 11).map(i => f"Q$i%02d")
-    val complete = (for (a <- ids; b <- ids if a < b) yield (a, b, 1L)).toDF("concept_a", "concept_b", "n_convs")
-    val len = 6
+    (for (a <- ids; b <- ids if a < b) yield (a, b, 1L)).toDF("concept_a", "concept_b", "n_convs")
+  }
 
-    val deep = stepPlans(graft.kg.Walks.deepWalks(complete, nWalks = 2, len = len, numParts = 1))
+  test("walk steps at numParts = 1 exchange only the walks, never the single-partition edge cache") {
+    val len = 6
+    // a one-partition frontier is joined where it lies: no exchange at all
+    val deep = stepPlans(graft.kg.Walks.deepWalks(completeGraph, nWalks = 2, len = len, numParts = 1))
     assert(deep.size === len)
     deep.zipWithIndex.foreach { case (plan, i) =>
       val exchanges = plan.filter(_.isInstanceOf[ShuffleExchangeLike])
-      assert(exchanges.size === 1, s"deepWalks step ${i + 1}: ${exchanges.mkString("\n")}")
-      assert(!nodes(exchanges.head).exists(readsCache), s"deepWalks step ${i + 1} exchanges the edge cache")
+      assert(exchanges.size === 0, s"deepWalks step ${i + 1}: ${exchanges.mkString("\n")}")
     }
 
-    val n2v = stepPlans(graft.kg.Walks.node2vecWalks(complete, nWalks = 2, len = len, numParts = 1))
+    val n2v = stepPlans(graft.kg.Walks.node2vecWalks(completeGraph, nWalks = 2, len = len, numParts = 1))
     assert(n2v.size === len)
     n2v.zipWithIndex.foreach { case (plan, i) =>
       val exchanges = plan.filter(_.isInstanceOf[ShuffleExchangeLike])
       assert(!exchanges.exists(reExchangesCache), s"node2vecWalks step ${i + 1}: ${exchanges.mkString("\n")}")
     }
+  }
+
+  test("node2vec steps at numParts = 2 exchange at numParts partitions, none at the session's width") {
+    val len = 6
+    val n2v = stepPlans(graft.kg.Walks.node2vecWalks(completeGraph, nWalks = 2, len = len, numParts = 2))
+    assert(n2v.size === len)
+    n2v.zipWithIndex.foreach { case (plan, i) =>
+      val exchanges = plan.collect { case e: ShuffleExchangeLike => e }
+      val where = s"node2vecWalks step ${i + 1}: ${exchanges.mkString("\n")}"
+      assert(!exchanges.exists(reExchangesCache), where)
+      assert(exchanges.forall(_.outputPartitioning.numPartitions == 2), where)
+      // step 1 exchanges the starts onto the edge cache; each later step its
+      // frontier, its candidates by (prev, cand) and its window by walk
+      assert(exchanges.size === (if (i == 0) 1 else 3), where)
+    }
+    // the coins are hashes of the walk, so the layout leaves the corpus as it is
+    def corpus(numParts: Int) =
+      graft.kg.Walks.node2vecWalks(completeGraph, nWalks = 2, len = len, numParts = numParts)
+        .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(corpus(2) === corpus(1))
   }
 }

@@ -210,35 +210,44 @@ class SourcesSpec extends AnyFunSuite {
       val out = build
       (out, (sc.getPersistentRDDs.keySet.toSet -- before).size)
     }
-    // AQE would coalesce the co-occurrence aggregation into 1 partition at
-    // this size; without it the edges land on 4 partitions, at least twice
-    // partsFor's 1, so the coEdges build compacts
+    // The compacted artifact is the MinHash signature index, whose build
+    // ends in an aggregation by document. AQE would coalesce it into 1
+    // partition at this size; without it the signatures land on 4
+    // partitions, at least twice partsFor's 1, so the build compacts. (The
+    // mention build ends in one partition, and the edge layer reads the
+    // one-partition mention artifact where it lies: neither compacts.)
+    assert(SparkEntry.queries.nonEmpty) // SparkEntry declares its artifacts as it initializes
+    val sigs = SparkEntry.Artifact.declared.find(_.name == "minhashSigs").get
+      .asInstanceOf[SparkEntry.Artifact[org.apache.spark.sql.DataFrame]]
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try {
-      val m1 = lookup("kg_mentions")
-      assert(KgPipeline.cooccurrence(m1).rdd.getNumPartitions == 4)
-      val (c1, cached1) = newlyCached(lookup("kg_cooccurrence"))
-      assert(c1.rdd.getNumPartitions == 1, "the edge layer was compacted")
+      assert(graft.data.Dedup.minhashSignatures(Sources.table(spark, path, "documents"), k = 32).rdd.getNumPartitions == 4)
+      val (s1, cached1) = newlyCached(sigs(spark, path))
+      assert(s1.rdd.getNumPartitions == 1, "the signature index was compacted")
       assert(cached1 == 1, "a compacted artifact holds one cached copy, not the intermediate as well")
+      val m1 = lookup("kg_mentions")
+      val c1 = lookup("kg_cooccurrence")
 
       // a second lookup is served from the registry: same value, no job
       assert(!submitsJob {
+        assert(sigs(spark, path) eq s1)
         assert(lookup("kg_mentions") eq m1)
         assert(lookup("kg_cooccurrence") eq c1)
       }, "a cached lookup submitted a Spark job")
       val fp1 = Sources.fingerprint(path, "documents")
-      assert(held == Seq("coEdges" -> fp1, "mentions" -> fp1))
+      assert(held == Seq("coEdges" -> fp1, "mentions" -> fp1, "minhashSigs" -> fp1))
 
       // rewriting the backing parquet rebuilds and replaces the old entries
       Files.copy(src, docsFile.toPath, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       assert(docsFile.setLastModified(docsFile.lastModified() + 60000L))
       val fp2 = Sources.fingerprint(path, "documents")
       assert(fp2 != fp1)
+      val (s2, cached2) = newlyCached(sigs(spark, path))
       val m2 = lookup("kg_mentions")
-      val (c2, cached2) = newlyCached(lookup("kg_cooccurrence"))
-      assert((m2 ne m1) && (c2 ne c1), "a rewritten dataset must rebuild its artifacts")
+      val c2 = lookup("kg_cooccurrence")
+      assert((s2 ne s1) && (m2 ne m1) && (c2 ne c1), "a rewritten dataset must rebuild its artifacts")
       assert(cached2 == 1)
-      assert(held == Seq("coEdges" -> fp2, "mentions" -> fp2))
+      assert(held == Seq("coEdges" -> fp2, "mentions" -> fp2, "minhashSigs" -> fp2))
       assert(c2.collect().toSet == c1.collect().toSet)
     } finally {
       sc.clearJobGroup()

@@ -25,6 +25,9 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        // a failed query leaves no output: neither an earlier run's parquet
+        // nor a partial write may pass for its result
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$outDir/$name"))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

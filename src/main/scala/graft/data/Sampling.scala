@@ -22,15 +22,16 @@ object Sampling {
       d.where(col(c).isNotNull && col(c) =!= "None")
     }
     val key = concat_ws("", strataCols.map(col): _*)
-    val withKey = valid.withColumn("__stratum", key).withColumn("__r", rand(seed))
+    val Seq(stratum, r, rn) = WorkingColumns(df, "__stratum", "__r", "__rn")
+    val withKey = valid.withColumn(stratum, key).withColumn(r, rand(seed))
 
-    val nStrata = withKey.select("__stratum").distinct().count()
+    val nStrata = withKey.select(stratum).distinct().count()
     if (nStrata == 0) return df.limit(0)
     val quota = (sampleSize / nStrata).toInt
 
-    val w = Window.partitionBy(col("__stratum")).orderBy(col("__r"))
-    val ranked = withKey.withColumn("__rn", row_number().over(w)).cache()
-    val base = ranked.where(col("__rn") <= quota)
+    val w = Window.partitionBy(col(stratum)).orderBy(col(r))
+    val ranked = withKey.withColumn(rn, row_number().over(w)).cache()
+    val base = ranked.where(col(rn) <= quota)
 
     // shortfall from the ACTUAL base size (sampling.py:86-101 computes
     // missing_rows from len(result)): undersized strata contribute fewer
@@ -41,12 +42,12 @@ object Sampling {
       else {
         // top-up: random rows from the remainder, global random order
         val leftovers = ranked
-          .where(col("__rn") > quota)
-          .orderBy(col("__r"), col("__rn"))
+          .where(col(rn) > quota)
+          .orderBy(col(r), col(rn))
           .limit(shortfall.toInt)
         base.unionByName(leftovers)
       }
-    result.drop("__stratum", "__r", "__rn")
+    result.drop(stratum, r, rn)
   }
 
   /** Temperature-based source mixing — the multinomial data-mixing step of
@@ -158,11 +159,12 @@ object Sampling {
     if (rem > 0 && posQ < nPos) { val e = math.min(rem, nPos - posQ); posQ += e; rem -= e }
     if (rem > 0 && negQ < nNeg) negQ += math.min(rem, nNeg - negQ)
     val w = Window.partitionBy(col("is_positive")).orderBy(col(orderCol))
+    val Seq(rn) = WorkingColumns(flagged, "__rn")
     flagged
-      .withColumn("__rn", row_number().over(w))
+      .withColumn(rn, row_number().over(w))
       .where(
-        (col("is_positive") && col("__rn") <= posQ) ||
-          (!col("is_positive") && col("__rn") <= negQ))
-      .drop("__rn")
+        (col("is_positive") && col(rn) <= posQ) ||
+          (!col("is_positive") && col(rn) <= negQ))
+      .drop(rn)
   }
 }

@@ -72,7 +72,7 @@ object Sketches {
   /** Count-Min sketch (Cormode & Muthukrishnan 2005) over the corpus token
     * stream — "roughly how often does token x occur in this 100 TB corpus",
     * answered from a fixed d×w counter table. Pairs with the Misra-Gries
-    * summaries ([[graft.data.TextAnalysis]] / streaming twin): MG names the
+    * summaries ([[graft.data.HeavyHitters]]): MG names the
     * heavy-hitter CANDIDATES, CMS estimates any token's FREQUENCY — together
     * they are the classic heavy-hitter pipeline.
     *

@@ -3,6 +3,8 @@ package graft.eval
 import org.apache.spark.sql.{DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
 
+import graft.data.WorkingColumns
+
 /** G7 ensemble metrics (/root/reference/knowledge_graph/ensemble/metrics.py:69-170)
   * and G8 equity-strata grouping (operations/evaluate.py:200-254), as plain
   * column aggregates over a long-format predictions frame:
@@ -49,11 +51,12 @@ object Ensemble {
           struct(lit(c).as("stratum"), coalesce(col(c).cast("string"), lit("None")).as("stratum_value"))
         ): _*
     )
+    val Seq(m) = WorkingColumns(rows, "__m")
     val exploded = rows
-      .withColumn("__m", explode(memberships))
-      .withColumn("stratum", col("__m.stratum"))
-      .withColumn("stratum_value", col("__m.stratum_value"))
-      .drop("__m")
+      .withColumn(m, explode(memberships))
+      .withColumn("stratum", col(m).getField("stratum"))
+      .withColumn("stratum_value", col(m).getField("stratum_value"))
+      .drop(m)
     agg(exploded.groupBy("stratum", "stratum_value"))
   }
 }

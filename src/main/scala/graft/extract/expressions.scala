@@ -27,41 +27,6 @@ import graft.core.Identifier8
   * surrounding stage in whole-stage codegen.
   */
 
-/** array<int> of concept ORDINALS (indices into gazetteer.concepts) with
-  * >= 1 surviving mention — the primitive-keyed twin of
-  * ExtractConceptsPresent for stateful streaming, where repeating the
-  * concept-id STRING through shuffle, state encode and state decode is the
-  * dominant cost. Consumers map ordinals back via gazetteer.concepts. */
-case class ExtractOrdinalsPresent(child: Expression, gazetteer: Gazetteer)
-    extends UnaryExpression
-    with CodegenFallback {
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = false
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return new GenericArrayData(Array.empty[Int])
-    val present = gazetteer.findPresent(v.asInstanceOf[UTF8String])
-    var n = 0
-    var i = 0
-    while (i < present.length) { if (present(i)) n += 1; i += 1 }
-    val out = new Array[Int](n)
-    var k = 0
-    i = 0
-    while (i < present.length) {
-      if (present(i)) { out(k) = i; k += 1 }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "extract_ordinals_present"
-}
-
 /** array<string> of concept ids with >= 1 surviving mention in the text. */
 case class ExtractConceptsPresent(child: Expression, gazetteer: Gazetteer)
     extends UnaryExpression
@@ -211,9 +176,6 @@ object expressions {
 
   def extractConceptsPresent(text: Column, gazetteer: Gazetteer): Column =
     GraftColumnBridge.column(ExtractConceptsPresent(GraftColumnBridge.expression(text), gazetteer))
-
-  def extractOrdinalsPresent(text: Column, gazetteer: Gazetteer): Column =
-    GraftColumnBridge.column(ExtractOrdinalsPresent(GraftColumnBridge.expression(text), gazetteer))
 
   def passageTriples(convId: Column, passageId: Column, text: Column, gazetteer: Gazetteer): Column =
     GraftColumnBridge.column(

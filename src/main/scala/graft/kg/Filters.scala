@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.data.WorkingColumns
+
 /** A classifier deployment spec — the reference's ClassifierSpec
   * (/root/reference/flows/classifier_specs/spec_interface.py:40-92), loaded
   * from per-environment YAML there; here a plain broadcastable case class. */
@@ -39,7 +41,8 @@ object Filters {
     val w = Window
       .partitionBy(docId)
       .orderBy(isTranslated.cast("int").desc, col(stemCol).asc)
-    df.withColumn("__rn", row_number().over(w)).where(col("__rn") === 1).drop("__rn")
+    val Seq(rn) = WorkingColumns(df, "__rn")
+    df.withColumn(rn, row_number().over(w)).where(col(rn) === 1).drop(rn)
   }
 
   /** §2.8 remove_translated_suffix (flows/utils.py:388). */
@@ -58,11 +61,12 @@ object Filters {
     * the training set — broadcast anti-join on a content hash so the big
     * side never shuffles its text column. */
   def excludeTrainingTexts(passages: DataFrame, trainingTexts: DataFrame): DataFrame = {
-    val trainHashes = trainingTexts.select(md5(col("text")).as("__h")).distinct()
+    val Seq(h) = WorkingColumns(passages, "__h")
+    val trainHashes = trainingTexts.select(md5(col("text")).as(h)).distinct()
     passages
-      .withColumn("__h", md5(col("text")))
-      .join(broadcast(trainHashes), Seq("__h"), "left_anti")
-      .drop("__h")
+      .withColumn(h, md5(col("text")))
+      .join(broadcast(trainHashes), Seq(h), "left_anti")
+      .drop(h)
   }
 
   /** §2.8 _stringify (flows/inference.py:566-567): strip each line, join

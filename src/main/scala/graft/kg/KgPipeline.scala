@@ -67,9 +67,7 @@ object KgPipeline {
 
   /** Turn eligibility: drop role='tool' (blocked block types,
     * inference.py:80-84) and blank text (no-op documents,
-    * inference.py:714-735). The one definition the batch and streaming
-    * paths share (streams cannot take the ordering window, so they apply it
-    * with a bare `where`). */
+    * inference.py:714-735). */
   val eligible: Column = col("role") =!= "tool" && trim(col("text")) =!= lit("")
 
   /** Extraction-eligible turns in stable order. */

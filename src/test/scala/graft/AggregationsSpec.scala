@@ -88,6 +88,26 @@ class AggregationsSpec extends AnyFunSuite {
     assert(d.count() == 30) // quota 10/stratum, 'rare' has 1 row, 9 topped up
   }
 
+  test("G9 balanced sampling keeps caller columns named __stratum, __r and __rn") {
+    val df = (1 to 200).map(i => (i.toLong, s"s${i % 4}")).toDF("id", "stratum")
+    val wide = df.withColumn("__stratum", concat(lit("x"), $"id")).withColumn("__r", $"id" * 2).withColumn("__rn", $"id" + 1000)
+    val want = Sampling.balancedSample(df, Seq("stratum"), sampleSize = 42, seed = 7L).collect().map(_.getLong(0)).sorted
+    val got = Sampling.balancedSample(wide, Seq("stratum"), sampleSize = 42, seed = 7L).collect()
+      .map(r => (r.getLong(0), r.getString(2), r.getLong(3), r.getLong(4))).sortBy(_._1)
+    assert(got.toSeq == want.toSeq.map(i => (i, s"x$i", i * 2, i + 1000)))
+  }
+
+  test("G10 train balancing keeps a caller column named __rn, in any case") {
+    val passages = (1 to 50).map(i => (i.toLong, if (i % 5 == 0) "a scan" else "text")).toDF("doc_id", "text")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      Sampling.limitAndBalance(df, $"text".contains("scan"), maxSamples = 12L, orderCol = "doc_id")
+    val want = ids(passages).collect().map(_.getLong(0)).sorted.toSeq
+    for (name <- Seq("__rn", "__RN")) {
+      val got = ids(passages.withColumn(name, $"doc_id" * 3)).collect().map(r => (r.getLong(0), r.getLong(2))).sortBy(_._1)
+      assert(got.toSeq == want.map(i => (i, i * 3)), name)
+    }
+  }
+
   test("G1 alignment: same turn COUNT but different turn SET is a violation") {
     val cov = Seq(
       ("clf1", "c1", 0), ("clf1", "c1", 1), ("clf1", "c1", 2),

@@ -34,6 +34,12 @@ class FiltersSpec extends AnyFunSuite {
     assert(bare.toSeq == Seq("doc1", "doc1", "doc2", "doc3"))
   }
 
+  test("F4 translated-stem preference keeps a caller column named __rn") {
+    val df = Seq(("doc1", 7), ("doc1_translated_en", 8), ("doc2", 9)).toDF("stem", "__rn")
+    val kept = Filters.preferTranslated(df).collect().map(r => (r.getString(0), r.getInt(1))).sorted
+    assert(kept.toSeq == Seq(("doc1_translated_en", 8), ("doc2", 9)))
+  }
+
   test("F6 span validity split") {
     val m = Seq((0, 5, 10), (3, 3, 10), (8, 12, 10), (-1, 4, 10))
       .toDF("start", "end", "len")
@@ -46,6 +52,13 @@ class FiltersSpec extends AnyFunSuite {
     val training = Seq(Tuple1("beta")).toDF("text")
     val kept = Filters.excludeTrainingTexts(passages, training).collect().map(_.getLong(0)).sorted
     assert(kept.toSeq == Seq(1L, 3L))
+  }
+
+  test("F8 training-text exclusion keeps a caller column named __h") {
+    val passages = Seq((1L, "alpha", "h1"), (2L, "beta", "h2"), (3L, "gamma", "h3")).toDF("id", "text", "__h")
+    val training = Seq(Tuple1("beta")).toDF("text")
+    val kept = Filters.excludeTrainingTexts(passages, training).collect().map(r => (r.getLong(0), r.getString(2))).sorted
+    assert(kept.toSeq == Seq((1L, "h1"), (3L, "h3")))
   }
 
   test("stringify lines: strip each line, join with spaces") {
@@ -90,6 +103,17 @@ class FiltersSpec extends AnyFunSuite {
     assert(got(("all", "all")) == ((3L, 60L)))
     assert(got(("lang", "en")) == ((2L, 30L)))
     assert(got(("source", "src0")) == ((2L, 40L)))
+  }
+
+  test("G8 equity strata keep a caller column named __m for the aggregate") {
+    val rows = Seq(("en", "src0", 1), ("en", "src1", 2), ("de", "src0", 4)).toDF("lang", "source", "__m")
+    val got = Ensemble
+      .equityStrata(rows, Seq("lang", "source"))(_.agg(sum($"__m").as("s")))
+      .collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
+      .toMap
+    assert(got == Map(("all", "all") -> 7L, ("lang", "en") -> 3L, ("lang", "de") -> 4L,
+      ("source", "src0") -> 5L, ("source", "src1") -> 2L))
   }
 
   test("C2 embedding classifier emits whole-text spans with probability") {

@@ -140,6 +140,7 @@ object Sampling {
       maxSamples: Long,
       orderCol: String
   ): DataFrame = {
+    WorkingColumns.requireAbsent(passages, "limitAndBalance", "is_positive")
     // the reference's positivity test (p.spans non-empty) can never be null;
     // an arbitrary caller predicate can — treat null as negative rather than
     // NPE-ing on the collected group key / silently dropping the rows

@@ -16,4 +16,12 @@ object WorkingColumns {
       name
     }
   }
+
+  /** Requires that `df` carries none of the output columns `names` that
+    * operator `op` adds, compared case-insensitively as above: `op` would
+    * otherwise overwrite the caller's column with its own. */
+  def requireAbsent(df: DataFrame, op: String, names: String*): Unit = {
+    val taken = names.filter(n => df.columns.exists(_.equalsIgnoreCase(n)))
+    require(taken.isEmpty, s"$op adds the column(s) ${taken.mkString(", ")}, which its input already has")
+  }
 }

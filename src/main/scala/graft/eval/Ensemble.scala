@@ -45,6 +45,7 @@ object Ensemble {
       rows: DataFrame,
       strataCols: Seq[String]
   )(agg: RelationalGroupedDataset => DataFrame): DataFrame = {
+    WorkingColumns.requireAbsent(rows, "equityStrata", "stratum", "stratum_value")
     val memberships = array(
       struct(lit("all").as("stratum"), lit("all").as("stratum_value")) +:
         strataCols.map(c =>

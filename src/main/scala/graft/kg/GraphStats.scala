@@ -18,6 +18,19 @@ import org.apache.spark.sql.functions._
   */
 object GraphStats {
 
+  /** The simple undirected graph of edges (concept_a, concept_b, …): each
+    * pair once as (concept_a, concept_b) with the lower id first, self-loops
+    * dropped, whatever orientations and repeats the edge list holds. The
+    * undirected analytics here, in [[Triangles]], [[KCore]] and [[KTruss]]
+    * all read this form. */
+  def canonicalPairs(edges: DataFrame): DataFrame =
+    edges
+      .select(
+        least(col("concept_a"), col("concept_b")).as("concept_a"),
+        greatest(col("concept_a"), col("concept_b")).as("concept_b"))
+      .where(col("concept_a") =!= col("concept_b"))
+      .distinct()
+
   /** Both directions of undirected edges (concept_a, concept_b) as
     * (src, dst, carry…): each pair once per direction, `carry` evaluated
     * on the edge row. */
@@ -25,6 +38,11 @@ object GraphStats {
     edges
       .select(col("concept_a").as("src") +: col("concept_b").as("dst") +: carry: _*)
       .union(edges.select(col("concept_b").as("src") +: col("concept_a").as("dst") +: carry: _*))
+
+  /** (node, deg) for every node of canonical pairs: its number of
+    * neighbours. */
+  def degrees(pairs: DataFrame): DataFrame =
+    bothDirections(pairs).groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
 
   /** The strongest node of undirected weighted edges (concept_a,
     * concept_b, n_convs), as the one-row relation (seed): the max total
@@ -62,20 +80,11 @@ object GraphStats {
     * guard the production answer is DECIMAL(38) sums, noted here so the
     * flip is a type change, not a redesign. */
   def assortativity(edges: DataFrame): DataFrame = {
-    val e = edges
-      .select(
-        least(col("concept_a"), col("concept_b")).as("a"),
-        greatest(col("concept_a"), col("concept_b")).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct()
-    val und = e.select(col("a").as("u"), col("b").as("v"))
-      .union(e.select(col("b").as("u"), col("a").as("v")))
-    val deg = und.groupBy("u").agg(count(lit(1)).as("deg"))
-    val pairs = und
-      .join(deg, Seq("u"))
-      .join(deg.select(col("u").as("v"), col("deg").as("deg_v")), Seq("v"))
-      .select(col("deg").as("dx"), col("deg_v").as("dy"))
-    pairs
+    val pairs = canonicalPairs(edges)
+    val deg = degrees(pairs)
+    bothDirections(pairs)
+      .join(deg.select(col("node").as("src"), col("deg").as("dx")), Seq("src"))
+      .join(deg.select(col("node").as("dst"), col("deg").as("dy")), Seq("dst"))
       .agg(
         count(lit(1)).as("m2"),
         coalesce(sum(col("dx")), lit(0L)).as("sx"), // empty graph: sums are 0, not null
@@ -135,46 +144,32 @@ object GraphStats {
     * shuffling; the pair relation (v,w,c) is the only intermediate and is
     * bounded by the wedge count, never by |V|². */
   def rectangleCounts(edges: DataFrame, maxDeg: Long = 10000L): DataFrame = {
-    val e = edges
-      .select(
-        least(col("concept_a"), col("concept_b")).as("a"),
-        greatest(col("concept_a"), col("concept_b")).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct()
-    val und = e.select(col("a").as("u"), col("b").as("v"))
-      .union(e.select(col("b").as("u"), col("a").as("v")))
-    val deg = und.groupBy("u").agg(count(lit(1)).as("deg"))
-    val keep = deg.where(col("deg") <= maxDeg).select("u")
+    val pairs = canonicalPairs(edges)
+    val deg = degrees(pairs)
+    val keep = deg.where(col("deg") <= maxDeg).select("node")
     // induced subgraph on the kept (non-hub) nodes, by original degree
-    val sub = und
-      .join(keep, Seq("u"))
-      .join(keep.select(col("u").as("v")), Seq("v"))
-      .select("u", "v")
+    val sub = pairs
+      .join(keep.select(col("node").as("concept_a")), Seq("concept_a"))
+      .join(keep.select(col("node").as("concept_b")), Seq("concept_b"))
       .localCheckpoint() // feeds wedges AND the zero-count node frame
-    val x = sub.select(col("u"), col("v").as("xv"))
-    val y = sub.select(col("u"), col("v").as("yv"))
-    val wedges = x
-      .join(y, Seq("u"))
-      .where(col("xv") < col("yv")) // center u, unordered endpoint pair
-    val pairs = wedges
-      .groupBy(col("xv").as("pv"), col("yv").as("pw"))
+    val wedges = Triangles.wedges(bothDirections(sub))
+    val pairCounts = wedges
+      .groupBy("concept_a", "concept_b")
       .agg(count(lit(1)).as("c"))
       .where(col("c") >= 2)
     // diagonal-endpoint credit: C(c,2) to both ends of the pair
-    val term1 = pairs.select(
-      explode(array(col("pv"), col("pw"))).as("node"),
+    val term1 = pairCounts.select(
+      explode(array(col("concept_a"), col("concept_b"))).as("node"),
       expr("(c * (c - 1)) div 2").as("t"))
     // common-neighbour credit: (c−1) to every wedge center of the pair
     val term2 = wedges
-      .join(pairs, col("xv") === col("pv") && col("yv") === col("pw"))
-      .select(col("u").as("node"), (col("c") - 1).as("t"))
+      .join(pairCounts, Seq("concept_a", "concept_b"))
+      .select(col("src").as("node"), (col("c") - 1).as("t"))
     val credits = term1
       .union(term2)
       .groupBy("node")
       .agg(sum(col("t")).as("credit"))
-    sub
-      .select(col("u").as("node"))
-      .distinct()
+    degrees(sub)
       .join(credits, Seq("node"), "left")
       .select(
         col("node").as("concept_id"),

@@ -26,35 +26,20 @@ import org.apache.spark.sql.functions._
   */
 object KCore {
 
-  /** @param edges undirected edges (concept_a, concept_b, ...), each pair
-    *              once with concept_a < concept_b.
+  /** @param edges undirected edges (concept_a, concept_b, ...).
     * @return (concept_id, deg) for every node of the k-core, deg = its
     *         degree WITHIN the core (≥ k by construction). */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 100): DataFrame = {
-    val canon = edges
-      .select(
-        least(col("concept_a"), col("concept_b")).as("a"),
-        greatest(col("concept_a"), col("concept_b")).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct()
     // a non-fixpoint edge set is not the k-core but a superset of it;
     // maxRounds only bounds pathological inputs (the peel depth is ≤ the
     // degeneracy ordering depth in practice)
-    val und = Rounds.untilStable(
-      canon
-        .select(col("a").as("src"), col("b").as("dst"))
-        .union(canon.select(col("b").as("src"), col("a").as("dst"))),
-      maxRounds)(_.count())(n =>
-      s"k-core peeling did not converge within $maxRounds rounds ($n edges remain); raise maxRounds") { und =>
-      val keep = und.groupBy("src").agg(count(lit(1)).as("deg")).where(col("deg") >= k).select("src")
-      und
-        .join(keep, Seq("src"), "left_semi")
-        .join(keep.select(col("src").as("dst")), Seq("dst"), "left_semi")
-        .select("src", "dst")
+    val core = Rounds.untilStable(GraphStats.canonicalPairs(edges), maxRounds)(_.count())(n =>
+      s"k-core peeling did not converge within $maxRounds rounds ($n edges remain); raise maxRounds") { pairs =>
+      val keep = GraphStats.degrees(pairs).where(col("deg") >= k).select("node")
+      pairs
+        .join(keep.select(col("node").as("concept_a")), Seq("concept_a"), "left_semi")
+        .join(keep.select(col("node").as("concept_b")), Seq("concept_b"), "left_semi")
     }
-    und
-      .groupBy(col("src"))
-      .agg(count(lit(1)).cast("long").as("deg"))
-      .select(col("src").as("concept_id"), col("deg"))
+    GraphStats.degrees(core).select(col("node").as("concept_id"), col("deg"))
   }
 }

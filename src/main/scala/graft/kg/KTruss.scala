@@ -34,35 +34,26 @@ import org.apache.spark.sql.functions._
   */
 object KTruss {
 
-  /** @param edges undirected edges (concept_a, concept_b, ...), each pair
-    *              once (canonicalized defensively).
+  /** @param edges undirected edges (concept_a, concept_b, ...).
     * @return (concept_a, concept_b, support) for every edge of the
     *         k-truss, support = its triangle count WITHIN the truss
     *         (≥ k−2 by construction); concept_a < concept_b. */
   def kTruss(edges: DataFrame, k: Int, maxRounds: Int = 100): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3 (support threshold k-2 >= 1); got $k")
-    val e = Rounds.untilStable(
-      edges
-        .select(
-          least(col("concept_a"), col("concept_b")).as("a"),
-          greatest(col("concept_a"), col("concept_b")).as("b"))
-        .where(col("a") =!= col("b"))
-        .distinct(),
-      maxRounds)(_.count())(n =>
+    val e = Rounds.untilStable(GraphStats.canonicalPairs(edges), maxRounds)(_.count())(n =>
       s"k-truss peeling did not converge within $maxRounds rounds ($n edges remain); raise maxRounds")(
-      e => e.join(supportOf(e).where(col("sup") >= k - 2).select("a", "b"), Seq("a", "b"), "left_semi"))
+      e => e.join(supportOf(e).where(col("sup") >= k - 2), Seq("concept_a", "concept_b"), "left_semi"))
     // at the fixpoint no edge peels, so the supports over the final edge set
     // are the within-truss supports
-    e.join(supportOf(e), Seq("a", "b"))
-      .select(col("a").as("concept_a"), col("b").as("concept_b"), col("sup").as("support"))
+    e.join(supportOf(e), Seq("concept_a", "concept_b"))
+      .select(col("concept_a"), col("concept_b"), col("sup").as("support"))
   }
 
-  /** Per-edge triangle support over canonical edges (a < b, distinct):
-    * enumerate each triangle once via the degree-ordered orientation and
-    * credit its three edges. */
+  /** Per-edge triangle support over canonical pairs: each triangle credits
+    * its three edges. */
   private def supportOf(e: DataFrame): DataFrame =
     Triangles
       .triangleEdges(e)
-      .groupBy("a", "b")
+      .groupBy("concept_a", "concept_b")
       .agg(count(lit(1)).as("sup"))
 }

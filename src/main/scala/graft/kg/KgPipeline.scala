@@ -652,8 +652,8 @@ object KgPipeline {
       concepts: Vector[Concept] = defaultConcepts
   ): DataFrame = {
     import spark.implicits._
-    val e = dictionaryEdges(concepts).toDF("src", "dst")
-    val und = Rounds.materialize(e.union(e.select(col("dst"), col("src"))).distinct())
+    val und = Rounds.materialize(
+      GraphStats.bothDirections(dictionaryEdges(concepts).toDF("concept_a", "concept_b")).distinct())
     Rounds.materialize(Rounds.repeat(Seq((seed, 0)).toDF("node", "hops"), maxHops, every = 1) { (dist, d) =>
       val next = dist
         .where(col("hops") === d - 1)

@@ -3,6 +3,8 @@ package graft.kg
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import GraphStats.{bothDirections, canonicalPairs, degrees}
+
 /** Per-node triangle counts over the undirected concept co-occurrence
   * graph — the local-clustering analytic ("how interlinked is this
   * concept's neighbourhood") that complements PageRank's global
@@ -32,59 +34,11 @@ import org.apache.spark.sql.functions._
   */
 object Triangles {
 
-  /** @param edges undirected edges (concept_a, concept_b, ...) with
-    *              concept_a < concept_b, one row per pair.
+  /** @param edges undirected edges (concept_a, concept_b, ...).
     * @return (concept_id, n_triangles) for every node of the graph,
     *         zero-count nodes included. */
-  def triangleCounts(edges: DataFrame): DataFrame = {
-    // canonicalize defensively: an edge listed in both orientations must
-    // not become two oriented rows (wedges would double-count)
-    val e = edges
-      .select(
-        least(col("concept_a"), col("concept_b")).as("a"),
-        greatest(col("concept_a"), col("concept_b")).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct()
-    val deg = e
-      .select(col("a").as("node"))
-      .union(e.select(col("b").as("node")))
-      .groupBy("node")
-      .agg(count(lit(1)).as("deg"))
-
-    val withDeg = e
-      .join(deg.select(col("node").as("a"), col("deg").as("deg_a")), Seq("a"))
-      .join(deg.select(col("node").as("b"), col("deg").as("deg_b")), Seq("b"))
-    val aLower = struct(col("deg_a"), col("a")) < struct(col("deg_b"), col("b"))
-    // (lo, hi, hi_deg): lo = lower-rank endpoint; hi_deg carried so wedge
-    // ordering below needs no re-join against the degree table
-    val oriented = withDeg
-      .select(
-        when(aLower, col("a")).otherwise(col("b")).as("lo"),
-        when(aLower, col("b")).otherwise(col("a")).as("hi"),
-        when(aLower, col("deg_b")).otherwise(col("deg_a")).as("hi_deg"))
-      .localCheckpoint() // feeds the wedge self-join AND the closing join
-
-    val o1 = oriented.as("o1")
-    val o2 = oriented.as("o2")
-    val wedges = o1
-      .join(
-        o2,
-        col("o1.lo") === col("o2.lo") &&
-          struct(col("o1.hi_deg"), col("o1.hi")) < struct(col("o2.hi_deg"), col("o2.hi")))
-      .select(col("o1.lo").as("u"), col("o1.hi").as("v"), col("o2.hi").as("w"))
-    // rank(v) < rank(w), so the closing edge — if present — is oriented v→w
-    val tri = wedges.join(
-      oriented.select(col("lo").as("v"), col("hi").as("w")),
-      Seq("v", "w"))
-
-    val corners = tri
-      .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
-      .groupBy("node")
-      .agg(count(lit(1)).as("cnt"))
-    deg
-      .join(corners, Seq("node"), "left")
-      .select(col("node").as("concept_id"), coalesce(col("cnt"), lit(0L)).as("n_triangles"))
-  }
+  def triangleCounts(edges: DataFrame): DataFrame =
+    countsAndDegrees(edges).select("concept_id", "n_triangles")
 
   /** Local clustering coefficient per node — the normalized form of the
     * triangle counts: coef(v) = 2·tri(v) / (deg(v)·(deg(v)−1)), the fraction
@@ -92,22 +46,10 @@ object Triangles {
     * neighbourhood a clique or a star"). Emitted FIXED-POINT (parts per
     * million, floor division) so the ratio is a long and the DuckDB oracle
     * reproduces it exactly; deg < 2 → 0 by convention (no pairs to close).
-    * Costs one extra degree aggregate + broadcast-sized join over
-    * [[triangleCounts]] — the O(m^1.5) wedge bound carries over unchanged. */
-  def clusteringCoefficients(edges: DataFrame): DataFrame = {
-    val e = edges
-      .select(
-        least(col("concept_a"), col("concept_b")).as("a"),
-        greatest(col("concept_a"), col("concept_b")).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct()
-    val deg = e
-      .select(col("a").as("node"))
-      .union(e.select(col("b").as("node")))
-      .groupBy("node")
-      .agg(count(lit(1)).as("deg"))
-    triangleCounts(edges)
-      .join(deg, col("concept_id") === col("node"))
+    * The degrees are the ones the triangle orientation already computes, so
+    * the O(m^1.5) wedge bound is the whole cost. */
+  def clusteringCoefficients(edges: DataFrame): DataFrame =
+    countsAndDegrees(edges)
       .select(
         col("concept_id"),
         col("deg"),
@@ -116,7 +58,75 @@ object Triangles {
           col("deg") >= 2,
           expr("(2 * n_triangles * 1000000) div (deg * (deg - 1))")
         ).otherwise(lit(0L)).as("coef_ppm"))
+
+  /** (concept_id, deg, n_triangles) for every node of the graph. */
+  private def countsAndDegrees(edges: DataFrame): DataFrame = {
+    val pairs = canonicalPairs(edges)
+    val deg = degrees(pairs)
+    val corners = triangles(pairs, deg)
+      .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
+      .groupBy("node")
+      .agg(count(lit(1)).as("cnt"))
+    deg
+      .join(corners, Seq("node"), "left")
+      .select(col("node").as("concept_id"), col("deg"), coalesce(col("cnt"), lit(0L)).as("n_triangles"))
   }
+
+  /** One row per (triangle, member edge) over canonical pairs (as
+    * [[GraphStats.canonicalPairs]] returns them; [[KTruss]] passes its
+    * working edge set): each triangle is enumerated once by [[triangles]],
+    * then credited to its three edges in canonical (id-ordered) form.
+    * Distinct from triangleCounts' corner explode: support is an EDGE-grain
+    * statistic, so the emit key is the pair, not the node. */
+  def triangleEdges(canonEdges: DataFrame): DataFrame = {
+    def edge(x: String, y: String) =
+      struct(least(col(x), col(y)).as("concept_a"), greatest(col(x), col(y)).as("concept_b"))
+    triangles(canonEdges, degrees(canonEdges))
+      .select(explode(array(edge("u", "v"), edge("u", "w"), edge("v", "w"))).as("edge"))
+      .select("edge.*")
+  }
+
+  /** Every triangle of canonical pairs once, as (u, v, w), given the pairs'
+    * degrees (node, deg). Each pair is oriented from its lower- to its
+    * higher-(degree, id) endpoint; wedges are generated per node from its
+    * out-neighbours only, and a wedge (u→v, u→w) closes iff the oriented
+    * pair v→w exists, so a triangle is found at its lowest-rank corner. */
+  private def triangles(pairs: DataFrame, deg: DataFrame): DataFrame = {
+    val withDeg = pairs
+      .join(deg.select(col("node").as("concept_a"), col("deg").as("deg_a")), Seq("concept_a"))
+      .join(deg.select(col("node").as("concept_b"), col("deg").as("deg_b")), Seq("concept_b"))
+    val aLower = struct(col("deg_a"), col("concept_a")) < struct(col("deg_b"), col("concept_b"))
+    // (lo, hi, hi_deg): lo = lower-rank endpoint; hi_deg carried so wedge
+    // ordering below needs no re-join against the degree table
+    val oriented = withDeg
+      .select(
+        when(aLower, col("concept_a")).otherwise(col("concept_b")).as("lo"),
+        when(aLower, col("concept_b")).otherwise(col("concept_a")).as("hi"),
+        when(aLower, col("deg_b")).otherwise(col("deg_a")).as("hi_deg"))
+      .localCheckpoint() // feeds the wedge self-join AND the closing join
+
+    val o1 = oriented.as("o1")
+    val o2 = oriented.as("o2")
+    val outWedges = o1
+      .join(
+        o2,
+        col("o1.lo") === col("o2.lo") &&
+          struct(col("o1.hi_deg"), col("o1.hi")) < struct(col("o2.hi_deg"), col("o2.hi")))
+      .select(col("o1.lo").as("u"), col("o1.hi").as("v"), col("o2.hi").as("w"))
+    // rank(v) < rank(w), so the closing edge — if present — is oriented v→w
+    outWedges.join(oriented.select(col("lo").as("v"), col("hi").as("w")), Seq("v", "w"))
+  }
+
+  /** The common-neighbour wedges of an adjacency relation (src, dst, …):
+    * one row (src, concept_a, concept_b, …) per centre src and pair
+    * concept_a < concept_b of its neighbours, carrying the centre row's
+    * other columns. Σ C(deg, 2) rows, so callers cap the centres' degree
+    * first. */
+  private[kg] def wedges(adj: DataFrame): DataFrame =
+    adj
+      .withColumnRenamed("dst", "concept_a")
+      .join(adj.select(col("src"), col("dst").as("concept_b")), Seq("src"))
+      .where(col("concept_a") < col("concept_b"))
 
   /** Common-neighbour link prediction: the top-k NON-adjacent concept
     * pairs ranked by how many neighbours they share — "which concepts
@@ -133,74 +143,8 @@ object Triangles {
     * candidate pairs, which the cap keeps near-uniform. Deterministic
     * (score desc, a, b) ordering so the top-k boundary is
     * oracle-reproducible. */
-  def linkPrediction(edges: DataFrame, maxDeg: Long = 10000L, k: Int = 20): DataFrame = {
-    val e = edges
-      .select(
-        least(col("concept_a"), col("concept_b")).as("a"),
-        greatest(col("concept_a"), col("concept_b")).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct()
-    val und = e.select(col("a").as("u"), col("b").as("v"))
-      .union(e.select(col("b").as("u"), col("a").as("v")))
-    val deg = und.groupBy("u").agg(count(lit(1)).as("deg"))
-    val small = und.join(deg.where(col("deg") <= maxDeg).select("u"), Seq("u"))
-    val x = small.as("x")
-    val y = small.as("y")
-    val cn = x
-      .join(y, col("x.u") === col("y.u") && col("x.v") < col("y.v"))
-      .groupBy(col("x.v").as("a"), col("y.v").as("b"))
-      .agg(count(lit(1)).as("n_common"))
-    cn.join(e, Seq("a", "b"), "left_anti")
-      .orderBy(col("n_common").desc, col("a"), col("b"))
-      .limit(k)
-      .select(col("a").as("concept_a"), col("b").as("concept_b"), col("n_common"))
-  }
-
-  /** One row per (triangle, member edge) over CANONICAL edges (a < b, one
-    * row per pair — the caller guarantees this; [[KTruss]] does): each
-    * triangle is enumerated exactly once at its lowest-rank corner via the
-    * same degree-ordered orientation as [[triangleCounts]] (the O(m^1.5)
-    * wedge bound carries over), then credited to its three edges in
-    * canonical (id-ordered) form. Distinct from triangleCounts' corner
-    * explode: support is an EDGE-grain statistic, so the emit key is the
-    * pair, not the node. */
-  def triangleEdges(canonEdges: DataFrame): DataFrame = {
-    val e = canonEdges
-    val deg = e
-      .select(col("a").as("node"))
-      .union(e.select(col("b").as("node")))
-      .groupBy("node")
-      .agg(count(lit(1)).as("deg"))
-    val withDeg = e
-      .join(deg.select(col("node").as("a"), col("deg").as("deg_a")), Seq("a"))
-      .join(deg.select(col("node").as("b"), col("deg").as("deg_b")), Seq("b"))
-    val aLower = struct(col("deg_a"), col("a")) < struct(col("deg_b"), col("b"))
-    val oriented = withDeg
-      .select(
-        when(aLower, col("a")).otherwise(col("b")).as("lo"),
-        when(aLower, col("b")).otherwise(col("a")).as("hi"),
-        when(aLower, col("deg_b")).otherwise(col("deg_a")).as("hi_deg"))
-      .localCheckpoint() // feeds the wedge self-join AND the closing join
-    val o1 = oriented.as("o1")
-    val o2 = oriented.as("o2")
-    val wedges = o1
-      .join(
-        o2,
-        col("o1.lo") === col("o2.lo") &&
-          struct(col("o1.hi_deg"), col("o1.hi")) < struct(col("o2.hi_deg"), col("o2.hi")))
-      .select(col("o1.lo").as("u"), col("o1.hi").as("v"), col("o2.hi").as("w"))
-    val tri = wedges.join(
-      oriented.select(col("lo").as("v"), col("hi").as("w")),
-      Seq("v", "w"))
-    tri.select(
-      explode(
-        array(
-          struct(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b")),
-          struct(least(col("u"), col("w")).as("a"), greatest(col("u"), col("w")).as("b")),
-          struct(least(col("v"), col("w")).as("a"), greatest(col("v"), col("w")).as("b"))))
-        .as("edge"))
-      .select(col("edge.a").as("a"), col("edge.b").as("b"))
-  }
+  def linkPrediction(edges: DataFrame, maxDeg: Long = 10000L, k: Int = 20): DataFrame =
+    predictLinks(edges, maxDeg, k, "n_common")((w, _) => commonCounts(w))
 
   /** Fixed-point scale of [[linkPredictionRA]] scores (ppm). */
   val RaScale: Long = 1000000L
@@ -225,29 +169,10 @@ object Triangles {
     * generation (with RA this loses almost nothing BY CONSTRUCTION — an
     * excluded hub's per-wedge contribution is ≤ 10^6/maxDeg); deg(z) is
     * carried on the wedge-centre row, so the scoring needs no extra join. */
-  def linkPredictionRA(edges: DataFrame, maxDeg: Long = 10000L, k: Int = 20): DataFrame = {
-    val e = edges
-      .select(
-        least(col("concept_a"), col("concept_b")).as("a"),
-        greatest(col("concept_a"), col("concept_b")).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct()
-    val und = e.select(col("a").as("u"), col("b").as("v"))
-      .union(e.select(col("b").as("u"), col("a").as("v")))
-    val deg = und.groupBy("u").agg(count(lit(1)).as("deg"))
-    val small = und.join(deg.where(col("deg") <= maxDeg), Seq("u"))
-    val x = small.select(col("u"), col("v").as("xv"), col("deg"))
-    val y = small.select(col("u"), col("v").as("yv"))
-    val ra = x
-      .join(y, Seq("u"))
-      .where(col("xv") < col("yv"))
-      .groupBy(col("xv").as("a"), col("yv").as("b"))
-      .agg(sum(expr(s"${RaScale}L div deg")).as("ra_q"))
-    ra.join(e, Seq("a", "b"), "left_anti")
-      .orderBy(col("ra_q").desc, col("a"), col("b"))
-      .limit(k)
-      .select(col("a").as("concept_a"), col("b").as("concept_b"), col("ra_q"))
-  }
+  def linkPredictionRA(edges: DataFrame, maxDeg: Long = 10000L, k: Int = 20): DataFrame =
+    predictLinks(edges, maxDeg, k, "ra_q") { (w, _) =>
+      w.groupBy("concept_a", "concept_b").agg(sum(expr(s"${RaScale}L div deg")).as("ra_q"))
+    }
 
   /** Neighborhood-Jaccard link prediction: score a non-adjacent pair by
     * |N(a) ∩ N(b)| / |N(a) ∪ N(b)| — the normalized third lens next to
@@ -263,32 +188,36 @@ object Triangles {
     * Same wedge economics as the siblings: pair generation is Σ C(deg, 2)
     * over deg-capped middles (the stopword argument), the two degree
     * pins are dictionary-grain joins. */
-  def linkPredictionJaccard(edges: DataFrame, maxDeg: Long = 10000L, k: Int = 20): DataFrame = {
-    val e = edges
-      .select(
-        least(col("concept_a"), col("concept_b")).as("a"),
-        greatest(col("concept_a"), col("concept_b")).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct()
-    val und = e.select(col("a").as("u"), col("b").as("v"))
-      .union(e.select(col("b").as("u"), col("a").as("v")))
-    val deg = und.groupBy("u").agg(count(lit(1)).as("deg"))
-    val small = und.join(deg.where(col("deg") <= maxDeg).select("u"), Seq("u"))
-    val x = small.as("x")
-    val y = small.as("y")
-    val cn = x
-      .join(y, col("x.u") === col("y.u") && col("x.v") < col("y.v"))
-      .groupBy(col("x.v").as("a"), col("y.v").as("b"))
-      .agg(count(lit(1)).as("n_common"))
-    cn.join(e, Seq("a", "b"), "left_anti")
-      .join(deg.select(col("u").as("a"), col("deg").as("deg_a")), Seq("a"))
-      .join(deg.select(col("u").as("b"), col("deg").as("deg_b")), Seq("b"))
-      .select(
-        col("a"),
-        col("b"),
-        expr("(1000000 * n_common) div (deg_a + deg_b - n_common)").as("jac_ppm"))
-      .orderBy(col("jac_ppm").desc, col("a"), col("b"))
+  def linkPredictionJaccard(edges: DataFrame, maxDeg: Long = 10000L, k: Int = 20): DataFrame =
+    predictLinks(edges, maxDeg, k, "jac_ppm") { (w, deg) =>
+      commonCounts(w)
+        .join(deg.select(col("node").as("concept_a"), col("deg").as("deg_a")), Seq("concept_a"))
+        .join(deg.select(col("node").as("concept_b"), col("deg").as("deg_b")), Seq("concept_b"))
+        .select(
+          col("concept_a"),
+          col("concept_b"),
+          expr("(1000000 * n_common) div (deg_a + deg_b - n_common)").as("jac_ppm"))
+    }
+
+  /** The top k non-adjacent pairs of the graph of `edges` by the column
+    * `score` of `scored(wedges, deg)`, ties to the lower pair. `wedges` are
+    * (src, concept_a, concept_b, deg) through every centre src of degree
+    * deg ≤ `maxDeg`; `deg` is the graph's (node, deg). */
+  private def predictLinks(edges: DataFrame, maxDeg: Long, k: Int, score: String)(
+      scored: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val pairs = canonicalPairs(edges)
+    val deg = degrees(pairs)
+    val capped = bothDirections(pairs)
+      .join(deg.where(col("deg") <= maxDeg).withColumnRenamed("node", "src"), Seq("src"))
+    scored(wedges(capped), deg)
+      .join(pairs, Seq("concept_a", "concept_b"), "left_anti")
+      .orderBy(col(score).desc, col("concept_a"), col("concept_b"))
       .limit(k)
-      .select(col("a").as("concept_a"), col("b").as("concept_b"), col("jac_ppm"))
+      .select("concept_a", "concept_b", score)
   }
+
+  /** (concept_a, concept_b, n_common) of wedges: each pair's number of
+    * common neighbours. */
+  private def commonCounts(wedges: DataFrame): DataFrame =
+    wedges.groupBy("concept_a", "concept_b").agg(count(lit(1)).as("n_common"))
 }

@@ -57,9 +57,8 @@ object Walks {
     val nP =
       if (numParts > 0) numParts
       else edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val sym = edges
-      .select(col("concept_a").as("src"), col("concept_b").as("dst"))
-      .union(edges.select(col("concept_b").as("src"), col("concept_a").as("dst")))
+    val sym = GraphStats
+      .bothDirections(edges)
       .repartition(nP, col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     sym.count()
@@ -131,9 +130,8 @@ object Walks {
     // the SAME cumulative sum under the ordered window's RANGE frame,
     // leaving a [cum−2w, cum−w) gap no row owns — a coin landing there
     // would silently kill the walk
-    val sym = edges
-      .select(col("concept_a").as("src"), col("concept_b").as("dst"))
-      .union(edges.select(col("concept_b").as("src"), col("concept_a").as("dst")))
+    val sym = GraphStats
+      .bothDirections(edges)
       .where(col("src") =!= col("dst"))
       .distinct()
       .repartition(nP, col("src"))

@@ -108,6 +108,15 @@ class AggregationsSpec extends AnyFunSuite {
     }
   }
 
+  test("G10 train balancing refuses a caller column named is_positive, in any case") {
+    val passages = (1 to 10).map(i => (i.toLong, "a scan")).toDF("doc_id", "text")
+    for (name <- Seq("is_positive", "IS_POSITIVE")) {
+      val e = intercept[IllegalArgumentException](
+        Sampling.limitAndBalance(passages.withColumn(name, lit("caller")), $"text".contains("scan"), 4L, "doc_id"))
+      assert(e.getMessage.contains("is_positive"), name)
+    }
+  }
+
   test("G1 alignment: same turn COUNT but different turn SET is a violation") {
     val cov = Seq(
       ("clf1", "c1", 0), ("clf1", "c1", 1), ("clf1", "c1", 2),

@@ -116,6 +116,15 @@ class FiltersSpec extends AnyFunSuite {
       ("source", "src0") -> 5L, ("source", "src1") -> 2L))
   }
 
+  test("G8 equity strata refuse a caller column named like one of their outputs, in any case") {
+    val rows = Seq(("en", "src0", 1), ("de", "src0", 4)).toDF("lang", "source", "v")
+    for (name <- Seq("stratum", "Stratum_Value")) {
+      val e = intercept[IllegalArgumentException](
+        Ensemble.equityStrata(rows.withColumn(name, lit("mine")), Seq("lang"))(_.agg(sum($"v").as("s"))))
+      assert(e.getMessage.contains(name.toLowerCase), name)
+    }
+  }
+
   test("C2 embedding classifier emits whole-text spans with probability") {
     val passages = Seq(
       ("p1", 100, Array(1.0f, 0.0f)),

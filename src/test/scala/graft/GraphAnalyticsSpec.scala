@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.kg.PageRank
@@ -152,33 +153,74 @@ class GraphAnalyticsSpec extends AnyFunSuite {
     val hub = (1 until n).map(i => (0, i)) // node 0 adjacent to EVERYONE
     val tedges = (base ++ hub).map(p => (f"N${math.min(p._1, p._2)}%02d", f"N${math.max(p._1, p._2)}%02d")).distinct
     val df = tedges.toDF("concept_a", "concept_b").repartition(5)
+    val und = (tedges ++ tedges.map(_.swap)).distinct
+    val adj = und.groupBy(_._1).map { case (u, vs) => u -> vs.map(_._2).toSet }
 
-    def reference(maxDeg: Int): Seq[(String, String, Long)] = {
-      val und = (tedges ++ tedges.map(_.swap)).distinct
-      val adj = und.groupBy(_._1).map { case (u, vs) => u -> vs.map(_._2).toSet }
+    // common-neighbour counts of the non-adjacent pairs, through centres of
+    // degree <= maxDeg
+    def common(maxDeg: Int): Map[(String, String), Long] = {
       val eligible = adj.filter(_._2.size <= maxDeg).keySet
       val edgeSet = tedges.toSet
       val counts = scala.collection.mutable.Map.empty[(String, String), Long]
       for (u <- eligible; v <- adj(u); w <- adj(u); if v < w)
         counts((v, w)) = counts.getOrElse((v, w), 0L) + 1L
-      counts.toSeq
-        .collect { case ((a, b), c) if !edgeSet((a, b)) => (a, b, c) }
-        .sortBy { case (a, b, c) => (-c, a, b) }
-        .take(8)
+      counts.toMap.filter { case (pair, _) => !edgeSet(pair) }
     }
+    def top(scores: Map[(String, String), Long]): Seq[(String, String, Long)] =
+      scores.toSeq
+        .map { case ((a, b), s) => (a, b, s) }
+        .sortBy { case (a, b, s) => (-s, a, b) }
+        .take(8)
+    // Jaccard over the whole graph's degrees: the cap only limits the centres
+    def jaccard(maxDeg: Int): Map[(String, String), Long] =
+      common(maxDeg).map { case ((a, b), c) => (a, b) -> 1000000L * c / (adj(a).size + adj(b).size - c) }
 
-    def got(maxDeg: Long): Seq[(String, String, Long)] =
-      graft.kg.Triangles
-        .linkPrediction(df, maxDeg = maxDeg, k = 8)
+    def got(scorer: (DataFrame, Long) => DataFrame)(maxDeg: Long): Seq[(String, String, Long)] =
+      scorer(df, maxDeg)
         .collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
         .toSeq
+    val cn = got((e, cap) => graft.kg.Triangles.linkPrediction(e, maxDeg = cap, k = 8)) _
+    val jac = got((e, cap) => graft.kg.Triangles.linkPredictionJaccard(e, maxDeg = cap, k = 8)) _
 
-    assert(got(10000L) === reference(10000))
+    assert(cn(10000L) === top(common(10000)))
     // capping at 28 excludes only the hub (degree 29); scores must drop
     // the hub's wedge contributions but hub PAIRS may still appear
-    assert(got(28L) === reference(28))
-    assert(got(10000L) !== got(28L), "hub exclusion must change the ranking on this graph")
+    assert(cn(28L) === top(common(28)))
+    assert(cn(10000L) !== cn(28L), "hub exclusion must change the ranking on this graph")
+    assert(jac(10000L) === top(jaccard(10000)))
+    assert(jac(28L) === top(jaccard(28)))
+    assert(jac(10000L) !== jac(28L), "hub exclusion must change the Jaccard ranking on this graph")
+  }
+
+  test("every reader of the canonical pairs sees a dirty edge list as its clean form") {
+    val rnd = new scala.util.Random(5)
+    val n = 24
+    val base = (0 until 70).map(_ => (rnd.nextInt(n), rnd.nextInt(n))).filter(p => p._1 != p._2)
+    val hub = (1 until n by 2).map(i => (0, i))
+    val clean = (base ++ hub).map(p => (f"N${math.min(p._1, p._2)}%02d", f"N${math.max(p._1, p._2)}%02d")).distinct
+    // every pair also reversed, every third pair listed twice more, and
+    // self-loops on a listed node and on one listed nowhere else
+    val again = clean.zipWithIndex.collect { case (p, i) if i % 3 == 0 => p }
+    val dirty = clean ++ clean.map(_.swap) ++ again ++ again.map(_.swap) ++ Seq(("N05", "N05"), ("Z", "Z"))
+    // the caps of 8 sit below the hub's degree, so a degree counted over the
+    // raw rows would move them
+    val readers: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "triangleCounts" -> (e => graft.kg.Triangles.triangleCounts(e)),
+      "clusteringCoefficients" -> (e => graft.kg.Triangles.clusteringCoefficients(e)),
+      "linkPrediction" -> (e => graft.kg.Triangles.linkPrediction(e, maxDeg = 8, k = 10)),
+      "linkPredictionRA" -> (e => graft.kg.Triangles.linkPredictionRA(e, maxDeg = 8, k = 10)),
+      "linkPredictionJaccard" -> (e => graft.kg.Triangles.linkPredictionJaccard(e, maxDeg = 8, k = 10)),
+      "kCore" -> (e => graft.kg.KCore.kCore(e, k = 3)),
+      "kTruss" -> (e => graft.kg.KTruss.kTruss(e, k = 3)),
+      "assortativity" -> (e => graft.kg.GraphStats.assortativity(e)),
+      "rectangleCounts" -> (e => graft.kg.GraphStats.rectangleCounts(e, maxDeg = 8)))
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    readers.foreach { case (name, read) =>
+      val want = rows(read(clean.toDF("concept_a", "concept_b")))
+      assert(want.nonEmpty, name)
+      assert(rows(read(dirty.toDF("concept_a", "concept_b").repartition(3))) === want, name)
+    }
   }
 
   test("RA link prediction equals brute force; hub evidence is discounted, not just capped") {
@@ -1116,7 +1158,6 @@ class GraphAnalyticsSpec extends AnyFunSuite {
   }
 
   test("fixpoint loops leave the same cached rounds behind however many rounds they run") {
-    import org.apache.spark.sql.DataFrame
     // a 4-clique (both directions) with a one-way tail of n links: k-core
     // and SCC's trim peel the tail one link a round
     val clique = for (a <- 1 to 4; b <- 1 to 4 if a != b) yield (s"Q$a", s"Q$b")

@@ -9,6 +9,7 @@ shipped library — python/duckdb are driver-side tools only.
 import json
 import subprocess
 import sys
+import time
 from pathlib import Path
 
 import duckdb
@@ -60,6 +61,7 @@ def main():
 
     oracle = json.loads(Path(f"{OUT_DIR}/oracle_sql.json").read_text())
     failures = []
+    walls = {}  # name -> seconds to read its parquet, run its oracle SQL and normalize both
     for name, sql in sorted(oracle.items()):
         if ONLY and name not in ONLY:
             continue
@@ -67,16 +69,19 @@ def main():
         if not pq.exists():
             failures.append((name, "spark output missing"))
             continue
+        t0 = time.monotonic()
         try:
             got = con.execute(f"SELECT * FROM read_parquet('{pq}/*.parquet')").fetchall()
             got_cols = [d[0] for d in con.description]
             want = con.execute(sql).fetchall()
             want_cols = [d[0] for d in con.description]
         except Exception as e:
+            walls[name] = time.monotonic() - t0
             failures.append((name, f"error: {e}"))
             continue
         g, gc = normalize(got, got_cols)
         w, wc = normalize(want, want_cols)
+        walls[name] = time.monotonic() - t0
         if gc != wc:
             failures.append((name, f"schema mismatch: spark={gc} oracle={wc}"))
         elif g != w:
@@ -85,9 +90,13 @@ def main():
             failures.append((name, f"value mismatch rows spark={len(g)} oracle={len(w)} "
                                    f"spark-only={diff_g} oracle-only={diff_w}"))
         else:
-            print(f"OK   {name}  ({len(g)} rows)")
+            print(f"OK   {name}  ({len(g)} rows, {walls[name]:.2f}s)")
     for name, msg in failures:
-        print(f"FAIL {name}: {msg}")
+        wall = f" ({walls[name]:.2f}s)" if name in walls else ""
+        print(f"FAIL {name}{wall}: {msg}")
+    print("\nslowest compares:")
+    for name, wall in sorted(walls.items(), key=lambda kv: -kv[1])[:5]:
+        print(f"  {wall:8.2f}s  {name}")
     n = len(ONLY & set(oracle)) if ONLY else len(oracle)
     print(f"\n{n - len(failures)}/{n} oracle queries match")
     sys.exit(1 if failures else 0)
